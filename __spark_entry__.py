@@ -203,10 +203,10 @@ def q_wcc_components(spark, sf_dir):
 
 
 def q_wcc_two_phase(spark, sf_dir):
-    from hoover_spark.operators.wcc import wcc_two_phase
-
+    """WCC seeded by the per-partition union-find contraction (phase
+    one) before the hash-min rounds (phase two)."""
     g = Graph(_customer_edges(spark, sf_dir))
-    return wcc_two_phase(g, spark=spark).select("vid", "label")
+    return wcc(g, spark=spark, pre_contract=True).select("vid", "label")
 
 
 def q_wcc_sizes(spark, sf_dir):

@@ -146,12 +146,8 @@ def main() -> None:
         state["graph"] = g
 
     def q_pagerank():
-        # unroll=1 deliberately: the r5 A/B at this exact scale
-        # (3 interleaved reps each) measured unroll=2 at 18.9 s and
-        # unroll=3 at 25.3 s vs 16.0/17.3 s for unroll=1 — the interior
-        # steps' un-materialized state diamond (messages + rank join)
-        # recomputes under the chunk plan and costs more than the
-        # saved per-iteration barriers on local[32]. See BENCH.md r5.
+        # one Spark job per iteration; chaining several iterations per
+        # job measured slower at this scale (BENCH.md r5)
         loop = IterationLoop(spark, kernel="pagerank", max_iterations=200)
         pagerank(state["graph"], spark=spark, tol=1e-6, loop=loop).count()
         extras["pagerank_iters"] = len(loop.metrics)

@@ -45,10 +45,6 @@ def _as_double(vec_col):
     return F.transform(F.col(vec_col), lambda x: x.cast("double"))
 
 
-def _round_vec(col, dp: int = 6):
-    return F.transform(col, lambda x: F.round(x, dp))
-
-
 def kmeans_centroids(
     emb: DataFrame,
     k: int = 4,

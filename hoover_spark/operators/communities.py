@@ -291,7 +291,10 @@ def louvain_move(
             cand.join(lab, on="vid")
             .join(deg, on="vid", how="left")
             .withColumn("degree", F.coalesce("degree", F.lit(0)))
-            .join(dc, on="c")
+            # left: a self-loop-only vertex's own community has no
+            # degree mass (no dc row) but must keep its label
+            .join(dc, on="c", how="left")
+            .withColumn("dc", F.coalesce("dc", F.lit(0)))
             .crossJoin(F.broadcast(m1))
             .select(
                 "vid",

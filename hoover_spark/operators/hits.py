@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
-from hoover_spark.plans.iteration import IterationLoop, StopWatch
+from hoover_spark.plans.iteration import IterationLoop
 
 
 def _l2_normalized(scores: DataFrame, col: str) -> DataFrame:
@@ -78,9 +78,10 @@ def hits(
     verts = graph.vertices().select("vid")
     hubs = loop.hold(verts.select("vid", F.lit(1.0).alias("hub")))
 
-    watch = StopWatch()
     auths = verts.select("vid", F.lit(1.0).alias("auth"))
-    for it in range(1, n_iterations + 1):
+
+    def step(hubs, _it, _prev):
+        nonlocal auths
         # authority half-step: gather hub mass along the edge direction
         a_msgs = edges.join(
             hubs.select(F.col("vid").alias("src"), "hub"), on="src"
@@ -99,24 +100,16 @@ def hits(
         stepped = verts.join(h_sums, on="vid", how="left").select(
             "vid", F.coalesce("hub", F.lit(0.0)).alias("hub")
         )
-        stepped = _l2_normalized(stepped, "hub")
-
-        # one action per iteration: checkpoint hubs, stats ride it
-        new_hubs, stats = loop.hold_observed(
-            stepped,
+        return _l2_normalized(stepped, "hub"), [
             F.sum((F.col("hub") > 0.0).cast("long")).alias("active"),
             F.sum(F.col("hub") * F.col("hub")).alias("norm_sq"),
-        )
-        loop.log(
-            iteration=it,
-            rows_shuffled=0,
-            delta_norm=float(stats["norm_sq"] or 0.0),
-            frontier_size=int(stats["active"] or 0),
-            wall_ms=watch.lap_ms(),
-        )
-        hubs = new_hubs
+        ]
 
-    # auths above is the lazily-derived final authority vector; join the
-    # two small per-vertex sides for the result.
+    def observe(stats, _prev):
+        return 0, float(stats["norm_sq"] or 0.0), int(stats["active"] or 0), False
+
+    hubs, it, _ = loop.run(hubs, step, observe, rounds=n_iterations)
+    # auths is the lazily-derived final authority vector; join the two
+    # small per-vertex sides for the result.
     out = hubs.join(auths, on="vid", how="inner").select("vid", "hub", "auth")
-    return loop.finish(out, n_iterations)
+    return loop.finish(out, it)

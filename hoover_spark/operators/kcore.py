@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
-from hoover_spark.plans.iteration import IterationLoop, StopWatch
+from hoover_spark.plans.iteration import IterationLoop, until_stable
 
 
 def kcore(
@@ -47,11 +47,7 @@ def kcore(
     sym = graph.sym_edges().select("src", "dst")
     alive = loop.hold(graph.vertices().select("vid"))
 
-    watch = StopWatch()
-    prev_n: int | None = None
-    rounds = 0
-    for it in range(1, max_rounds + 1):
-        rounds = it
+    def step(alive, _it, _prev):
         deg = (
             sym.join(alive.select(F.col("vid").alias("src")), on="src")
             .join(alive.select(F.col("vid").alias("dst")), on="dst")
@@ -61,23 +57,14 @@ def kcore(
         stepped = deg.filter(F.col("core_degree") >= k).select(
             F.col("src").alias("vid"), "core_degree"
         )
-        new_alive, stats = loop.hold_observed(
-            stepped,
+        return stepped, [
             F.count(F.lit(1)).alias("n_alive"),
             F.sum("core_degree").alias("deg_sum"),
-        )
-        n = int(stats["n_alive"] or 0)
-        loop.log(
-            iteration=it,
-            rows_shuffled=int(stats["deg_sum"] or 0),
-            delta_norm=float((prev_n if prev_n is not None else n) - n),
-            frontier_size=n,
-            wall_ms=watch.lap_ms(),
-        )
-        alive = new_alive
-        if n == prev_n or n == 0:
-            break
-        prev_n = n
+        ]
 
+    alive, rounds, _ = loop.run(
+        alive, step, until_stable("n_alive", "deg_sum"), rounds=max_rounds
+    )
     loop.kernel_state["peel_rounds"] = rounds
     return loop.finish(alive.select("vid", "core_degree"), rounds)
+

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
-from hoover_spark.plans.iteration import IterationLoop, StopWatch
+from hoover_spark.plans.iteration import IterationLoop, until_stable
 
 
 def _edge_support(alive: DataFrame) -> DataFrame:
@@ -103,30 +103,15 @@ def ktruss(
 
     alive = loop.hold(graph.canonical())
 
-    watch = StopWatch()
-    prev_n: int | None = None
-    rounds = 0
-    for it in range(1, max_rounds + 1):
-        rounds = it
-        sup = _edge_support(alive)
-        stepped = sup.filter(F.col("support") >= k - 2)
-        new_alive, stats = loop.hold_observed(
-            stepped,
+    def step(alive, _it, _prev):
+        stepped = _edge_support(alive).filter(F.col("support") >= k - 2)
+        return stepped, [
             F.count(F.lit(1)).alias("n_alive"),
             F.sum("support").alias("sup_sum"),
-        )
-        n = int(stats["n_alive"] or 0)
-        loop.log(
-            iteration=it,
-            rows_shuffled=int(stats["sup_sum"] or 0),
-            delta_norm=float((prev_n if prev_n is not None else n) - n),
-            frontier_size=n,
-            wall_ms=watch.lap_ms(),
-        )
-        alive = new_alive
-        if n == prev_n or n == 0:
-            break
-        prev_n = n
+        ]
 
+    alive, rounds, _ = loop.run(
+        alive, step, until_stable("n_alive", "sup_sum"), rounds=max_rounds
+    )
     loop.kernel_state["peel_rounds"] = rounds
     return loop.finish(alive.select("src", "dst", "support"), rounds)

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hoover_spark.operators.graph import Graph
 from hoover_spark.operators.wcc import wcc
-from hoover_spark.plans.iteration import IterationLoop, StopWatch
+from hoover_spark.plans.iteration import IterationLoop
 
 
 def min_label_propagation(
@@ -52,8 +52,8 @@ def mode_label_propagation(
         graph.vertices().select(F.col("vid"), F.col("vid").alias("label"))
     )
 
-    watch = StopWatch()
-    for it in range(1, n_iterations + 1):
+    def step(labels, _it, _prev):
+        labels = labels.select("vid", "label")
         msgs = edges.join(
             labels.select(F.col("vid").alias("src"), "label"), on="src"
         ).select(F.col("dst").alias("vid"), "label")
@@ -71,23 +71,14 @@ def mode_label_propagation(
             F.coalesce("mode_label", "label").alias("label"),
             F.coalesce("msg_cnt", F.lit(0)).alias("msg_cnt"),
         )
-        # materialize + stats in one action (Observation on the eager
-        # localCheckpoint) — no separate per-iteration stats job
-        new_labels, stats = loop.hold_observed(
-            stepped,
+        return stepped, [
             F.sum((F.col("label") != F.col("prev_label")).cast("long")).alias("changed"),
             F.sum("msg_cnt").alias("shuffled"),
-        )
-        loop.log(
-            iteration=it,
-            rows_shuffled=int(stats["shuffled"] or 0),
-            delta_norm=float(stats["changed"] or 0),
-            frontier_size=int(stats["changed"] or 0),
-            wall_ms=watch.lap_ms(),
-        )
-        labels = new_labels.select("vid", "label")
-        labels = loop.save_state(labels, it)
-        if int(stats["changed"] or 0) == 0:
-            break
+        ]
 
-    return loop.finish(labels.select("vid", "label"), n_iterations)
+    def observe(stats, _prev):
+        changed = int(stats["changed"] or 0)
+        return int(stats["shuffled"] or 0), float(changed), changed, changed == 0
+
+    labels, it, _ = loop.run(labels, step, observe, rounds=n_iterations)
+    return loop.finish(labels.select("vid", "label"), it)

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
-from hoover_spark.plans.iteration import IterationLoop, StopWatch
+from hoover_spark.plans.iteration import IterationLoop, until_zero
 
 MATCH_P = 1_000_000_007
 _M_A = 40503
@@ -86,10 +86,7 @@ def luby_matching(
         )
     )
 
-    watch = StopWatch()
-    rounds = 0
-    for it in range(1, max_rounds + 1):
-        rounds = it
+    def step(state, it, _prev):
         act = state.where(F.col("status") == 0).select("src", "dst", "prio")
         inc = act.select(F.col("src").alias("vid"), _key().alias("k")).unionAll(
             act.select(F.col("dst").alias("vid"), _key().alias("k"))
@@ -140,22 +137,14 @@ def luby_matching(
                 .alias("match_round"),
             )
         )
-        new_state, stats = loop.hold_observed(
-            stepped,
+        return stepped, [
             F.sum((F.col("status") == 0).cast("long")).alias("n_active"),
             F.sum((F.col("status") == 1).cast("long")).alias("n_matched"),
-        )
-        n_active = int(stats["n_active"] or 0)
-        loop.log(
-            iteration=it,
-            rows_shuffled=n_active,
-            delta_norm=float(n_active),
-            frontier_size=n_active,
-            wall_ms=watch.lap_ms(),
-        )
-        state = new_state
-        if n_active == 0:
-            break
+        ]
+
+    state, rounds, _ = loop.run(
+        state, step, until_zero("n_active"), rounds=max_rounds
+    )
 
     loop.kernel_state["matching_rounds"] = rounds
     return loop.finish(

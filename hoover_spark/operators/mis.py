@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
-from hoover_spark.plans.iteration import IterationLoop, StopWatch
+from hoover_spark.plans.iteration import IterationLoop, until_zero
 
 MIS_P = 1_000_000_007
 _MIS_A = 40503
@@ -84,10 +84,7 @@ def luby_mis(
         )
     )
 
-    watch = StopWatch()
-    rounds = 0
-    for it in range(1, max_rounds + 1):
-        rounds = it
+    def step(state, it, _prev):
         act = state.where(F.col("status") == 0).select("vid", "prio")
         ea = sym.join(
             act.select(F.col("vid").alias("src"), F.col("prio").alias("p_src")),
@@ -137,23 +134,14 @@ def luby_mis(
                 .alias("mis_round"),
             )
         )
-        new_state, stats = loop.hold_observed(
-            stepped,
+        return stepped, [
             F.sum((F.col("status") == 0).cast("long")).alias("n_active"),
             F.sum((F.col("status") == 1).cast("long")).alias("n_mis"),
-        )
-        n_active = int(stats["n_active"] or 0)
-        loop.log(
-            iteration=it,
-            rows_shuffled=n_active,
-            delta_norm=float(n_active),
-            frontier_size=n_active,
-            wall_ms=watch.lap_ms(),
-        )
-        state = new_state
-        if n_active == 0:
-            break
+        ]
 
+    state, rounds, _ = loop.run(
+        state, step, until_zero("n_active"), rounds=max_rounds
+    )
     loop.kernel_state["mis_rounds"] = rounds
     return loop.finish(
         state.where(F.col("status") == 1).select("vid", "mis_round"), rounds
@@ -196,10 +184,7 @@ def greedy_coloring(
         )
     )
 
-    watch = StopWatch()
-    rounds = 0
-    for it in range(1, max_rounds + 1):
-        rounds = it
+    def step(state, it, _prev):
         act = state.where(F.col("color") == 0).select("vid", "prio")
         min_nbr = (
             sym.join(
@@ -234,22 +219,13 @@ def greedy_coloring(
             .otherwise(F.lit(0).cast("long"))
             .alias("color"),
         )
-        new_state, stats = loop.hold_observed(
-            stepped,
+        return stepped, [
             F.sum((F.col("color") == 0).cast("long")).alias("n_active"),
             F.max("color").alias("max_color"),
-        )
-        n_active = int(stats["n_active"] or 0)
-        loop.log(
-            iteration=it,
-            rows_shuffled=n_active,
-            delta_norm=float(n_active),
-            frontier_size=n_active,
-            wall_ms=watch.lap_ms(),
-        )
-        state = new_state
-        if n_active == 0:
-            break
+        ]
 
+    state, rounds, _ = loop.run(
+        state, step, until_zero("n_active"), rounds=max_rounds
+    )
     loop.kernel_state["coloring_rounds"] = rounds
     return loop.finish(state.select("vid", "color"), rounds)

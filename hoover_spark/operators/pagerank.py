@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hoover_spark.functions.skew import with_salt
 from hoover_spark.operators.graph import Graph
-from hoover_spark.plans.iteration import IterationLoop, StopWatch
+from hoover_spark.plans.iteration import IterationLoop
 
 
 def pagerank(
@@ -55,7 +55,6 @@ def pagerank(
     initial_ranks: DataFrame | None = None,
     n_vertices: int | None = None,
     initial_rank_sum: float | None = None,
-    unroll: int = 1,
 ) -> DataFrame:
     """Return ``(vid: long, rank: double)``; ranks sum to 1.
 
@@ -80,43 +79,6 @@ def pagerank(
     ``loop.kernel_state["rank_sum"]`` (measured by the per-iteration
     Observation — no extra job); the streaming path feeds it back as
     the next batch's ``initial_rank_sum`` numerator.
-
-    ``unroll > 1`` executes that many iterations per Spark job
-    (Pregel-style checkpoint interval): the u steps chain lazily and
-    ONE chunk-end localCheckpoint materializes them, so u-1 action
-    round-trips and u-1 O(|V|) state materializations disappear per
-    chunk. Two things make this sound:
-
-    - the dangling mass for interior steps (a scalar the NEXT step's
-      rank update needs, previously a Python float off the previous
-      job's Observation) is computed IN-PLAN: dangling vertices emit
-      their rank into the SAME contribution shuffle under a NULL dst
-      (a group no real vid joins), and a 1-row aggregate over that
-      reused exchange is broadcast back into the step — no second
-      traversal of the state;
-    - per-iteration lineage metrics (north rule) survive exactly: each
-      step's rank and message count ride the chunk as carried columns
-      (``_r{s}``/``_m{s}``) and the chunk-end Observation computes
-      every step's delta / active frontier / rows shuffled in the same
-      action (per-step wall is the chunk wall amortized).
-
-    Interior-step state is re-derived (not materialized) by the two
-    downstream consumers that need it (the message join and the rank
-    update join) — an inherent diamond of the vertex-centric step.
-    MEASURED VERDICT (r5, sf0.1 repo graph, local[32], 3 interleaved
-    reps each): that recompute costs MORE than the saved barriers —
-    unroll=2 median 18.9 s and unroll=3 median 25.3 s vs 16.0/17.3 s
-    for unroll=1 (see BENCH.md) — so every headline/contract caller
-    uses the default ``unroll=1``, whose plan and floats are exactly
-    the classic one-job-per-iteration loop. The knob is kept (correct
-    by construction: ranks within one float ULP, per-iteration metrics
-    exact, tested in ``test_unroll_parity_and_metrics``) for regimes
-    where the barrier term genuinely dominates the recompute term —
-    e.g. a high-latency driver/scheduler or tiny warm re-convergence
-    states — but it must be adopted by measurement, not assumption.
-    In tol mode convergence is checked at chunk ends, so up to
-    ``unroll - 1`` extra iterations may run past the crossing — they
-    only tighten the answer.
     """
     spark = spark or graph.edges.sparkSession
     loop = loop or IterationLoop(
@@ -163,7 +125,7 @@ def pagerank(
     if resume:
         loaded = loop.load_latest()
         if loaded is not None:
-            ranks, start_iter = loaded
+            ranks, start_iter = loaded[0].select("vid", "rank"), loaded[1]
     if ranks is None:
         if initial_ranks is not None:
             ranks = initial_ranks.select("vid", "rank")
@@ -175,6 +137,10 @@ def pagerank(
         else:
             ranks = verts.select("vid", F.lit(1.0 / n).alias("rank"))
 
+    dangling_mass = F.sum(
+        F.when(F.col("out_deg").isNull(), F.col("rank")).otherwise(F.lit(0.0))
+    ).alias("dangling")
+
     # State carries the static out-degree (null = dangling): kills the
     # per-iteration degree join, and the end-of-iteration Observation
     # computes next iteration's dangling mass inside the checkpoint
@@ -182,135 +148,77 @@ def pagerank(
     # coupled-metric reduction folded the same way,
     # src/hoover.cpp:2819-3180).
     state, init_stats = loop.hold_observed(
-        ranks.join(out_deg, on="vid", how="left"),
-        F.sum(
-            F.when(F.col("out_deg").isNull(), F.col("rank")).otherwise(F.lit(0.0))
-        ).alias("dangling"),
+        ranks.join(out_deg, on="vid", how="left"), dangling_mass
     )
-    dangling = float(init_stats["dangling"] or 0.0)
 
     base = (1.0 - alpha) / n
-    unroll = max(1, int(unroll))
-    it = start_iter
-    watch = StopWatch()
-    while it < loop.max_iterations:
-        steps = min(unroll, loop.max_iterations - it)
 
-        # chunk of `steps` lazily-chained iterations; carried columns
-        # _r0.._r{steps} (per-step ranks) and _m1.._m{steps} (per-step
-        # message counts) feed the chunk-end Observation
-        cur = state.select("vid", "out_deg", F.col("rank").alias("_r0"))
-        for s in range(1, steps + 1):
-            prev_rank = F.col(f"_r{s - 1}")
-            wsrc = cur.where(F.col("out_deg").isNotNull()).select(
-                F.col("vid").alias("src"),
-                (prev_rank / F.col("out_deg")).alias("w"),
+    def step(state, _it, prev):
+        wsrc = state.where(F.col("out_deg").isNotNull()).select(
+            F.col("vid").alias("src"),
+            (F.col("rank") / F.col("out_deg")).alias("w"),
+        )
+        contribs = None
+        for v in edge_views:
+            c = v.join(wsrc, on="src").select("dst", "w")
+            contribs = c if contribs is None else contribs.unionByName(c)
+        if salt_buckets > 0:
+            salted = with_salt(contribs, salt_buckets, cols=["w"])
+            partial = salted.groupBy("dst", "salt").agg(
+                F.sum("w").alias("_w"), F.count(F.lit(1)).alias("_c")
             )
-            contribs = None
-            for v in edge_views:
-                c = v.join(wsrc, on="src").select("dst", "w")
-                contribs = c if contribs is None else contribs.unionByName(c)
-
-            if s == 1:
-                # first step's dangling mass is a known scalar (the
-                # previous chunk's Observation / the init aggregate)
-                dang_per_n = F.lit(dangling / n)
-            else:
-                # interior steps: route the dangling ranks through the
-                # SAME shuffle under a NULL dst — the null group never
-                # equi-joins a vid, and the 1-row aggregate below reads
-                # the already-built (reused) exchange, so the scalar
-                # costs no second pass over the state
-                dang_rows = cur.where(F.col("out_deg").isNull()).select(
-                    F.lit(None).cast("long").alias("dst"),
-                    prev_rank.alias("w"),
-                )
-                contribs = contribs.unionByName(dang_rows)
-
-            if salt_buckets > 0:
-                salted = with_salt(contribs, salt_buckets, cols=["w"])
-                partial = salted.groupBy("dst", "salt").agg(
-                    F.sum("w").alias("_w"), F.count(F.lit(1)).alias("_c")
-                )
-                sums = partial.groupBy("dst").agg(
-                    F.sum("_w").alias("in_sum"), F.sum("_c").alias("msg_cnt")
-                )
-            else:
-                sums = contribs.groupBy("dst").agg(
-                    F.sum("w").alias("in_sum"), F.count(F.lit(1)).alias("msg_cnt")
-                )
-
-            joined = cur.join(
-                sums.withColumnRenamed("dst", "vid"), on="vid", how="left"
+            sums = partial.groupBy("dst").agg(
+                F.sum("_w").alias("in_sum"), F.sum("_c").alias("msg_cnt")
             )
-            if s > 1:
-                dang_df = (
-                    sums.where(F.col("dst").isNull())
-                    .agg(F.coalesce(F.sum("in_sum"), F.lit(0.0)).alias("_D"))
+        else:
+            sums = contribs.groupBy("dst").agg(
+                F.sum("w").alias("in_sum"), F.count(F.lit(1)).alias("msg_cnt")
+            )
+        stepped = state.select(
+            "vid", "out_deg", F.col("rank").alias("_prev")
+        ).join(sums.withColumnRenamed("dst", "vid"), on="vid", how="left").select(
+            "vid",
+            "out_deg",
+            "_prev",
+            (
+                F.lit(base)
+                + F.lit(alpha)
+                * (
+                    F.coalesce("in_sum", F.lit(0.0))
+                    + F.lit(float(prev["dangling"] or 0.0) / n)
                 )
-                joined = joined.crossJoin(F.broadcast(dang_df))
-                dang_per_n = F.col("_D") / F.lit(float(n))
-
-            keep = (
-                ["vid", "out_deg"]
-                + [f"_r{j}" for j in range(s)]
-                + [f"_m{j}" for j in range(1, s)]
-            )
-            cur = joined.select(
-                *keep,
-                (
-                    F.lit(base)
-                    + F.lit(alpha)
-                    * (F.coalesce("in_sum", F.lit(0.0)) + dang_per_n)
-                ).alias(f"_r{s}"),
-                F.coalesce("msg_cnt", F.lit(0)).alias(f"_m{s}"),
-            )
-
-        # materialize + stats in ONE action (Observation riding the
-        # eager localCheckpoint): every step's convergence delta,
-        # active set and messages shuffled, plus the NEXT chunk's
-        # dangling mass — one Spark job per `steps` iterations.
-        obs_exprs = []
-        for s in range(1, steps + 1):
-            d = F.abs(F.col(f"_r{s}") - F.col(f"_r{s - 1}"))
-            obs_exprs += [
-                F.max(d).alias(f"delta_{s}"),
-                F.sum((d > tol).cast("long")).alias(f"active_{s}"),
-                F.sum(f"_m{s}").alias(f"shuffled_{s}"),
-            ]
-        last = f"_r{steps}"
-        obs_exprs += [
-            F.sum(
-                F.when(F.col("out_deg").isNull(), F.col(last)).otherwise(F.lit(0.0))
-            ).alias("next_dangling"),
-            F.sum(last).alias("rank_sum"),
+            ).alias("rank"),
+            F.coalesce("msg_cnt", F.lit(0)).alias("_m"),
+        )
+        # convergence delta, active set, messages shuffled and the NEXT
+        # iteration's dangling mass ride the checkpoint action
+        d = F.abs(F.col("rank") - F.col("_prev"))
+        return stepped, [
+            F.max(d).alias("delta"),
+            F.sum((d > tol).cast("long")).alias("active"),
+            F.sum("_m").alias("shuffled"),
+            dangling_mass,
+            F.sum("rank").alias("rank_sum"),
         ]
-        new_state, stats = loop.hold_observed(cur, *obs_exprs)
 
-        chunk_wall = watch.lap_ms()
-        delta = 0.0
-        for s in range(1, steps + 1):
-            it += 1
-            delta = float(stats[f"delta_{s}"] or 0.0)
-            loop.log(
-                iteration=it,
-                rows_shuffled=int(stats[f"shuffled_{s}"] or 0),
-                delta_norm=delta,
-                frontier_size=int(stats[f"active_{s}"] or 0),
-                wall_ms=chunk_wall / steps,
-            )
-        dangling = float(stats["next_dangling"] or 0.0)
+    def observe(stats, _prev):
         loop.kernel_state["rank_sum"] = float(stats["rank_sum"] or 0.0)
+        delta = float(stats["delta"] or 0.0)
+        return (
+            int(stats["shuffled"] or 0),
+            delta,
+            int(stats["active"] or 0),
+            n_iterations is None and delta < tol,
+        )
 
-        state = new_state.select("vid", "out_deg", F.col(last).alias("rank"))
-        proj = state.select("vid", "rank")
-        saved = loop.save_state(proj, it)
-        if saved is not proj:
-            # state was durably checkpointed; rebuild the carried degree
-            state = saved.join(out_deg, on="vid", how="left")
-        if n_iterations is None and delta < tol:
-            break
-
+    state, it, _ = loop.run(
+        state,
+        step,
+        observe,
+        rounds=loop.max_iterations - start_iter,
+        start=start_iter,
+        stats=init_stats,
+    )
     loop.kernel_state["n_vertices"] = n
     result = loop.finish(state.select("vid", "rank"), it)
     if verts is not None:

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
-from hoover_spark.plans.iteration import IterationLoop, StopWatch
+from hoover_spark.plans.iteration import IterationLoop, until_zero
 
 
 def bfs_hops(
@@ -63,11 +63,12 @@ def bfs_hops(
         .distinct()
         .withColumn("hops", F.lit(0).cast("long"))
     )
-    frontier = dist
 
-    watch = StopWatch()
-    rounds = 0
-    for h in range(1, max_hops + 1):
+    def step(frontier, h, _prev):
+        nonlocal dist
+        if h > 1:
+            # last round found new vertices: fold them into the visited set
+            dist = loop.hold(dist.unionByName(frontier))
         nxt = (
             sym.join(frontier.select(F.col("vid").alias("src")), on="src")
             .select(F.col("dst").alias("vid"))
@@ -75,21 +76,11 @@ def bfs_hops(
             .join(dist.select("vid"), on="vid", how="left_anti")
             .withColumn("hops", F.lit(h).cast("long"))
         )
-        nxt, stats = loop.hold_observed(nxt, F.count(F.lit(1)).alias("n_new"))
-        n_new = int(stats["n_new"] or 0)
-        loop.log(
-            iteration=h,
-            rows_shuffled=n_new,
-            delta_norm=float(n_new),
-            frontier_size=n_new,
-            wall_ms=watch.lap_ms(),
-        )
-        rounds = h
-        if n_new == 0:
-            break
-        dist = loop.hold(dist.unionByName(nxt))
-        frontier = nxt
+        return nxt, [F.count(F.lit(1)).alias("n_new")]
 
+    nxt, rounds, stats = loop.run(dist, step, until_zero("n_new"), rounds=max_hops)
+    if stats is not None and int(stats["n_new"] or 0) > 0:
+        dist = loop.hold(dist.unionByName(nxt))
     return loop.finish(dist.select("vid", "hops"), rounds)
 
 
@@ -177,11 +168,23 @@ def sssp(
         )
         frontier = dist
 
-    watch = StopWatch()
-    rounds = 0
     changed_parts: list[DataFrame] = []
     total_improvements = 0
-    for t in range(1, max_rounds + 1):
+
+    def absorb(improved, n_improved):
+        """Merge a round's strict improvements into the held dist state."""
+        nonlocal dist, total_improvements
+        total_improvements += n_improved
+        if track_changes:
+            changed_parts.append(improved)
+        dist = _hold_state(
+            dist.join(improved.select("vid"), on="vid", how="left_anti")
+            .unionByName(improved)
+        )
+
+    def step(frontier, t, prev):
+        if t > 1:
+            absorb(frontier, int(prev["n_improved"] or 0))
         f = frontier.select(F.col("vid").alias("src"), "dist")
         cand = None
         for ev in edge_views:
@@ -197,28 +200,13 @@ def sssp(
             .where(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
             .select("vid", F.col("nd").alias("dist"))
         )
-        improved, stats = loop.hold_observed(
-            improved, F.count(F.lit(1)).alias("n_improved")
-        )
-        n_improved = int(stats["n_improved"] or 0)
-        loop.log(
-            iteration=t,
-            rows_shuffled=n_improved,
-            delta_norm=float(n_improved),
-            frontier_size=n_improved,
-            wall_ms=watch.lap_ms(),
-        )
-        rounds = t
-        if n_improved == 0:
-            break
-        total_improvements += n_improved
-        if track_changes:
-            changed_parts.append(improved)
-        dist = _hold_state(
-            dist.join(improved.select("vid"), on="vid", how="left_anti")
-            .unionByName(improved)
-        )
-        frontier = improved
+        return improved, [F.count(F.lit(1)).alias("n_improved")]
+
+    improved, rounds, stats = loop.run(
+        frontier, step, until_zero("n_improved"), rounds=max_rounds
+    )
+    if stats is not None and int(stats["n_improved"] or 0) > 0:
+        absorb(improved, int(stats["n_improved"]))
 
     if track_changes:
         loop.kernel_state["total_improvements"] = total_improvements
@@ -371,10 +359,10 @@ def random_walks(
             F.col("vid").alias("v"),
         )
     )
-    out = state.select("walk_id", F.lit(0).cast("long").alias("step"), F.col("v").alias("vid"))
+    positions = []  # the held (walk_id, v) state of every step
 
-    watch = StopWatch()
-    for t in range(1, walk_length + 1):
+    def step(state, t, _prev):
+        positions.append(state)
         h = F.pmod(
             F.pmod(F.col("walk_id"), F.lit(WALK_P)) * _WALK_A
             + F.pmod(F.col("v"), F.lit(WALK_P)) * _WALK_B
@@ -387,18 +375,18 @@ def random_walks(
             .join(adj, on=["src", "idx"])
             .select("walk_id", F.col("dst").alias("v"))
         )
-        state, stats = loop.hold_observed(picked, F.count(F.lit(1)).alias("n_walks"))
-        loop.log(
-            iteration=t,
-            rows_shuffled=int(stats["n_walks"] or 0),
-            delta_norm=0.0,
-            frontier_size=int(stats["n_walks"] or 0),
-            wall_ms=watch.lap_ms(),
-        )
-        out = out.unionByName(
-            state.select("walk_id", F.lit(t).cast("long").alias("step"), F.col("v").alias("vid"))
-        )
+        return picked, [F.count(F.lit(1)).alias("n_walks")]
 
+    def observe(stats, _prev):
+        n = int(stats["n_walks"] or 0)
+        return n, 0.0, n, False
+
+    state, _, _ = loop.run(state, step, observe, rounds=walk_length)
+    positions.append(state)
+    out = None
+    for t, pos in enumerate(positions):
+        o = pos.select("walk_id", F.lit(t).cast("long").alias("step"), F.col("v").alias("vid"))
+        out = o if out is None else out.unionByName(o)
     return loop.finish(out, walk_length)
 
 
@@ -509,9 +497,15 @@ def betweenness(
     layers: list = [layer0]
     visited = layer0.select("s", "v")
 
-    watch = StopWatch()
-    for t in range(1, max_depth + 1):
-        prev = layers[-1]
+    def absorb(layer):
+        """A round that reached new vertices adds a layer."""
+        nonlocal visited
+        layers.append(layer)
+        visited = loop.hold(visited.unionByName(layer.select("s", "v")))
+
+    def step(prev, t, _prev_stats):
+        if t > 1:
+            absorb(prev)
         nxt = (
             prev.select("s", F.col("v").alias("src"), "sigma")
             .join(sym, on="src")
@@ -520,19 +514,11 @@ def betweenness(
             .groupBy("s", "v")
             .agg(F.sum("sigma").alias("sigma"))
         )
-        nxt, stats = loop.hold_observed(nxt, F.count(F.lit(1)).alias("n_new"))
-        n_new = int(stats["n_new"] or 0)
-        loop.log(
-            iteration=t,
-            rows_shuffled=n_new,
-            delta_norm=float(n_new),
-            frontier_size=n_new,
-            wall_ms=watch.lap_ms(),
-        )
-        if n_new == 0:
-            break
-        layers.append(nxt)
-        visited = loop.hold(visited.unionByName(nxt.select("s", "v")))
+        return nxt, [F.count(F.lit(1)).alias("n_new")]
+
+    nxt, _, stats = loop.run(layer0, step, until_zero("n_new"), rounds=max_depth)
+    if stats is not None and int(stats["n_new"] or 0) > 0:
+        absorb(nxt)
 
     # backward accumulation, deepest layer first
     spark_zero = F.lit(0.0)

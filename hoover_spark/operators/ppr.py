@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
-from hoover_spark.plans.iteration import IterationLoop, StopWatch
+from hoover_spark.plans.iteration import IterationLoop
 
 
 def personalized_pagerank(
@@ -67,6 +67,9 @@ def personalized_pagerank(
         F.count(F.lit(1)).alias("out_deg")
     )
 
+    dangling_mass = F.sum(
+        F.when(F.col("out_deg").isNull(), F.col("rank")).otherwise(F.lit(0.0))
+    ).alias("dangling")
     # static per-vertex state: restart mass p (0 off-seed) + out-degree
     # (null = dangling); rank starts AT the restart distribution
     state, init_stats = loop.hold_observed(
@@ -78,14 +81,10 @@ def personalized_pagerank(
             "out_deg",
             F.coalesce("p", F.lit(0.0)).alias("rank"),
         ),
-        F.sum(
-            F.when(F.col("out_deg").isNull(), F.col("rank")).otherwise(F.lit(0.0))
-        ).alias("dangling"),
+        dangling_mass,
     )
-    dangling = float(init_stats["dangling"] or 0.0)
 
-    watch = StopWatch()
-    for it in range(1, n_iterations + 1):
+    def step(state, _it, prev):
         wsrc = state.where(F.col("out_deg").isNotNull()).select(
             F.col("vid").alias("src"),
             (F.col("rank") / F.col("out_deg")).alias("w"),
@@ -100,7 +99,8 @@ def personalized_pagerank(
         # (the pagerank kernel's shape — a single expression tree, no
         # copy-drift between the rank and its reported delta)
         stepped = (
-            state.join(sums, on="vid", how="left")
+            state.select("vid", "p", "out_deg", "rank")
+            .join(sums, on="vid", how="left")
             .select(
                 "vid",
                 "p",
@@ -111,7 +111,7 @@ def personalized_pagerank(
                     + F.lit(alpha)
                     * (
                         F.coalesce("in_sum", F.lit(0.0))
-                        + F.lit(dangling) * F.col("p")
+                        + F.lit(float(prev["dangling"] or 0.0)) * F.col("p")
                     )
                 ).alias("rank"),
                 F.coalesce("msg_cnt", F.lit(0)).alias("_m"),
@@ -125,23 +125,22 @@ def personalized_pagerank(
                 "_m",
             )
         )
-        new_state, stats = loop.hold_observed(
-            stepped,
+        return stepped, [
             F.max("_d").alias("delta"),
             F.sum((F.col("_d") > 1e-12).cast("long")).alias("active"),
             F.sum("_m").alias("shuffled"),
-            F.sum(
-                F.when(F.col("out_deg").isNull(), F.col("rank")).otherwise(F.lit(0.0))
-            ).alias("next_dangling"),
-        )
-        loop.log(
-            iteration=it,
-            rows_shuffled=int(stats["shuffled"] or 0),
-            delta_norm=float(stats["delta"] or 0.0),
-            frontier_size=int(stats["active"] or 0),
-            wall_ms=watch.lap_ms(),
-        )
-        dangling = float(stats["next_dangling"] or 0.0)
-        state = new_state.select("vid", "p", "out_deg", "rank")
+            dangling_mass,
+        ]
 
-    return loop.finish(state.select("vid", "rank"), n_iterations)
+    def observe(stats, _prev):
+        return (
+            int(stats["shuffled"] or 0),
+            float(stats["delta"] or 0.0),
+            int(stats["active"] or 0),
+            False,
+        )
+
+    state, it, _ = loop.run(
+        state, step, observe, rounds=n_iterations, stats=init_stats
+    )
+    return loop.finish(state.select("vid", "rank"), it)

@@ -44,14 +44,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
-from hoover_spark.plans.iteration import IterationLoop, StopWatch
+from hoover_spark.plans.iteration import IterationLoop, until_zero
 
 
 def _minlabel_directed(
     e: DataFrame,
     init: DataFrame,
     loop: IterationLoop,
-    watch: StopWatch,
     it0: int,
     max_rounds: int = 200,
 ) -> tuple[DataFrame, int]:
@@ -61,10 +60,9 @@ def _minlabel_directed(
     color)`` covering the vertex domain. Returns the converged
     ``(vid, color)`` (checkpointed) and the updated iteration counter.
     """
-    color = loop.hold(init)
-    it = it0
-    for _ in range(max_rounds):
-        it += 1
+
+    def step(color, _it, _prev):
+        color = color.select("vid", "color")
         msgs = (
             e.join(color.select(F.col("vid").alias("src"), "color"), on="src")
             .groupBy(F.col("dst").alias("vid"))
@@ -87,19 +85,14 @@ def _minlabel_directed(
             "color",
             (F.col("color") != F.col("prev")).cast("long").alias("chg"),
         )
-        held, stats = loop.hold_observed(stepped, F.sum("chg").alias("changed"))
-        changed = int(stats["changed"] or 0)
-        loop.log(
-            iteration=it,
-            rows_shuffled=changed,
-            delta_norm=float(changed),
-            frontier_size=changed,
-            wall_ms=watch.lap_ms(),
-        )
-        color = held.select("vid", "color")
-        if changed == 0:
-            return color, it
-    raise RuntimeError("scc: directed min-label failed to converge")
+        return stepped, [F.sum("chg").alias("changed")]
+
+    color, it, stats = loop.run(
+        loop.hold(init), step, until_zero("changed"), rounds=max_rounds, start=it0
+    )
+    if int(stats["changed"] or 0) != 0:
+        raise RuntimeError("scc: directed min-label failed to converge")
+    return color.select("vid", "color"), it
 
 
 def scc(
@@ -125,7 +118,6 @@ def scc(
     n_active = int(stats["n_active"] or 0)
     result: DataFrame | None = None
     it = 0
-    watch = StopWatch()
 
     for _outer in range(1, max_outer + 1):
         if n_active == 0:
@@ -139,7 +131,7 @@ def scc(
         )
         init = active.select("vid", F.col("vid").alias("color"))
 
-        color, it = _minlabel_directed(e, init, loop, watch, it)
+        color, it = _minlabel_directed(e, init, loop, it)
 
         # reversed, class-restricted edges: a path in er never leaves
         # its color class, so rcolor is within-class min reachability
@@ -155,7 +147,7 @@ def scc(
             .where(F.col("cs") == F.col("cd"))
             .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        rcolor, it = _minlabel_directed(er, init, loop, watch, it)
+        rcolor, it = _minlabel_directed(er, init, loop, it)
 
         member = (
             color.join(

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hoover_spark.operators.graph import Graph
-from hoover_spark.plans.iteration import IterationLoop, StopWatch
+from hoover_spark.plans.iteration import IterationLoop
 
 
 def wcc(
@@ -55,7 +55,6 @@ def wcc(
     pre_contract: bool = False,
     pre_contract_levels: int = 1,
     track_changes: bool = False,
-    unroll: int = 1,
 ) -> DataFrame:
     """Return ``(vid: long, label: long)`` — label = min vid in component.
 
@@ -83,11 +82,11 @@ def wcc(
     aligns with the underlying topology on monotone-id chains but not
     on randomly-labelled paths (measured: a 100k scrambled-id path does
     not converge in O(log n) rounds with jumping); for genuinely
-    high-diameter graphs use
-    :func:`wcc_two_phase`, whose per-partition union-find contraction
-    collapses local chains before any shuffle round. ``True`` /
-    ``False`` pin the behavior. Converged labels are identical in all
-    modes (hash-min is monotone); only the round count differs.
+    high-diameter graphs add ``pre_contract=True``, whose per-partition
+    union-find contraction collapses local chains before any shuffle
+    round. ``True`` / ``False`` pin the behavior. Converged labels are
+    identical in all modes (hash-min is monotone); only the round count
+    differs.
 
     ``pre_contract=True`` seeds the labels from
     :func:`local_contract`'s per-partition union-find pass: each edge
@@ -140,27 +139,6 @@ def wcc(
     carried through the rounds and a zero-shuffle filter at the end —
     no extra joins or jobs (labels are monotone non-increasing, so the
     final-vs-initial comparison needs no per-round bookkeeping).
-
-    ``unroll > 1`` chains that many hash-min rounds into ONE Spark job
-    (Pregel-style checkpoint interval, same shape as
-    :func:`~hoover_spark.operators.pagerank.pagerank`'s ``unroll``):
-    interior rounds derive their frontier in-plan (rows whose carried
-    per-step label dropped), and the chunk-end Observation computes
-    every round's changed/shuffled/jump-gain metrics from the carried
-    columns, so per-iteration lineage is exact. The pointer-jump
-    lookup pins to the CHUNK-START materialized state for all rounds
-    of a chunk (a lookup against any older state is still a component
-    member ≤ the key — monotone-exact, slightly less compression,
-    never wrong). Convergence is detected at chunk ends; overshoot
-    rounds past a fixpoint are no-ops on an empty frontier (hash-min
-    is idempotent at the fixpoint). MEASURED VERDICT (r5, sf0.1 repo
-    graph with the 3-level contraction seed, local[32], 3 interleaved
-    reps each): a wash — unroll=2 median 17.2 s / unroll=3 18.7 s vs
-    18.1 s for unroll=1 (see BENCH.md): the saved barriers roughly
-    cancel against re-deriving the un-materialized interior state for
-    its two consumers, so the headline keeps the default ``unroll=1``
-    (plan-identical to the classic loop) and the knob stays available
-    for barrier-dominated regimes, adopted by measurement only.
     """
     # identity checks: `1 in (True, ...)` is True in Python (1 == True),
     # which would defeat the point of rejecting truthy non-bools
@@ -196,7 +174,8 @@ def wcc(
     if resume:
         loaded = loop.load_latest()
         if loaded is not None:
-            labels, start_iter = loaded
+            # a checkpoint is a held round state; keep the label columns
+            labels, start_iter = loaded[0].drop("_prev", "_sl", "_m"), loaded[1]
     if labels is None:
         base0 = (
             initial_labels.select("vid", "label")
@@ -316,141 +295,87 @@ def wcc(
     # round 1 — local chains are already collapsed — so it retires
     # immediately and degenerates to no-jump, 19 vs pinned's 14 rounds
     # on the sf0.1 repo graph.)
-    jump_enabled = pointer_jumping is True
-    jump_retired = False  # once auto disables an enabled jump, stay off
-    n_vertices = None
-
+    jump = {"on": pointer_jumping is True, "retired": False}
     carry = ["l0"] if track_changes else []
-    unroll = max(1, int(unroll))
-    it = start_iter
-    watch = StopWatch()
-    while it < loop.max_iterations:
-        steps = min(unroll, loop.max_iterations - it)
 
-        # Chunk of `steps` lazily-chained rounds. Carried columns:
-        # _lb0.._lb{steps} per-round labels, _sl{s} pre-jump labels,
-        # _m{s} per-round message counts — all feed the chunk-end
-        # Observation so per-iteration lineage metrics stay exact.
-        # The jump lookup pins to the chunk-start MATERIALIZED state
-        # for every round of the chunk: a label from any older state
-        # is a component member ≤ the key (labels are monotone
-        # non-increasing and start ≤ vid), so the shortcut stays
-        # monotone-exact — and the lookup side never recomputes
-        # in-chunk subtrees.
-        lookup = labels.select(
-            F.col("vid").alias("j_vid"), F.col("label").alias("j_label")
-        )
-        cur = labels.select("vid", F.col("label").alias("_lb0"), *carry)
-        for s in range(1, steps + 1):
-            prev = f"_lb{s - 1}"
-            # 1. neighbor-min over the frontier only (delta
-            #    processing) — one join per edge view, small outputs
-            #    unioned. Interior rounds derive the frontier in-plan
-            #    from the carried labels.
-            if s == 1:
-                fsrc = frontier.select(F.col("vid").alias("src"), "label")
-            else:
-                fsrc = cur.where(F.col(prev) < F.col(f"_lb{s - 2}")).select(
-                    F.col("vid").alias("src"), F.col(prev).alias("label")
-                )
-            msgs = None
-            for v in edge_views:
-                m = v.join(fsrc, on="src").select(
-                    F.col("dst").alias("vid"), "label"
-                )
-                msgs = m if msgs is None else msgs.unionByName(m)
-            mins = msgs.groupBy("vid").agg(
-                F.min("label").alias("msg_label"), F.count(F.lit(1)).alias("msg_cnt")
-            )
-            keep = (
-                ["vid"]
-                + carry
-                + [f"_lb{j}" for j in range(s)]
-                + [f"_sl{j}" for j in range(1, s)]
-                + [f"_m{j}" for j in range(1, s)]
-            )
-            stepped = cur.join(mins, on="vid", how="left").select(
-                *keep,
-                F.least(
-                    F.col(prev), F.coalesce("msg_label", F.col(prev))
-                ).alias(f"_sl{s}"),
-                F.coalesce("msg_cnt", F.lit(0)).alias(f"_m{s}"),
-            )
-
-            # 2. pointer jumping: label <- min(label, lookup(label)).
-            if jump_enabled:
-                stepped = stepped.join(
-                    lookup, stepped[f"_sl{s}"] == lookup.j_vid, "left"
-                ).select(
-                    *keep,
-                    f"_sl{s}",
-                    f"_m{s}",
-                    F.least(
-                        F.col(f"_sl{s}"),
-                        F.coalesce("j_label", F.col(f"_sl{s}")),
-                    ).alias(f"_lb{s}"),
-                )
-            else:
-                stepped = stepped.withColumn(f"_lb{s}", F.col(f"_sl{s}"))
-            cur = stepped
-
-        # 3. materialize + one-pass stats in the SAME action (the
-        #    Observation rides the eager localCheckpoint): every
-        #    round's frontier size, messages shuffled, and jump
-        #    contribution — one Spark job per `steps` rounds, total.
-        obs_exprs = []
-        for s in range(1, steps + 1):
-            obs_exprs += [
-                F.sum(
-                    (F.col(f"_lb{s}") < F.col(f"_lb{s - 1}")).cast("long")
-                ).alias(f"changed_{s}"),
-                F.sum(f"_m{s}").alias(f"shuffled_{s}"),
-                F.sum(
-                    (F.col(f"_lb{s}") < F.col(f"_sl{s}")).cast("long")
-                ).alias(f"jump_gain_{s}"),
-            ]
-        obs_exprs.append(F.count(F.lit(1)).alias("total"))
-        new_labels, stats = loop.hold_observed(cur, *obs_exprs)
-
-        chunk_wall = watch.lap_ms()
-        changed = 0
-        for s in range(1, steps + 1):
-            it += 1
-            changed = int(stats[f"changed_{s}"] or 0)
-            loop.log(
-                iteration=it,
-                rows_shuffled=int(stats[f"shuffled_{s}"] or 0),
-                delta_norm=float(changed),
-                frontier_size=changed,
-                wall_ms=chunk_wall / steps,
-            )
-        jump_gain = int(stats[f"jump_gain_{steps}"] or 0)
-        n_vertices = int(stats["total"] or 0)
-        if adaptive_jump:
-            if jump_enabled and jump_gain == 0:
+    def step(state, it, prev):
+        if adaptive_jump and prev is not None:
+            changed = int(prev["changed"] or 0)
+            if jump["on"] and int(prev["jump_gain"] or 0) == 0:
                 # the remaining chains are exhausted; the rest is pure
                 # neighbor-min — retire the label self-join shuffle
-                jump_enabled = False
-                jump_retired = True
+                jump.update(on=False, retired=True)
             elif (
-                not jump_enabled
-                and not jump_retired
-                and 0 < changed < max(n_vertices // 64, 1024)
+                not jump["on"]
+                and not jump["retired"]
+                and 0 < changed < max(int(prev["total"] or 0) // 64, 1024)
             ):
                 # tail phase: straggler chains remain and the V-sized
                 # self-join is cheap — compress them
-                jump_enabled = True
+                jump["on"] = True
+        # 1. neighbor-min over the frontier only (delta processing):
+        #    one join per edge view, small outputs unioned. After round
+        #    1 the frontier is the rows whose label just dropped.
+        if it == start_iter + 1:
+            front = frontier
+        else:
+            front = state.where(F.col("label") < F.col("_prev"))
+        fsrc = front.select(F.col("vid").alias("src"), "label")
+        msgs = None
+        for v in edge_views:
+            m = v.join(fsrc, on="src").select(F.col("dst").alias("vid"), "label")
+            msgs = m if msgs is None else msgs.unionByName(m)
+        mins = msgs.groupBy("vid").agg(
+            F.min("label").alias("msg_label"), F.count(F.lit(1)).alias("msg_cnt")
+        )
+        keep = ["vid", *carry, "_prev"]
+        stepped = (
+            state.select("vid", *carry, F.col("label").alias("_prev"))
+            .join(mins, on="vid", how="left")
+            .select(
+                *keep,
+                F.least(
+                    F.col("_prev"), F.coalesce("msg_label", F.col("_prev"))
+                ).alias("_sl"),
+                F.coalesce("msg_cnt", F.lit(0)).alias("_m"),
+            )
+        )
+        # 2. pointer jumping: label <- min(label, lookup(label)) against
+        #    the materialized previous state
+        if jump["on"]:
+            lookup = state.select(
+                F.col("vid").alias("j_vid"), F.col("label").alias("j_label")
+            )
+            stepped = stepped.join(
+                lookup, stepped["_sl"] == lookup.j_vid, "left"
+            ).select(
+                *keep,
+                "_sl",
+                "_m",
+                F.least(F.col("_sl"), F.coalesce("j_label", F.col("_sl"))).alias(
+                    "label"
+                ),
+            )
+        else:
+            stepped = stepped.withColumn("label", F.col("_sl"))
+        # 3. frontier size, messages shuffled and the jump's
+        #    contribution ride the checkpoint action
+        return stepped, [
+            F.sum((F.col("label") < F.col("_prev")).cast("long")).alias("changed"),
+            F.sum("_m").alias("shuffled"),
+            F.sum((F.col("label") < F.col("_sl")).cast("long")).alias("jump_gain"),
+            F.count(F.lit(1)).alias("total"),
+        ]
 
-        last = f"_lb{steps}"
-        labels = new_labels.select("vid", F.col(last).alias("label"), *carry)
-        labels = loop.save_state(labels, it)
-        if changed == 0:
-            break
-        frontier = new_labels.where(
-            F.col(last) < F.col(f"_lb{steps - 1}")
-        ).select("vid", F.col(last).alias("label"))
+    def observe(stats, _prev):
+        changed = int(stats["changed"] or 0)
+        loop.kernel_state["n_vertices"] = int(stats["total"] or 0)
+        return int(stats["shuffled"] or 0), float(changed), changed, changed == 0
 
-    loop.kernel_state["n_vertices"] = n_vertices
+    loop.kernel_state["n_vertices"] = None
+    labels, it, _ = loop.run(
+        labels, step, observe, rounds=loop.max_iterations - start_iter, start=start_iter
+    )
     if track_changes:
         # zero-shuffle filter over the final materialized state — the
         # rows whose label moved below the caller's initial mapping
@@ -560,28 +485,3 @@ def local_contract(edges, num_partitions: int = 32, assume_partitioned: bool = F
         edges = edges.repartition(num_partitions, "src")
     return edges.mapInPandas(run, schema=schema).distinct()
 
-
-def wcc_two_phase(graph: Graph, spark: SparkSession | None = None, **kwargs) -> DataFrame:
-    """Two-phase WCC: per-partition union-find contraction, then
-    hash-min+pointer-jumping on the mapping star-forest, then the
-    resolved labels.
-
-    Phase 1 touches each edge exactly once with zero shuffle rounds and
-    collapses the *intra-partition* diameter, so the iterative phase's
-    round count is the number of cross-partition hops. Wins on
-    high-diameter graphs (long chains, meshes, road networks) and when
-    partitions hold dense local structure (locality-partitioned edges);
-    on low-diameter graphs (power-law/RMAT, ~10 hash-min rounds) the
-    mapping is nearly as large as the input and plain :func:`wcc`
-    measured faster — both are exposed, pick by graph shape."""
-    spark = spark or graph.edges.sparkSession
-    mapping = local_contract(graph.sym_edges(), graph.num_partitions)
-    # mapping edges (vid -> root) form a star forest per partition;
-    # hash-min over it resolves cross-partition components.
-    star = Graph(
-        mapping.select(F.col("vid").alias("src"), F.col("root").alias("dst")),
-        num_partitions=graph.num_partitions,
-    )
-    resolved = wcc(star, spark=spark, **kwargs)
-    star.unpersist()
-    return resolved

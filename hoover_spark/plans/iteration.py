@@ -1,26 +1,37 @@
-"""Checkpointed, resumable, metric-emitting iteration driver.
+"""One superstep driver for every iterative kernel.
 
-Ports the semantics of HOOVER's main loop (``hvr_body``,
-``src/hoover.cpp:3804-3947``) to a driver-side loop over DataFrame
-programs:
+HOOVER runs every application through one main loop (``hvr_body``,
+``src/hoover.cpp:3804-3947``) with per-application callbacks. Here the
+same role is played by :meth:`IterationLoop.run`: a kernel states only
 
-- *frontier / delta processing* (reference ``needs_processing`` dirty
-  flags, ``inc/hvr_vertex.h:79-86``, ``src/hoover.cpp:603-622``) is the
-  kernel's responsibility; this driver supplies the loop, convergence
-  test (reference ``should_terminate``, ``inc/hoover.h:73-82``),
-  checkpoint cadence and per-iteration metrics.
-- *profiling sink* (reference ``save_profiling_info``,
-  ``src/hoover.cpp:3195-3423``) becomes a ``metrics`` parquet table with
-  one row per iteration: rows shuffled, delta norm, frontier size,
-  wall ms, partition count.
-- *resume*: state is durably written every ``checkpoint_every``
-  iterations under ``<dir>/<kernel>/iter=N``; ``load_latest`` restarts
-  from the newest complete checkpoint (reference analogue: dead-PE
-  final-state persistence, ``src/hoover.cpp:3985-4011``).
+- its held initial state,
+- ``step(state, it, prev_stats)`` — the next state as a lazy
+  DataFrame plus the Observation aggregates to compute with it
+  (``prev_stats`` carries last round's scalars, e.g. PageRank's
+  dangling mass), and
+- ``observe(stats, prev_stats)`` — the round's
+  ``(rows_shuffled, delta_norm, frontier_size, done)``,
 
-Long iterative lineages are truncated with ``localCheckpoint`` between
-durable checkpoints — without this, Catalyst plans grow without bound
-(SURVEY.md §7.4).
+and the driver owns the rest of the round sequence:
+
+- the round cap;
+- ONE Spark action per round: the eager ``localCheckpoint`` that
+  materializes the state also computes the Observation (lineage
+  truncation — without it Catalyst plans grow without bound, SURVEY.md
+  §7.4);
+- the metrics row (reference profiling sink ``save_profiling_info``,
+  ``src/hoover.cpp:3195-3423``): rows shuffled, delta norm, frontier
+  size, wall ms, partition count;
+- the durable checkpoint every ``checkpoint_every`` iterations under
+  ``<dir>/<kernel>/iter=N``, which ``load_latest`` resumes from
+  (reference analogue: dead-PE final-state persistence,
+  ``src/hoover.cpp:3985-4011``);
+- the stop test (reference ``should_terminate``,
+  ``inc/hoover.h:73-82``).
+
+Frontier / delta processing (reference ``needs_processing`` dirty
+flags, ``inc/hvr_vertex.h:79-86``) stays the kernel's: it is part of
+the step. ``finish`` flushes the metrics and writes the final result.
 """
 
 from __future__ import annotations
@@ -29,16 +40,17 @@ import json
 import os
 import re
 import time
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 _ITER_DIR_RE = re.compile(r"^iter=(\d+)$")
 
 
 @dataclass
 class IterationLoop:
-    """State/metrics manager for one kernel run."""
+    """Superstep driver, state holder and metrics sink for one kernel run."""
 
     spark: SparkSession
     kernel: str
@@ -89,6 +101,39 @@ class IterationLoop:
         obs = Observation()
         out = self.hold(df.observe(obs, *exprs))
         return out, obs.get
+
+    # -- the superstep driver ----------------------------------------------
+    def run(
+        self,
+        state: DataFrame,
+        step: Callable[[DataFrame, int, dict | None], tuple[DataFrame, Sequence[Column]]],
+        observe: Callable[[dict, dict | None], tuple[int, float, int, bool]],
+        rounds: int,
+        start: int = 0,
+        stats: dict | None = None,
+    ) -> tuple[DataFrame, int, dict | None]:
+        """Run at most ``rounds`` supersteps numbered from ``start + 1``.
+
+        Round ``it`` holds ``step(state, it, stats)`` with its
+        Observation in one action, logs ``observe(new_stats, stats)``,
+        checkpoints at the cadence, and stops early once ``done``.
+        ``stats`` seeds round 1's ``prev_stats``. Returns the last
+        held state, the last iteration number and its stats (the
+        inputs unchanged when no round ran).
+        """
+        it = start
+        t0 = time.perf_counter()
+        for it in range(start + 1, start + rounds + 1):
+            df, exprs = step(state, it, stats)
+            held, new_stats = self.hold_observed(df, *exprs)
+            shuffled, delta, frontier, done = observe(new_stats, stats)
+            t1 = time.perf_counter()
+            self.log(it, shuffled, delta, frontier, (t1 - t0) * 1000.0)
+            t0 = t1
+            state, stats = self.save_state(held, it), new_stats
+            if done:
+                break
+        return state, it, stats
 
     def _kernel_dir(self) -> str | None:
         if not self.checkpoint_dir:
@@ -171,12 +216,29 @@ class IterationLoop:
         return out
 
 
-class StopWatch:
-    def __init__(self) -> None:
-        self.t0 = time.perf_counter()
 
-    def lap_ms(self) -> float:
-        t = time.perf_counter()
-        ms = (t - self.t0) * 1000.0
-        self.t0 = t
-        return ms
+def until_zero(name: str) -> Callable[[dict, dict | None], tuple[int, float, int, bool]]:
+    """``observe`` for frontier kernels: the Observation count ``name``
+    is the round's rows shuffled, delta and frontier, and the run stops
+    once it reaches 0."""
+
+    def observe(stats: dict, _prev: dict | None) -> tuple[int, float, int, bool]:
+        n = int(stats[name] or 0)
+        return n, float(n), n, n == 0
+
+    return observe
+
+
+def until_stable(name: str, work: str) -> Callable[[dict, dict | None], tuple[int, float, int, bool]]:
+    """``observe`` for peeling kernels: the Observation count ``name``
+    shrinks until a round removes nothing or nothing is left; ``work``
+    is the round's rows shuffled and the delta is the rows removed."""
+
+    def observe(stats: dict, prev: dict | None) -> tuple[int, float, int, bool]:
+        n = int(stats[name] or 0)
+        if prev is None:
+            return int(stats[work] or 0), 0.0, n, n == 0
+        prev_n = int(prev[name] or 0)
+        return int(stats[work] or 0), float(prev_n - n), n, n == prev_n or n == 0
+
+    return observe

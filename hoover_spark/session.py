@@ -2,7 +2,8 @@
 
 In the sandbox we run ``local[N]`` (single JVM); on a real cluster the
 same code runs unchanged via ``spark-submit --py-files`` — nothing here
-assumes local mode except the memory default.
+assumes local mode except the memory default, which is sized from the
+machine the driver runs on.
 """
 
 from __future__ import annotations
@@ -37,6 +38,19 @@ _DEFAULTS = {
 }
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, between 1g and 48g: the other half stays
+    free for Python workers, tmpfs spill and the OS."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return "4g"
+    return f"{max(1024, min(total_kb // 1024 // 2, 48 * 1024))}m"
+
+
 def get_spark(
     app_name: str = "hoover_spark",
     cores: int | None = None,
@@ -49,17 +63,25 @@ def get_spark(
     ``shuffle_partitions`` defaults to ``2 * cores`` — sized so that at
     bench scale each shuffle partition stays well under executor memory;
     on a real cluster this is set to ~2-3x total executor cores instead.
+    The driver heap is ``$HOOVER_SPARK_DRIVER_MEM`` or half of physical
+    memory. Spill goes to ``spark.local.dir`` from ``extra_conf``, else
+    ``$SPARK_LOCAL_DIRS``, else ``/dev/shm/spark-local``.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)
 
-    # Shuffle/spill files on tmpfs when available: the sandbox's virtual
-    # disk has multi-x latency variance; a real cluster pairs executors
-    # with local NVMe. Harmless to skip when /dev/shm is absent.
+    # Shuffle/spill files on tmpfs when nothing else is asked for: a
+    # virtual disk has multi-x latency variance; a real cluster pairs
+    # executors with local NVMe. Spark itself reads $SPARK_LOCAL_DIRS
+    # (and it wins over spark.local.dir). Skipped when /dev/shm is absent.
     local_dir = None
-    if os.path.isdir("/dev/shm"):
+    if (
+        "spark.local.dir" not in (extra_conf or {})
+        and not os.environ.get("SPARK_LOCAL_DIRS")
+        and os.path.isdir("/dev/shm")
+    ):
         local_dir = "/dev/shm/spark-local"
         try:
             os.makedirs(local_dir, exist_ok=True)
@@ -71,7 +93,7 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cores))
-        .config("spark.driver.memory", os.environ.get("HOOVER_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("HOOVER_SPARK_DRIVER_MEM") or _default_driver_memory())
     )
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)

@@ -2,13 +2,12 @@ import os
 
 import pytest
 
-os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-
 
 @pytest.fixture(scope="session")
 def spark():
     from hoover_spark.session import get_spark
 
-    s = get_spark("hoover_spark_tests", cores=8, shuffle_partitions=8)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or os.cpu_count() or 4
+    s = get_spark("hoover_spark_tests", cores=cores, shuffle_partitions=8)
     yield s
     s.stop()

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from hoover_spark.operators.communities import detect_communities_from_points
 from hoover_spark.sources.points import load_points_csv, points_from_rows
 
@@ -36,6 +38,11 @@ def test_two_tetrahedra_two_communities(spark):
 
 
 REF_CASES = "/root/reference/community_test_cases"
+# golden CSVs from the reference checkout; the synthetic two_cliques
+# fixtures above cover the same shapes when it is absent
+needs_ref = pytest.mark.skipif(
+    not os.path.isdir(REF_CASES), reason=f"{REF_CASES} not present"
+)
 
 
 def _ref_communities(spark, name, radius=3.0):
@@ -44,6 +51,7 @@ def _ref_communities(spark, name, radius=3.0):
             detect_communities_from_points(pts, radius).collect()}
 
 
+@needs_ref
 def test_reference_csv_4_vert_1_cliq(spark):
     """The reference's own golden file: one 4-clique -> one community."""
     res = _ref_communities(spark, "4_vert_1_cliq.csv")
@@ -51,6 +59,7 @@ def test_reference_csv_4_vert_1_cliq(spark):
     assert len(set(res.values())) == 1
 
 
+@needs_ref
 def test_reference_csv_8_vert_2_cliq(spark):
     """Two well-separated 4-cliques -> two communities."""
     res = _ref_communities(spark, "8_vert_2_cliq.csv")
@@ -60,6 +69,7 @@ def test_reference_csv_8_vert_2_cliq(spark):
     assert res[1] != res[5]
 
 
+@needs_ref
 def test_reference_csv_8_vert_2_cliq_overlapping(spark):
     """Overlapping cliques percolate into ONE community. The file's
     malformed '0.0.11' coordinate must parse as 0.0 (atof semantics),

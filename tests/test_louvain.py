@@ -1,7 +1,7 @@
 """Louvain local-move rounds vs an exact python simulator oracle."""
 
 from hoover_spark.operators.communities import louvain_move, modularity
-from hoover_spark.operators.graph import Graph
+from hoover_spark.operators.graph import Graph, graph_from_pairs
 from hoover_spark.sources.synthetic import edges_to_pairs, rmat_graph, two_cliques
 
 
@@ -54,6 +54,13 @@ def test_louvain_round_exact_two_cliques(spark):
         assert _got(louvain_move(g, n_rounds=rounds)) == _louvain_oracle(
             pairs, rounds
         ), f"rounds={rounds}"
+    # a vertex whose only edge is a self-loop keeps its own label
+    pairs = [(0, 1), (1, 2), (2, 0), (5, 5)]
+    g = graph_from_pairs(spark, pairs)
+    for rounds in (1, 2):
+        assert _got(louvain_move(g, n_rounds=rounds)) == _louvain_oracle(
+            pairs, rounds
+        ), f"self-loop rounds={rounds}"
 
 
 def test_louvain_round_exact_rmat(spark):
@@ -121,11 +128,6 @@ def _weighted_louvain_oracle(pairs, n_levels, n_rounds):
     """Exact mirror of louvain_levels: doubled-self-loop weighted sym
     multigraph, S·w − k·(Σtot − k·[own]) scores, contraction between
     levels; returns orig vid -> final community."""
-    wall = {}
-    for s, d in set(pairs):
-        if s != d:
-            wall[(s, d)] = wall.get((s, d), 0) + 1
-            wall[(d, s)] = wall.get((d, s), 0) + 1
     # dedupe symmetrization of duplicate input pairs
     wall = {}
     sym = set()

@@ -87,30 +87,3 @@ def test_checkpoint_resume(spark, tmp_path):
     got = ranks_of(pagerank(g, loop=loop2, resume=True, tol=TOL))
     assert_close(got, want)
 
-
-def test_unroll_parity_and_metrics(spark):
-    """unroll=3 (three iterations chained per Spark job, in-plan
-    dangling mass via the null-dst shuffle group) must reproduce the
-    one-job-per-iteration loop: per-vertex ranks to float-ULP, and the
-    per-iteration lineage metrics (delta / frontier / rows shuffled)
-    exactly — the north rule's per-iteration metrics survive the
-    chunking via carried per-step columns on one Observation."""
-    from hoover_spark.plans.iteration import IterationLoop
-
-    g = rmat_graph(spark, scale=7, edge_factor=4)  # has dangling vids
-    l1 = IterationLoop(spark, "pagerank", max_iterations=5)
-    r1 = ranks_of(pagerank(g, n_iterations=5, loop=l1, unroll=1))
-    l3 = IterationLoop(spark, "pagerank", max_iterations=5)
-    r3 = ranks_of(pagerank(g, n_iterations=5, loop=l3, unroll=3))
-    assert_close(r1, r3, tol=1e-14)
-    assert len(l1.metrics) == len(l3.metrics) == 5
-    for m1, m3 in zip(l1.metrics, l3.metrics):
-        assert m1["rows_shuffled"] == m3["rows_shuffled"]
-        assert m1["frontier_size"] == m3["frontier_size"]
-        assert math.isclose(m1["delta_norm"], m3["delta_norm"], abs_tol=1e-14)
-
-    # tol mode: converged chunk run still sums to 1 and crosses tol
-    lt = IterationLoop(spark, "pagerank", max_iterations=100)
-    got = ranks_of(pagerank(g, tol=TOL, loop=lt, unroll=3))
-    assert math.isclose(sum(got.values()), 1.0, abs_tol=1e-9)
-    assert lt.metrics[-1]["delta_norm"] < TOL

@@ -149,15 +149,29 @@ def test_pointer_jumping_rejects_truthy_nonbool(spark):
 
 def test_pre_contract_seeding_matches_plain(spark):
     """Seeding hash-min from the per-partition union-find star forest
-    must converge to the identical labels (and in no more rounds)."""
+    must converge to the identical labels as plain hash-min and the
+    union-find oracle (and in no more rounds) — including a vertex
+    whose only edge is a self-loop, which never reaches the symmetric
+    edge set the contraction sweeps."""
+    from hoover_spark.operators.graph import graph_from_pairs
     from hoover_spark.plans.iteration import IterationLoop
 
-    for g in (path_graph(spark, 64), rmat_graph(spark, scale=8, edge_factor=4)):
+    graphs = (
+        path_graph(spark, 64),
+        path_graph(spark, 50),
+        two_cliques(spark, k=4, bridge=False),
+        rmat_graph(spark, scale=8, edge_factor=4),
+        graph_from_pairs(spark, [(0, 1), (1, 2), (5, 5)]),
+    )
+    for g in graphs:
         plain_loop = IterationLoop(g.edges.sparkSession, kernel="wcc")
         seeded_loop = IterationLoop(g.edges.sparkSession, kernel="wcc")
         plain = labels_of(wcc(g, loop=plain_loop))
         seeded = labels_of(wcc(g, loop=seeded_loop, pre_contract=True))
-        assert seeded == plain
+        # self-loop-only vertices are singleton components
+        want = {r["vid"]: r["vid"] for r in g.vertices().collect()}
+        want.update(union_find_components(edges_to_pairs(g)))
+        assert seeded == plain == want
         assert len(seeded_loop.metrics) <= len(plain_loop.metrics)
 
 
@@ -251,29 +265,3 @@ def test_multi_level_pre_contract_matches_and_cuts_rounds(spark):
     got = labels_of(wcc(g, pre_contract=True, pre_contract_levels=3))
     assert got == {v: 0 for v in range(257)}
 
-
-def test_unroll_matches_classic_loop(spark):
-    """unroll=3 (three hash-min rounds per Spark job: in-plan interior
-    frontiers, chunk-start jump lookup, per-round metrics off one
-    chunk-end Observation) must converge to the exact same labels as
-    the one-job-per-round loop in every jump mode, including with the
-    multi-level contraction seed."""
-    from hoover_spark.plans.iteration import IterationLoop
-
-    g = rmat_graph(spark, scale=7, edge_factor=3)
-    want = labels_of(wcc(g, pointer_jumping=False))
-    for jump in (True, False, "auto"):
-        got = labels_of(wcc(g, pointer_jumping=jump, unroll=3))
-        assert got == want, f"jump={jump}"
-    lc = IterationLoop(spark, "wcc", max_iterations=100)
-    got = labels_of(
-        wcc(g, pointer_jumping=True, pre_contract=True,
-            pre_contract_levels=2, unroll=3, loop=lc)
-    )
-    assert got == want
-    # per-round lineage metrics still one entry per ROUND (north rule),
-    # not per chunk
-    assert len(lc.metrics) >= 1
-    assert all(m["kernel"] == "wcc" for m in lc.metrics)
-    # monotone frontier tail: the final logged round is the fixpoint
-    assert lc.metrics[-1]["frontier_size"] == 0

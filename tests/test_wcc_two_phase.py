@@ -1,37 +1,13 @@
-"""Two-phase WCC (local union-find contraction + hash-min) must agree
-exactly with single-phase WCC and the union-find oracle."""
+"""The per-partition union-find contraction that seeds
+``wcc(pre_contract=True)`` (the ``wcc_two_phase`` contract query) must
+never merge vertices of different components; its end-to-end labels
+are checked in ``test_wcc.py::test_pre_contract_seeding_matches_plain``."""
 
 from __future__ import annotations
 
-from hoover_spark.operators.wcc import local_contract, wcc, wcc_two_phase
-from hoover_spark.sources.synthetic import (
-    edges_to_pairs,
-    path_graph,
-    rmat_graph,
-    two_cliques,
-)
+from hoover_spark.operators.wcc import local_contract
+from hoover_spark.sources.synthetic import edges_to_pairs, two_cliques
 from tests.oracles import union_find_components
-
-
-def _check(g):
-    oracle = union_find_components(edges_to_pairs(g))
-    got = {r["vid"]: r["label"] for r in wcc_two_phase(g).collect()}
-    assert got == oracle
-
-
-def test_two_phase_path(spark):
-    _check(path_graph(spark, 50))
-
-
-def test_two_phase_cliques(spark):
-    _check(two_cliques(spark, k=4, bridge=False))
-
-
-def test_two_phase_rmat(spark):
-    g = rmat_graph(spark, scale=8, edge_factor=4)
-    oracle = {r["vid"]: r["label"] for r in wcc(g).collect()}
-    got = {r["vid"]: r["label"] for r in wcc_two_phase(g).collect()}
-    assert got == oracle
 
 
 def test_local_contract_is_conservative(spark):
