@@ -49,7 +49,11 @@ from hoover_spark.operators.dedup import (
 from hoover_spark.operators.graph import Graph
 from hoover_spark.operators.label_prop import min_label_propagation, mode_label_propagation
 from hoover_spark.operators.pagerank import pagerank
-from hoover_spark.operators.triangles import oriented_edges, per_vertex_triangles
+from hoover_spark.operators.triangles import (
+    oriented_edges,
+    per_vertex_triangles,
+    triangles,
+)
 from hoover_spark.operators.wcc import wcc
 
 N_HASHES = 12
@@ -289,16 +293,9 @@ def q_tfidf_top3(spark, sf_dir):
 
 def q_triangle_total(spark, sf_dir):
     g = Graph(_customer_edges(spark, sf_dir))
-    e = oriented_edges(g)
-    wedges = e.alias("a").join(e.alias("b"), F.col("a.dst") == F.col("b.src")).select(
-        F.col("a.src").alias("u"), F.col("b.dst").alias("w")
+    return triangles(oriented_edges(g)).agg(
+        F.count(F.lit(1)).cast("long").alias("n_triangles")
     )
-    closed = wedges.join(
-        e.select(F.col("src").alias("u"), F.col("dst").alias("w")),
-        on=["u", "w"],
-        how="left_semi",
-    )
-    return closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
 
 
 def q_triangles_per_vertex(spark, sf_dir):

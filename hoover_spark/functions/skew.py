@@ -1,4 +1,4 @@
-"""Explicit skew handling: salted two-stage aggregation.
+"""Explicit skew handling: the salt column for two-stage aggregation.
 
 The reference has *no* skew handling (SURVEY.md §4 O10): a high-degree
 vertex simply grows a huge AVL row. At 100 TB a popular vertex (a file
@@ -12,18 +12,13 @@ explicitly — is the two-stage salted aggregate:
 This composes with (does not replace) Spark's map-side partial
 aggregation and AQE skew-join splitting; it matters when a single key's
 *reduce-side* cardinality exceeds one task's capacity.
+:func:`hoover_spark.operators.pagerank.pagerank` (``salt_buckets``)
+runs its per-round gather this way over :func:`with_salt`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
-
-#: aggregates that are associative+commutative and safe to two-stage.
-_MERGE = {
-    "sum": F.sum,
-    "min": F.min,
-    "max": F.max,
-}
+from pyspark.sql import DataFrame, functions as F
 
 
 def with_salt(df: DataFrame, salt_buckets: int, cols: list[str] | None = None) -> DataFrame:
@@ -35,40 +30,4 @@ def with_salt(df: DataFrame, salt_buckets: int, cols: list[str] | None = None) -
     cols = cols or df.columns
     return df.withColumn(
         "salt", F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(salt_buckets)).cast("int")
-    )
-
-
-def salted_agg(
-    df: DataFrame,
-    key: str,
-    value: str,
-    agg: str = "sum",
-    salt_buckets: int = 16,
-    out: str | None = None,
-) -> DataFrame:
-    """Two-stage ``agg(value) GROUP BY key`` with salting.
-
-    ``agg`` must be decomposable (sum/min/max). Returns (key, out).
-    """
-    fn = _MERGE[agg]
-    out = out or f"{agg}_{value}"
-    salted = with_salt(df, salt_buckets, cols=[c for c in df.columns if c != key])
-    partial = salted.groupBy(key, "salt").agg(fn(value).alias("_partial"))
-    return partial.groupBy(key).agg(fn("_partial").alias(out))
-
-
-def count_salted(df: DataFrame, key: str, salt_buckets: int = 16, out: str = "cnt") -> DataFrame:
-    """Two-stage COUNT(*) GROUP BY key."""
-    salted = with_salt(df, salt_buckets, cols=[c for c in df.columns if c != key])
-    partial = salted.groupBy(key, "salt").agg(F.count(F.lit(1)).alias("_c"))
-    return partial.groupBy(key).agg(F.sum("_c").alias(out))
-
-
-def top_degree_keys(edges: DataFrame, col: str, threshold: int) -> DataFrame:
-    """Keys whose degree exceeds ``threshold`` — candidates for salting
-    or broadcast-side special-casing (hot-key isolation)."""
-    return (
-        edges.groupBy(col)
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .where(F.col("degree") > threshold)
     )

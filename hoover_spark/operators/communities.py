@@ -11,10 +11,11 @@ supernode graph (:493-512). Golden fixtures:
 Spark-first design (all equi-joins, no per-row Python):
 
 1. **4-cliques** by ordered extension over the degree-oriented edge
-   list (cf. triangles): triangles (u<v<w by orientation rank) joined
-   with a third extension vertex adjacent to all of u, v, w. The
-   orientation bounds each vertex's forward degree at O(sqrt(|E|)) —
-   same skew bound as triangle counting.
+   list: the shared :func:`hoover_spark.operators.triangles.triangles`
+   listing (u<v<w by orientation rank) joined with a fourth vertex
+   adjacent to all of u, v, w. The orientation bounds each vertex's
+   forward degree at O(sqrt(|E|)) — same skew bound as triangle
+   counting.
 2. **Supernode edges**: two cliques overlap in ≥3 vertices ⇔ they
    share a sorted 3-subset ⇒ explode each clique's four 3-subsets and
    equi-join on the subset key (SURVEY.md §2 J6: explode→groupBy pair
@@ -29,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
-from hoover_spark.operators.triangles import oriented_edges
+from hoover_spark.operators.triangles import oriented_edges, triangles
 from hoover_spark.operators.wcc import wcc
 
 
@@ -66,18 +67,7 @@ def four_cliques(graph: Graph) -> DataFrame:
     pinned in the cache manager across calls)."""
     e = oriented_edges(graph).localCheckpoint()
     # triangles with orientation order u→v→w
-    tri = (
-        e.alias("ab")
-        .join(e.alias("bc"), F.col("ab.dst") == F.col("bc.src"))
-        .select(
-            F.col("ab.src").alias("u"), F.col("ab.dst").alias("v"), F.col("bc.dst").alias("w")
-        )
-        .join(
-            e.select(F.col("src").alias("u"), F.col("dst").alias("w")),
-            on=["u", "w"],
-            how="left_semi",
-        )
-    )
+    tri = triangles(e)
     # extend with x: w→x edge plus u→x and v→x closing edges
     quads = (
         tri.join(e.select(F.col("src").alias("w"), F.col("dst").alias("x")), on="w")

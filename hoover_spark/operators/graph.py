@@ -93,12 +93,6 @@ class Graph:
             )
         return self._cache["vertices"]
 
-    def out_degrees(self) -> DataFrame:
-        """(vid, out_deg) over the directed edge list."""
-        return self.cleaned().groupBy(F.col("src").alias("vid")).agg(
-            F.count(F.lit(1)).alias("out_deg")
-        )
-
     def degrees(self) -> DataFrame:
         """(vid, degree) over the undirected (symmetric) view."""
         sym = self._cache.get("sym_part")
@@ -106,17 +100,6 @@ class Graph:
             sym = self.symmetric()
         return sym.groupBy(F.col("src").alias("vid")).agg(
             F.count(F.lit(1)).alias("degree")
-        )
-
-    def partitioned(self) -> "Graph":
-        """Repartition edges by hash(src) — the Spark analogue of the
-        reference's static PE ownership (``VERTEX_ID_PE``,
-        ``inc/hvr_common.h:53-67``). Iterative kernels reuse this
-        partitioning across joins so the big side does not re-shuffle
-        every iteration."""
-        return Graph(
-            self.edges.repartition(self.num_partitions, "src"),
-            num_partitions=self.num_partitions,
         )
 
     # ------------------------------------------------------------------
@@ -155,10 +138,6 @@ class Graph:
 
     def clean_edge_views(self) -> list[DataFrame]:
         return [self.clean_edges()]
-
-    def persist(self) -> "Graph":
-        self.edges = self.edges.persist()
-        return self
 
     def unpersist(self) -> None:
         """Release every cached/persisted derived view."""

@@ -29,18 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def grid_cell(cols: list[str], cell: float):
-    """Integer grid coordinates — the ``actor_to_partition`` analogue."""
-    return [F.floor(F.col(c) / F.lit(cell)).cast("long").alias(f"_g{i}")
-            for i, c in enumerate(cols)]
-
-
-def _cell_key(gcols):
-    # pack grid coords into one join key (strings are fine: the join is
-    # an equi-join on a hash; 3 bigints would work equally)
-    return F.concat_ws(":", *[g.cast("string") for g in gcols])
-
-
 def implicit_edges(
     points: DataFrame,
     id_col: str,

@@ -1,4 +1,4 @@
-"""Triangle counting via degree-ordered edge orientation.
+"""Triangle listing via degree-ordered edge orientation.
 
 Reference semantics: ``test/count_triangles.c:90-133`` — each vertex
 counts wedges that close, attributing every triangle exactly once to
@@ -7,18 +7,26 @@ its minimum-id vertex, then a global sum (``:234-244``).
 Spark-first design (the standard distributed algorithm; north rule
 demands "degree-ordered edge iteration"):
 
-1. orient every undirected edge from the lower-rank endpoint to the
-   higher-rank endpoint, where rank = (degree, vid) — each vertex's
-   out-degree in the oriented graph is O(sqrt(|E|)), which bounds the
-   wedge-join blow-up on skewed graphs (the reason plain min-id
-   orientation is not enough at 100 TB);
-2. wedges: self-join oriented edges on the middle vertex
-   (``e1.dst == e2.src``);
-3. close: semi-join wedge (u,w) pairs against the oriented edge set.
+1. :func:`_orient` — orient every undirected edge from the lower-rank
+   endpoint to the higher-rank endpoint, where rank = (degree, vid):
+   each vertex's out-degree in the oriented graph is O(sqrt(|E|)),
+   which bounds the wedge-join blow-up on skewed graphs (the reason
+   plain min-id orientation is not enough at 100 TB);
+2. :func:`triangles` — the one listing primitive: wedges by
+   self-joining the oriented edges on the middle vertex
+   (``a.dst == b.src``), closed by a semi-join of the wedge (u,w)
+   pairs against the same edge set.
 
-Every triangle {u,v,w} is counted exactly once (its unique orientation
-u→v→w with u→w). All joins are equi-joins Catalyst executes as
-sort-merge/shuffled-hash; AQE splits skewed partitions.
+Every triangle {u,v,w} is listed exactly once (its unique orientation
+u→v→w with u→w), for ANY acyclic orientation. Every triangle kernel
+lists through :func:`triangles`: :func:`triangle_count`,
+:func:`per_vertex_triangles` (and :func:`clustering_coefficient` on
+top), :func:`edge_support` (k-truss peeling, :func:`edge_jaccard`),
+case 3 of the streaming :func:`triangle_delta`, ``four_cliques`` in
+:mod:`hoover_spark.operators.communities` and the ``triangle_total``
+contract query — so a different listing strategy changes one function.
+All joins are equi-joins Catalyst executes as sort-merge/shuffled-hash;
+AQE splits skewed partitions.
 """
 
 from __future__ import annotations
@@ -28,10 +36,9 @@ from pyspark.sql import DataFrame, functions as F
 from hoover_spark.operators.graph import Graph
 
 
-def oriented_edges(graph: Graph) -> DataFrame:
-    """Orient undirected edges low→high by (degree, vid) rank."""
-    canon = graph.canonical()
-    deg = graph.degrees()
+def _orient(canon: DataFrame, deg: DataFrame) -> DataFrame:
+    """Orient the canonical edges ``canon(src, dst)`` low→high by
+    (degree, vid) rank, with degrees from ``deg(vid, degree)``."""
     e = (
         canon.join(deg.withColumnRenamed("vid", "src").withColumnRenamed("degree", "sdeg"), on="src")
         .join(deg.withColumnRenamed("vid", "dst").withColumnRenamed("degree", "ddeg"), on="dst")
@@ -45,18 +52,62 @@ def oriented_edges(graph: Graph) -> DataFrame:
     )
 
 
+def oriented_edges(graph: Graph) -> DataFrame:
+    """Orient undirected edges low→high by (degree, vid) rank."""
+    return _orient(graph.canonical(), graph.degrees())
+
+
+def triangles(o: DataFrame) -> DataFrame:
+    """Columns ``u, v, w`` — every triangle of the acyclic orientation
+    ``o(src, dst)`` exactly once, as its path u→v→w closed by u→w."""
+    return (
+        o.alias("a")
+        .join(o.alias("b"), F.col("a.dst") == F.col("b.src"))
+        .select(F.col("a.src").alias("u"), F.col("a.dst").alias("v"), F.col("b.dst").alias("w"))
+        .join(
+            o.select(F.col("src").alias("u"), F.col("dst").alias("w")),
+            on=["u", "w"],
+            how="left_semi",
+        )
+    )
+
+
+def _corners(t: DataFrame, cols: tuple[str, str, str] = ("u", "v", "w")) -> DataFrame:
+    """``vid`` — the three corners of every triangle row of ``t``."""
+    return (
+        t.select(F.col(cols[0]).alias("vid"))
+        .unionAll(t.select(F.col(cols[1]).alias("vid")))
+        .unionAll(t.select(F.col(cols[2]).alias("vid")))
+    )
+
+
+def edge_support(alive: DataFrame) -> DataFrame:
+    """Per-edge triangle support ``(src, dst, support)`` of the
+    canonical (src<dst) edge set ``alive``; edges in no triangle get no
+    row (support 0). The orientation ranks by degree within ``alive``
+    itself, so a peeled subset is oriented by its own degrees."""
+    deg = (
+        alive.select(F.col("src").alias("vid"))
+        .unionAll(alive.select(F.col("dst").alias("vid")))
+        .groupBy("vid")
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
+    tris = triangles(_orient(alive, deg))
+    # each triangle supports its 3 edges; re-canonicalize by vid (the
+    # orientation above is by degree rank, not id order)
+    sides = None
+    for x, y in (("u", "v"), ("u", "w"), ("v", "w")):
+        s = tris.select(
+            F.least(x, y).alias("src"), F.greatest(x, y).alias("dst")
+        )
+        sides = s if sides is None else sides.unionAll(s)
+    return sides.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("support"))
+
+
 def triangle_count(graph: Graph) -> int:
     """Total number of distinct triangles."""
     e = oriented_edges(graph).persist()
-    wedges = e.alias("a").join(
-        e.alias("b"), F.col("a.dst") == F.col("b.src")
-    ).select(F.col("a.src").alias("u"), F.col("a.dst").alias("v"), F.col("b.dst").alias("w"))
-    closed = wedges.join(
-        e.select(F.col("src").alias("u"), F.col("dst").alias("w")),
-        on=["u", "w"],
-        how="left_semi",
-    )
-    n = closed.count()
+    n = triangles(e).count()
     e.unpersist()
     return n
 
@@ -65,28 +116,11 @@ def per_vertex_triangles(graph: Graph) -> DataFrame:
     """(vid, triangles) — triangles through each vertex (each triangle
     contributes to all three corners; reference stores the per-vertex
     count in feature 0, ``test/count_triangles.c:122-126``)."""
-    e = oriented_edges(graph).persist()
-    wedges = e.alias("a").join(
-        e.alias("b"), F.col("a.dst") == F.col("b.src")
-    ).select(
-        F.col("a.src").alias("u"), F.col("a.dst").alias("v"), F.col("b.dst").alias("w")
-    )
-    tris = wedges.join(
-        e.select(F.col("src").alias("u"), F.col("dst").alias("w")),
-        on=["u", "w"],
-        how="left_semi",
-    )
-    per_corner = (
-        tris.select(F.col("u").alias("vid"))
-        .unionAll(tris.select(F.col("v").alias("vid")))
-        .unionAll(tris.select(F.col("w").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count(F.lit(1)).alias("triangles"))
-    )
-    out = graph.vertices().join(per_corner, on="vid", how="left").select(
+    tris = triangles(oriented_edges(graph).persist())
+    per_corner = _corners(tris).groupBy("vid").agg(F.count(F.lit(1)).alias("triangles"))
+    return graph.vertices().join(per_corner, on="vid", how="left").select(
         "vid", F.coalesce("triangles", F.lit(0)).alias("triangles")
     )
-    return out
 
 
 def triangle_delta(
@@ -113,7 +147,7 @@ def triangle_delta(
        (v,w) ∈ old;
     2. two new edges (c,u), (c,v): one wedge per such triangle (its
        unique new-new center c), closed by an OLD edge (u,v);
-    3. three new edges: plain oriented count inside the batch.
+    3. three new edges: :func:`triangles` over the batch itself.
 
     Scale shape: every join against old adjacency runs per view with
     the batch-derived side explicitly ``broadcast()`` as the build side
@@ -168,33 +202,14 @@ def triangle_delta(
     )
     tri2 = scan_old(wedge2, "u", "v", ["c", "u", "v"])
 
-    # case 3 — all three edges new (u<v<w: each triangle once)
-    p, q = newU.alias("p"), newU.alias("q")
-    tri3 = (
-        p.join(q, F.col("p.dst") == F.col("q.src"))
-        .select(
-            F.col("p.src").alias("u"),
-            F.col("p.dst").alias("v"),
-            F.col("q.dst").alias("w"),
-        )
-        .join(
-            newU.select(F.col("src").alias("u"), F.col("dst").alias("w")),
-            on=["u", "w"],
-            how="left_semi",
-        )
-    )
-
-    def corners(t: DataFrame, cols: tuple[str, str, str]) -> DataFrame:
-        return (
-            t.select(F.col(cols[0]).alias("vid"))
-            .unionAll(t.select(F.col(cols[1]).alias("vid")))
-            .unionAll(t.select(F.col(cols[2]).alias("vid")))
-        )
+    # case 3 — all three edges new: the batch oriented by id (src<dst)
+    # is acyclic, so the shared listing counts each triangle once
+    tri3 = triangles(newU)
 
     allc = (
-        corners(tri1, ("u", "v", "w"))
-        .unionAll(corners(tri2, ("c", "u", "v")))
-        .unionAll(corners(tri3, ("u", "v", "w")))
+        _corners(tri1)
+        .unionAll(_corners(tri2, ("c", "u", "v")))
+        .unionAll(_corners(tri3))
     )
     return allc.groupBy("vid").agg(F.count(F.lit(1)).alias("d"))
 
@@ -258,14 +273,12 @@ def edge_jaccard(graph: Graph) -> DataFrame:
     oracle after rounding.
 
     Plan: the degree-oriented O(|E|^1.5) wedge join k-truss peels
-    with (``ktruss._edge_support`` — forward fan-out bounded by
-    O(√|E|), the hub-skew guard) left-joined back to the canonical
-    edges, plus two O(|V|) degree joins. No new shuffle shape.
+    with (:func:`edge_support` — forward fan-out bounded by O(√|E|),
+    the hub-skew guard) left-joined back to the canonical edges, plus
+    two O(|V|) degree joins. No new shuffle shape.
     """
-    from hoover_spark.operators.ktruss import _edge_support
-
     canon = graph.canonical()
-    common = _edge_support(canon).withColumnRenamed("support", "common")
+    common = edge_support(canon).withColumnRenamed("support", "common")
     deg = graph.degrees()
     c = F.coalesce(F.col("common"), F.lit(0)).cast("long")
     u = (F.col("deg_s") + F.col("deg_d") - c).cast("long")

@@ -9,6 +9,7 @@ machine the driver runs on.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -38,17 +39,39 @@ _DEFAULTS = {
 }
 
 
-def _default_driver_memory() -> str:
-    """Half of physical memory, between 1g and 48g: the other half stays
-    free for Python workers, tmpfs spill and the OS."""
+#: KiB per unit of a JVM memory string (``spark.driver.memory``'s
+#: default unit is MiB)
+_KIB = {"k": 1, "m": 1024, "g": 1024**2, "t": 1024**3}
+
+
+def _mem_total_kb() -> int | None:
     try:
         with open("/proc/meminfo") as f:
-            total_kb = next(
+            return next(
                 int(line.split()[1]) for line in f if line.startswith("MemTotal:")
             )
     except (OSError, StopIteration):
-        return "4g"
-    return f"{max(1024, min(total_kb // 1024 // 2, 48 * 1024))}m"
+        return None
+
+
+def _driver_memory() -> str:
+    """``$HOOVER_SPARK_DRIVER_MEM``, else half of physical memory between
+    1g and 48g: the other half stays free for Python workers, tmpfs
+    spill and the OS. An override larger than physical memory raises
+    ``ValueError`` instead of letting the OOM killer take the JVM."""
+    total_kb = _mem_total_kb()
+    mem = os.environ.get("HOOVER_SPARK_DRIVER_MEM")
+    if not mem:
+        if total_kb is None:
+            return "4g"
+        return f"{max(1024, min(total_kb // 1024 // 2, 48 * 1024))}m"
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", mem.strip().lower())
+    if m and total_kb is not None and int(m[1]) * _KIB[m[2] or "m"] > total_kb:
+        raise ValueError(
+            f"HOOVER_SPARK_DRIVER_MEM={mem} exceeds physical memory "
+            f"(MemTotal {total_kb // 1024} MiB)"
+        )
+    return mem
 
 
 def get_spark(
@@ -64,13 +87,15 @@ def get_spark(
     bench scale each shuffle partition stays well under executor memory;
     on a real cluster this is set to ~2-3x total executor cores instead.
     The driver heap is ``$HOOVER_SPARK_DRIVER_MEM`` or half of physical
-    memory. Spill goes to ``spark.local.dir`` from ``extra_conf``, else
+    memory; an override above physical memory raises ``ValueError``.
+    Spill goes to ``spark.local.dir`` from ``extra_conf``, else
     ``$SPARK_LOCAL_DIRS``, else ``/dev/shm/spark-local``.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)
+    driver_memory = _driver_memory()
 
     # Shuffle/spill files on tmpfs when nothing else is asked for: a
     # virtual disk has multi-x latency variance; a real cluster pairs
@@ -93,7 +118,7 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cores))
-        .config("spark.driver.memory", os.environ.get("HOOVER_SPARK_DRIVER_MEM") or _default_driver_memory())
+        .config("spark.driver.memory", driver_memory)
     )
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)

@@ -51,11 +51,6 @@ def _name_expr(i: Column) -> Column:
     return F.concat(F.lit("f"), i.cast("string"))
 
 
-def _ref_token_expr(j: Column) -> Column:
-    """Canonical 'module/name' token identifying the *target* file."""
-    return F.concat(_module_expr(j), F.lit("/"), _name_expr(j))
-
-
 def _target_index(i: Column, t: int, n_rows: int) -> Column:
     """t-th reference target of row i: j = (i*31 + 17*(t+1)) % N, +1 if self."""
     j = F.pmod(i * 31 + F.lit(17 * (t + 1)), F.lit(n_rows))

@@ -45,12 +45,9 @@ touches only mutated adjacency rows, ``src/hoover.cpp:450-600``).
 
 Layout safety (r3 ADVICE): ``store_meta.json`` pins ``n_buckets`` for
 the lifetime of a work_dir (a different value would silently remap
-bucket ids and break dedup), and a legacy flat (non-bucketed) edge
-store is rejected loudly instead of being silently ignored. A value
-*adopted* for a pre-metadata store is recorded with
-``provenance: adopted`` and re-warned on every construction until
-confirmed (``confirm_buckets=True``) — a guessed value is never
-silently promoted to pinned truth (r4 ADVICE).
+bucket ids and break dedup). A legacy flat (non-bucketed) edge store
+and a bucketed store without ``store_meta.json`` are both rejected
+loudly: neither records the bucket count its dedup depends on.
 
 STATE writes are O(changed), not O(|V|) (r4 scale item — the smaller
 sibling of the r3 full-store graph rebuild): each micro-batch persists
@@ -117,7 +114,6 @@ class IncrementalGraphState:
         compact_delta_frac: float = 0.125,
         snapshot_frac: float = 0.25,
         snapshot_floor: int = 4096,
-        confirm_buckets: bool = False,
     ) -> None:
         assert kernel in ("wcc", "pagerank", "triangles", "sssp")
         self.spark = spark
@@ -129,7 +125,6 @@ class IncrementalGraphState:
         self.compact_delta_frac = compact_delta_frac
         self.snapshot_frac = snapshot_frac
         self.snapshot_floor = snapshot_floor
-        self.confirm_buckets = confirm_buckets
         self.edges_dir = os.path.join(work_dir, "edges")
         self.state_dir = os.path.join(work_dir, "state")
         self.state_deltas_dir = os.path.join(work_dir, "state_deltas")
@@ -199,52 +194,19 @@ class IncrementalGraphState:
                     "ids and breaks store dedup — reuse the stored value"
                 )
             if meta.get("provenance") == "adopted":
-                # an adopted (guessed) value is never silently promoted
-                # to pinned truth (r4 ADVICE): keep warning on every
-                # construction until the caller confirms it
-                if getattr(self, "confirm_buckets", False):
-                    meta["provenance"] = "confirmed"
-                    with open(meta_path, "w") as f:
-                        json.dump(meta, f)
-                else:
-                    import warnings
-
-                    warnings.warn(
-                        f"n_buckets={stored} for {self.edges_dir} was ADOPTED "
-                        "for a pre-metadata store, not recorded at write time "
-                        "— if the store was written with a different value, "
-                        "dedup idempotency is broken; pass "
-                        "confirm_buckets=True once verified to silence this",
-                        RuntimeWarning,
-                        stacklevel=2,
-                    )
-        else:
-            dirs = self._bucket_dirs()
-            if dirs:
-                max_b = max(int(n.split("=", 1)[1]) for n in dirs)
-                if max_b >= self.n_buckets:
-                    raise ValueError(
-                        f"edge store {self.edges_dir} holds bucket={max_b} ≥ "
-                        f"n_buckets={self.n_buckets}: the store was written "
-                        "with a larger bucket count (no store_meta.json to "
-                        "confirm) — pass the original n_buckets"
-                    )
-                import warnings
-
-                warnings.warn(
-                    f"adopting n_buckets={self.n_buckets} for a pre-metadata "
-                    f"store at {self.edges_dir} (max observed bucket {max_b}); "
-                    "if the store was written with a different value, dedup "
-                    "idempotency is broken — verify before trusting",
-                    RuntimeWarning,
-                    stacklevel=2,
+                raise ValueError(
+                    f"n_buckets={stored} for {self.edges_dir} was adopted for a "
+                    "pre-metadata store, not recorded at write time — migrate "
+                    "the store or start a fresh work_dir"
                 )
-                with open(meta_path, "w") as f:
-                    json.dump(
-                        {"n_buckets": self.n_buckets, "provenance": "adopted"},
-                        f,
-                    )
-                return
+        elif self._bucket_dirs():
+            raise ValueError(
+                f"edge store {self.edges_dir} has bucket directories but no "
+                "store_meta.json — this layout predates the pinned bucket "
+                "count, so dedup cannot trust any n_buckets; migrate it or "
+                "start a fresh work_dir"
+            )
+        else:
             with open(meta_path, "w") as f:
                 json.dump({"n_buckets": self.n_buckets}, f)
 

@@ -109,6 +109,27 @@ def per_vertex_triangles_oracle(pairs: list[tuple[int, int]]) -> dict[int, int]:
     return out
 
 
+def four_cliques_oracle(pairs: list[tuple[int, int]]) -> set[tuple[int, int, int, int]]:
+    """Brute-force 4-cliques as id-sorted vertex tuples."""
+    adj: dict[int, set[int]] = defaultdict(set)
+    for s, d in pairs:
+        if s != d:
+            adj[s].add(d)
+            adj[d].add(s)
+    out = set()
+    for u in adj:
+        for v in adj[u]:
+            if v <= u:
+                continue
+            for w in adj[u] & adj[v]:
+                if w <= v:
+                    continue
+                for x in adj[u] & adj[v] & adj[w]:
+                    if x > w:
+                        out.add((u, v, w, x))
+    return out
+
+
 def min_label_propagation_oracle(
     pairs: list[tuple[int, int]], n_iter: int
 ) -> dict[int, int]:

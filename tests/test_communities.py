@@ -9,7 +9,8 @@ from itertools import combinations
 
 from hoover_spark.operators.communities import clique_percolation_communities, four_cliques
 from hoover_spark.operators.graph import graph_from_pairs
-from hoover_spark.sources.synthetic import two_cliques
+from hoover_spark.sources.synthetic import edges_to_pairs, rmat_graph, two_cliques
+from tests.oracles import four_cliques_oracle
 
 
 def _clique_edges(vs):
@@ -26,6 +27,15 @@ def test_four_cliques_single(spark):
 def test_four_cliques_in_k5(spark):
     g = graph_from_pairs(spark, _clique_edges([0, 1, 2, 3, 4]))
     assert four_cliques(g).count() == 5  # C(5,4)
+
+    # skewed input, where the degree orientation decides which corner
+    # extends: each clique listed exactly once, none missed
+    g = rmat_graph(spark, scale=6)
+    rows = [tuple(sorted(r)) for r in four_cliques(g).collect()]
+    want = four_cliques_oracle(edges_to_pairs(g))
+    assert len(want) > 0
+    assert len(rows) == len(set(rows))
+    assert set(rows) == want
 
 
 def test_two_disjoint_cliques_two_communities(spark):

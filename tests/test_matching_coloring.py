@@ -163,22 +163,27 @@ def jaccard_oracle(pairs):
     return out
 
 
-def test_edge_jaccard_two_cliques(spark):
-    g = two_cliques(spark, k=4, bridge=True)
-    pairs = edges_to_pairs(g)
+def _check_edge_jaccard(g):
     rows = {
         (r.src, r.dst): (r.common, r.union_size, r.jaccard)
         for r in edge_jaccard(g).collect()
     }
-    ora = jaccard_oracle(pairs)
+    ora = jaccard_oracle(edges_to_pairs(g))
     assert rows.keys() == ora.keys()
     for e, (c, u, j) in ora.items():
         rc, ru, rj = rows[e]
         assert (rc, ru) == (c, u), e
         assert abs(rj - j) < 1e-12, e
+    return rows
+
+
+def test_edge_jaccard_two_cliques(spark):
+    rows = _check_edge_jaccard(two_cliques(spark, k=4, bridge=True))
     # clique-internal edges beat the bridge
     bridge = [e for e in rows if rows[e][0] == 0]
     assert bridge and all(rows[e][2] == 0.0 for e in bridge)
+    # skewed input: hub edges exercise the degree orientation
+    _check_edge_jaccard(rmat_graph(spark, scale=6))
 
 
 def test_edge_jaccard_rmat(spark):

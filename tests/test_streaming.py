@@ -261,8 +261,9 @@ def test_compaction_folds_delta_into_base(spark, tmp_path):
 
 def test_store_layout_validation(spark, tmp_path):
     """n_buckets is pinned in store_meta.json (changing it silently
-    remaps bucket ids → broken dedup) and a legacy flat store is
-    rejected loudly (r3 ADVICE medium)."""
+    remaps bucket ids → broken dedup); a legacy flat store and a
+    bucketed store without store_meta.json are rejected loudly (r3
+    ADVICE medium)."""
     import pytest
 
     from hoover_spark.streaming.ingest import IncrementalGraphState
@@ -283,6 +284,11 @@ def test_store_layout_validation(spark, tmp_path):
     spark.createDataFrame([(1, 2)], "src long, dst long").coalesce(1).write.parquet(flat)
     with pytest.raises(ValueError, match="non-bucketed"):
         IncrementalGraphState(spark, work2, kernel="wcc", n_buckets=16)
+
+    # pre-metadata bucketed layout: bucket= dirs but no store_meta.json
+    os.remove(os.path.join(work, "store_meta.json"))
+    with pytest.raises(ValueError, match="store_meta.json"):
+        IncrementalGraphState(spark, work, kernel="wcc", n_buckets=16)
 
 
 def test_state_write_is_o_changed(spark, tmp_path):

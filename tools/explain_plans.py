@@ -38,7 +38,7 @@ def main():
     from hoover_spark.session import get_spark
     from hoover_spark.sources.repos import ref_edges, repos_table
 
-    spark = get_spark("explain", cores=8)
+    spark = get_spark("explain")
     sf = "/root/testdata/sf0.01"
 
     sections: list[tuple[str, str]] = []
@@ -176,14 +176,14 @@ def main():
     from hoover_spark.functions.text import tf_idf_top_terms
     from hoover_spark.operators.hits import hits
     from hoover_spark.operators.kcore import kcore
-    from hoover_spark.operators.ktruss import _edge_support
     from hoover_spark.operators.ppr import personalized_pagerank
+    from hoover_spark.operators.triangles import edge_support
 
     sections.append(("hits (2 iterations, L2 norm in-plan)", plan_of(hits(g, n_iterations=2))))
     sections.append(("kcore k=3 (result after peel fixpoint)", plan_of(kcore(g, k=3))))
     sections.append(
         ("ktruss support round (oriented wedge + 3-edge explode)",
-         plan_of(_edge_support(g.canonical())))
+         plan_of(edge_support(g.canonical())))
     )
     seeds = verts.where(F.col("vid") % 11 == 0)
     sections.append(
