@@ -154,16 +154,13 @@ def main() -> None:
 
     def q_wcc():
         # cold-graph recipe: 3-level iterated star contraction seed
-        # (all lazy, inside round 1's plan) + hash-min with pointer
-        # jumping — 6 rounds on this graph vs 14 single-level, and at
-        # bench scale wall ≈ rounds x scheduling floor. Level sweet
-        # spot measured: lv4+ trades rounds for in-plan shuffle depth
-        # and loses.
+        # (all lazy, inside round 1's plan) + hash-min with the
+        # default adaptive pointer jumping. On repos_table(300000)
+        # (450,775 edges, 4 vCPU): 5 rounds and 28.5 s median, vs
+        # 29.5 s with the jump pinned on every round (also 5 rounds)
+        # and 39.6 s / 21 rounds without contraction.
         loop = IterationLoop(spark, kernel="wcc", max_iterations=100)
-        wcc(
-            state["graph"], spark=spark, loop=loop,
-            pre_contract=True, pre_contract_levels=3, pointer_jumping=True,
-        ).count()
+        wcc(state["graph"], spark=spark, loop=loop, pre_contract=True).count()
         extras["wcc_iters"] = len(loop.metrics)
 
     def q_triangles():

@@ -59,9 +59,9 @@ class IterationLoop:
     max_iterations: int = 200
     metrics: list[dict] = field(default_factory=list)
     #: kernel-published extras riding the run (no extra jobs): e.g.
-    #: wcc's ``changed_rows`` lazy view + ``n_vertices`` (track_changes),
-    #: pagerank's final ``rank_sum`` (from the per-iteration Observation)
-    #: — the streaming path uses these to keep its durable state writes
+    #: wcc's ``n_vertices`` and, on a warm start, its ``changed_rows``
+    #: lazy view, pagerank's final ``rank_sum`` (from the per-iteration
+    #: Observation) — the streaming path uses these to keep its durable state writes
     #: O(changed) and its bookkeeping O(1).
     kernel_state: dict = field(default_factory=dict)
     _persisted: list[DataFrame] = field(default_factory=list, repr=False)

@@ -52,8 +52,8 @@ loudly: neither records the bucket count its dedup depends on.
 STATE writes are O(changed), not O(|V|) (r4 scale item — the smaller
 sibling of the r3 full-store graph rebuild): each micro-batch persists
 only the state rows the kernel actually changed (wcc's
-``track_changes`` carried-initial-label view — the reference ships
-only ``needs_send`` vertices, ``inc/hvr_vertex.h:79-86``) as a
+``changed_rows`` view, published on every warm start — the reference
+ships only ``needs_send`` vertices, ``inc/hvr_vertex.h:79-86``) as a
 sequenced delta under ``state_deltas/seq=N``, plus a periodic full
 snapshot once accumulated deltas cross ``snapshot_frac`` of the state
 (bounded resume cost). ``_load_state`` composes snapshot + replay
@@ -116,6 +116,13 @@ class IncrementalGraphState:
         snapshot_floor: int = 4096,
     ) -> None:
         assert kernel in ("wcc", "pagerank", "triangles", "sssp")
+        if "pre_contract" in (kernel_kwargs or {}):
+            # contraction seeds only a cold wcc start (it sweeps the
+            # whole edge store); reject it before any batch is stored
+            raise ValueError(
+                "kernel_kwargs may not set pre_contract: the warm "
+                "per-batch path cannot use the full-store contraction"
+            )
         self.spark = spark
         self.work_dir = work_dir
         self.kernel = kernel
@@ -555,7 +562,6 @@ class IncrementalGraphState:
                     loop=loop,
                     initial_labels=warm,
                     initial_frontier=fresh_verts,
-                    track_changes=True,
                     **self.kernel_kwargs,
                 )
                 # durable write = ONLY the rows the kernel changed plus

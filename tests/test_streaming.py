@@ -546,20 +546,17 @@ def test_sssp_state_write_o_changed_and_resume(spark, tmp_path):
 
 
 def test_wcc_stream_pre_contract_kwargs(spark, tmp_path):
-    """kernel_kwargs carries pre_contract(+levels) through the streaming
-    warm path: the label-aware contraction composes with the per-batch
-    initial_labels/initial_frontier (wcc.py's lowered-seed frontier
-    expansion) and converges to the identical batch answer."""
-    g = rmat_graph(spark, scale=7, edge_factor=4)
-    drops = str(tmp_path / "drops")
-    os.makedirs(drops)
-    _write_drops(spark, g, drops, k=3)
+    """kernel_kwargs may not carry pre_contract: contraction seeds only a
+    cold start, so the state rejects it at construction — before a cold
+    first batch could be stored and the warm second batch fail."""
+    import pytest
 
-    state = run_stream(
-        spark, drops, str(tmp_path / "work"), kernel="wcc", num_partitions=8,
-        kernel_kwargs={"pre_contract": True, "pre_contract_levels": 2},
-    )
-    got = {r["vid"]: r["label"] for r in state.state().collect()}
-    want = {r["vid"]: r["label"] for r in wcc(g).collect()}
-    assert got == want
-    assert state.batches_applied == 3
+    from hoover_spark.streaming.ingest import IncrementalGraphState
+
+    work = tmp_path / "work"
+    with pytest.raises(ValueError, match="pre_contract"):
+        IncrementalGraphState(
+            spark, str(work), kernel="wcc",
+            kernel_kwargs={"pre_contract": True},
+        )
+    assert not work.exists()

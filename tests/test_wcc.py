@@ -128,40 +128,36 @@ def test_self_loop_only_vertex_survives_caching(spark):
 
 
 def test_adaptive_pointer_jumping_matches_pinned_modes(spark):
-    """'auto' must produce identical labels to both pinned modes, on a
-    long chain (jump pays to the end) and on a clique-ish graph (jump
-    gain hits zero early and the self-join is dropped)."""
+    """The adaptive jump (True) must produce identical labels to the
+    pinned no-jump mode (False), on a long chain (jump pays to the end)
+    and on a clique-ish graph (jump gain hits zero early and the
+    self-join is dropped)."""
     from hoover_spark.sources.synthetic import path_graph, two_cliques
 
     for g_fn in (lambda: path_graph(spark, 65), lambda: two_cliques(spark, k=5, bridge=True)):
-        want = labels_of(wcc(g_fn(), pointer_jumping=True))
-        assert labels_of(wcc(g_fn(), pointer_jumping="auto")) == want
-        assert labels_of(wcc(g_fn(), pointer_jumping=False)) == want
-
-
-def test_pointer_jumping_rejects_truthy_nonbool(spark):
-    """1 / numpy truthy values must raise, not silently disable the
-    adaptive jump (ADVICE r2)."""
-    g = path_graph(spark, 8)
-    with pytest.raises(ValueError, match="pointer_jumping"):
-        wcc(g, pointer_jumping=1)
+        want = labels_of(wcc(g_fn(), pointer_jumping=False))
+        assert labels_of(wcc(g_fn(), pointer_jumping=True)) == want
 
 
 def test_pre_contract_seeding_matches_plain(spark):
-    """Seeding hash-min from the per-partition union-find star forest
-    must converge to the identical labels as plain hash-min and the
-    union-find oracle (and in no more rounds) — including a vertex
-    whose only edge is a self-loop, which never reaches the symmetric
-    edge set the contraction sweeps."""
+    """Seeding hash-min from the iterated per-partition union-find star
+    forest must converge to the identical labels as plain hash-min and
+    the union-find oracle (and in no more rounds; strictly fewer on the
+    hub-heavy RMAT-10 graph, where a high-degree vertex split across k
+    partitions carries k roots that one level-2 task merges at once) —
+    including a vertex whose only edge is a self-loop, which never
+    reaches the symmetric edge set the contraction sweeps."""
     from hoover_spark.operators.graph import graph_from_pairs
     from hoover_spark.plans.iteration import IterationLoop
 
+    hub_heavy = rmat_graph(spark, scale=10, edge_factor=4)
     graphs = (
         path_graph(spark, 64),
         path_graph(spark, 50),
         two_cliques(spark, k=4, bridge=False),
         rmat_graph(spark, scale=8, edge_factor=4),
         graph_from_pairs(spark, [(0, 1), (1, 2), (5, 5)]),
+        hub_heavy,
     )
     for g in graphs:
         plain_loop = IterationLoop(g.edges.sparkSession, kernel="wcc")
@@ -172,96 +168,20 @@ def test_pre_contract_seeding_matches_plain(spark):
         want = {r["vid"]: r["vid"] for r in g.vertices().collect()}
         want.update(union_find_components(edges_to_pairs(g)))
         assert seeded == plain == want
-        assert len(seeded_loop.metrics) <= len(plain_loop.metrics)
+        if g is hub_heavy:
+            assert len(seeded_loop.metrics) < len(plain_loop.metrics)
+        else:
+            assert len(seeded_loop.metrics) <= len(plain_loop.metrics)
 
 
 def test_pre_contract_with_frontier_is_sound(spark):
-    """r3 ADVICE: contraction-lowered seeds OUTSIDE the caller's
-    frontier must still be broadcast. A chain whose frontier is only
-    the min vertex would previously converge with stale labels on the
-    cross-partition tail; the lowered-seed frontier expansion fixes
-    it."""
-    from hoover_spark.operators.graph import graph_from_pairs
-
-    # 24-vertex chain split over 8 partitions: contraction is certain
-    # to lower seeds in partitions the 1-vertex frontier never touches
-    pairs = [(i, i + 1) for i in range(24)]
-    g = graph_from_pairs(spark, pairs, num_partitions=8)
+    """Contraction seeds only a cold start: combining it with a warm
+    start (initial_frontier or initial_labels) raises instead of
+    sweeping the full edge set on every incremental call."""
+    g = path_graph(spark, 8)
     frontier = spark.createDataFrame([(0,)], "vid long")
-    got = labels_of(wcc(g, pre_contract=True, initial_frontier=frontier))
-    assert got == {v: 0 for v in range(25)}
-
-
-def test_pre_contract_warm_start_cuts_rounds(spark):
-    """VERDICT r3 #6: a warm restart after a chain-heavy batch benefits
-    from label-aware local contraction — identical labels, fewer
-    message rounds (the new chain collapses in the zero-shuffle sweep
-    instead of O(log chain) hash-min rounds)."""
-    from pyspark.sql import functions as F
-
-    from hoover_spark.operators.graph import graph_from_pairs
-    from hoover_spark.plans.iteration import IterationLoop
-
-    # converged old graph: component {0, 1}
-    old_pairs = [(0, 1)]
-    # incremental batch: a 256-vertex chain hanging off vertex 0
-    chain = [(0, 1000)] + [(1000 + i, 1001 + i) for i in range(255)]
-    g = graph_from_pairs(spark, old_pairs + chain, num_partitions=8)
-    prev = spark.createDataFrame([(0, 0), (1, 0)], "vid long, label long")
-    new_verts = spark.createDataFrame(
-        [(v, v) for v in range(1000, 1256)], "vid long, label long"
-    )
-    warm = prev.unionByName(new_verts)
-    endpoints = sorted({v for e in chain for v in e})
-    frontier = spark.createDataFrame([(v,) for v in endpoints], "vid long")
-
-    plain_loop = IterationLoop(spark, kernel="wcc")
-    seeded_loop = IterationLoop(spark, kernel="wcc")
-    plain = labels_of(
-        wcc(g, loop=plain_loop, initial_labels=warm, initial_frontier=frontier)
-    )
-    seeded = labels_of(
-        wcc(
-            g,
-            loop=seeded_loop,
-            initial_labels=warm,
-            initial_frontier=frontier,
-            pre_contract=True,
-        )
-    )
-    want = {v: 0 for v in [0, 1] + list(range(1000, 1256))}
-    assert plain == want
-    assert seeded == want
-    assert len(seeded_loop.metrics) < len(plain_loop.metrics)
-
-
-def test_multi_level_pre_contract_matches_and_cuts_rounds(spark):
-    """pre_contract_levels > 1 contracts the star forest again (iterated
-    star contraction, Kiveris et al. SoCC'14): identical labels always;
-    strictly fewer hash-min rounds on hub-heavy graphs, where a
-    high-degree vertex split across k partitions carries k roots that
-    one level-2 task merges at once. (On hub-free chains over random
-    hash partitions the levels add little — each level then only merges
-    the rare adjacent fragments — so the round-count claim is asserted
-    on a power-law graph, the exactness claim on both.)"""
-    from hoover_spark.plans.iteration import IterationLoop
-
-    rg = rmat_graph(spark, scale=10, edge_factor=4)
-    want = union_find_components(edges_to_pairs(rg))
-    rounds = {}
-    for lv in (1, 3):
-        loop = IterationLoop(spark, kernel="wcc")
-        got = labels_of(
-            wcc(rg, loop=loop, pre_contract=True, pre_contract_levels=lv,
-                pointer_jumping=False)
-        )
-        assert got == want
-        rounds[lv] = len(loop.metrics)
-    assert rounds[3] < rounds[1]
-
-    # long cross-partition chain: levels must stay oracle-exact even
-    # where they cannot help (adaptive jumping handles convergence)
-    g = path_graph(spark, 257)
-    got = labels_of(wcc(g, pre_contract=True, pre_contract_levels=3))
-    assert got == {v: 0 for v in range(257)}
-
+    labels = spark.createDataFrame([(0, 0)], "vid long, label long")
+    with pytest.raises(ValueError, match="pre_contract"):
+        wcc(g, pre_contract=True, initial_frontier=frontier)
+    with pytest.raises(ValueError, match="pre_contract"):
+        wcc(g, pre_contract=True, initial_labels=labels)

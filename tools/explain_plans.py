@@ -166,7 +166,7 @@ def main():
     sym = Graph(edges).sym_edge_views()
     sections.append(
         ("wcc_seed (3-level iterated star contraction)",
-         plan_of(multi_contract(sym, 16, levels=3)))
+         plan_of(multi_contract(sym, 16)))
     )
 
     # 13. r5 link kernels — one representative round each. kcore/ktruss
