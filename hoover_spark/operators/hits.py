@@ -74,7 +74,7 @@ def hits(
     spark = graph.edges.sparkSession
     loop = loop or IterationLoop(spark, kernel="hits", max_iterations=n_iterations)
 
-    edges = graph.cleaned()
+    edges = graph.clean_edges()
     verts = graph.vertices().select("vid")
     hubs = loop.hold(verts.select("vid", F.lit(1.0).alias("hub")))
 

@@ -65,6 +65,5 @@ def kcore(
     alive, rounds, _ = loop.run(
         alive, step, until_stable("n_alive", "deg_sum"), rounds=max_rounds
     )
-    loop.kernel_state["peel_rounds"] = rounds
     return loop.finish(alive.select("vid", "core_degree"), rounds)
 

@@ -62,5 +62,4 @@ def ktruss(
     alive, rounds, _ = loop.run(
         alive, step, until_stable("n_alive", "sup_sum"), rounds=max_rounds
     )
-    loop.kernel_state["peel_rounds"] = rounds
     return loop.finish(alive.select("src", "dst", "support"), rounds)

@@ -146,7 +146,6 @@ def luby_matching(
         state, step, until_zero("n_active"), rounds=max_rounds
     )
 
-    loop.kernel_state["matching_rounds"] = rounds
     return loop.finish(
         state.where(F.col("status") == 1).select("src", "dst", "match_round"), rounds
     )

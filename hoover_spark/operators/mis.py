@@ -142,7 +142,6 @@ def luby_mis(
     state, rounds, _ = loop.run(
         state, step, until_zero("n_active"), rounds=max_rounds
     )
-    loop.kernel_state["mis_rounds"] = rounds
     return loop.finish(
         state.where(F.col("status") == 1).select("vid", "mis_round"), rounds
     )
@@ -227,5 +226,4 @@ def greedy_coloring(
     state, rounds, _ = loop.run(
         state, step, until_zero("n_active"), rounds=max_rounds
     )
-    loop.kernel_state["coloring_rounds"] = rounds
     return loop.finish(state.select("vid", "color"), rounds)

@@ -78,7 +78,8 @@ def pagerank(
     The final converged ``sum(rank)`` is published as
     ``loop.kernel_state["rank_sum"]`` (measured by the per-iteration
     Observation — no extra job); the streaming path feeds it back as
-    the next batch's ``initial_rank_sum`` numerator.
+    the next batch's ``initial_rank_sum`` numerator. The vertex count
+    is published as ``loop.kernel_state["n_state_rows"]``.
     """
     spark = spark or graph.edges.sparkSession
     loop = loop or IterationLoop(
@@ -219,7 +220,7 @@ def pagerank(
         start=start_iter,
         stats=init_stats,
     )
-    loop.kernel_state["n_vertices"] = n
+    loop.kernel_state["n_state_rows"] = n
     result = loop.finish(state.select("vid", "rank"), it)
     if verts is not None:
         verts.unpersist()

@@ -92,7 +92,6 @@ def sssp(
     max_rounds: int = 500,
     initial_dists: DataFrame | None = None,
     initial_frontier: DataFrame | None = None,
-    track_changes: bool = False,
 ) -> DataFrame:
     """Multi-source weighted shortest paths over the DIRECTED edge
     list (non-negative weights) — frontier Bellman–Ford, the
@@ -124,10 +123,11 @@ def sssp(
     exact new solution — every newly-shorter path uses ≥1 fresh edge,
     and round 1 relaxes all out-edges of the fresh sources. When
     ``initial_dists`` is given it must already contain the seed rows
-    (``seeds`` is not re-applied). ``track_changes=True`` publishes
-    ``loop.kernel_state["changed_rows"]`` (one min-dist row per vid
-    improved this run — the O(changed) durable-write set),
-    ``["total_improvements"]`` and ``["n_state_rows"]``.
+    (``seeds`` is not re-applied). Every run publishes
+    ``loop.kernel_state["changed_rows"]`` (a lazy view, one min-dist
+    row per vid improved this run — the O(changed) durable-write set),
+    ``["total_improvements"]`` and ``["n_state_rows"]`` (the held
+    state's row count, riding each state checkpoint — no extra job).
     """
     spark = graph.edges.sparkSession
     loop = loop or IterationLoop(spark, kernel="sssp", max_iterations=max_rounds)
@@ -145,10 +145,7 @@ def sssp(
     ]
 
     def _hold_state(df):
-        """Checkpoint a dist state; the row count rides the same action
-        (free) when change tracking wants it."""
-        if not track_changes:
-            return loop.hold(df)
+        """Checkpoint a dist state; the row count rides the same action."""
         held, s = loop.hold_observed(df, F.count(F.lit(1)).alias("n_rows"))
         loop.kernel_state["n_state_rows"] = int(s["n_rows"] or 0)
         return held
@@ -175,8 +172,7 @@ def sssp(
         """Merge a round's strict improvements into the held dist state."""
         nonlocal dist, total_improvements
         total_improvements += n_improved
-        if track_changes:
-            changed_parts.append(improved)
+        changed_parts.append(improved)
         dist = _hold_state(
             dist.join(improved.select("vid"), on="vid", how="left_anti")
             .unionByName(improved)
@@ -208,17 +204,16 @@ def sssp(
     if stats is not None and int(stats["n_improved"] or 0) > 0:
         absorb(improved, int(stats["n_improved"]))
 
-    if track_changes:
-        loop.kernel_state["total_improvements"] = total_improvements
-        if changed_parts:
-            ch = changed_parts[0]
-            for p in changed_parts[1:]:
-                ch = ch.unionByName(p)
-            loop.kernel_state["changed_rows"] = ch.groupBy("vid").agg(
-                F.min("dist").alias("dist")
-            )
-        else:
-            loop.kernel_state["changed_rows"] = dist.where(F.lit(False))
+    loop.kernel_state["total_improvements"] = total_improvements
+    if changed_parts:
+        ch = changed_parts[0]
+        for p in changed_parts[1:]:
+            ch = ch.unionByName(p)
+        loop.kernel_state["changed_rows"] = ch.groupBy("vid").agg(
+            F.min("dist").alias("dist")
+        )
+    else:
+        loop.kernel_state["changed_rows"] = dist.where(F.lit(False))
 
     return loop.finish(dist.select("vid", "dist"), rounds)
 

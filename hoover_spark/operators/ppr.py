@@ -55,7 +55,7 @@ def personalized_pagerank(
     spark = graph.edges.sparkSession
     loop = loop or IterationLoop(spark, kernel="ppr", max_iterations=n_iterations)
 
-    edges = graph.cleaned()
+    edges = graph.clean_edges()
     verts = graph.vertices().select("vid")
 
     if "p" not in seeds.columns:

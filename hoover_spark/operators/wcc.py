@@ -111,7 +111,9 @@ def wcc(
     set, ``inc/hvr_vertex.h:79-86``). The streaming path persists ONLY
     these rows per micro-batch. Cost: one 8-byte column carried through
     the rounds and a zero-shuffle filter at the end (labels are
-    monotone non-increasing, so no per-round bookkeeping).
+    monotone non-increasing, so no per-round bookkeeping). Every run
+    publishes the vertex count as ``loop.kernel_state["n_state_rows"]``
+    (from the per-round Observation, no extra job).
     """
     if pre_contract and (initial_labels is not None or initial_frontier is not None):
         raise ValueError(
@@ -263,10 +265,10 @@ def wcc(
 
     def observe(stats, _prev):
         changed = int(stats["changed"] or 0)
-        loop.kernel_state["n_vertices"] = int(stats["total"] or 0)
+        loop.kernel_state["n_state_rows"] = int(stats["total"] or 0)
         return int(stats["shuffled"] or 0), float(changed), changed, changed == 0
 
-    loop.kernel_state["n_vertices"] = None
+    loop.kernel_state["n_state_rows"] = None
     labels, it, _ = loop.run(
         labels, step, observe, rounds=loop.max_iterations - start_iter, start=start_iter
     )

@@ -58,11 +58,13 @@ class IterationLoop:
     checkpoint_every: int = 5
     max_iterations: int = 200
     metrics: list[dict] = field(default_factory=list)
-    #: kernel-published extras riding the run (no extra jobs): e.g.
-    #: wcc's ``n_vertices`` and, on a warm start, its ``changed_rows``
-    #: lazy view, pagerank's final ``rank_sum`` (from the per-iteration
-    #: Observation) — the streaming path uses these to keep its durable state writes
-    #: O(changed) and its bookkeeping O(1).
+    #: kernel-published extras riding the run (no extra jobs): the
+    #: state-row count ``n_state_rows`` (wcc, pagerank, sssp), the
+    #: ``changed_rows`` lazy view (wcc on a warm start, sssp),
+    #: sssp's ``total_improvements`` and pagerank's final ``rank_sum``
+    #: (from the per-iteration Observation) — the streaming path uses
+    #: these to keep its durable state writes O(changed) and its
+    #: bookkeeping O(1).
     kernel_state: dict = field(default_factory=dict)
     _persisted: list[DataFrame] = field(default_factory=list, repr=False)
     _last_saved_iter: int = -1

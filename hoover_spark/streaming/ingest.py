@@ -39,9 +39,23 @@ every later batch composes it with an O(|batch|) checkpointed delta
 (:class:`hoover_spark.operators.graph.DeltaGraph`) — kernels join each
 view separately, so the base keeps its partitioning and the per-batch
 graph work is proportional to the batch, not the store. When the
-accumulated delta crosses ``compact_delta_frac`` of the base, one
-amortized rebuild folds it in (reference analogue: ``update_edge_info``
-touches only mutated adjacency rows, ``src/hoover.cpp:450-600``).
+accumulated delta crosses ``COMPACT_DELTA_FRAC`` of the base (and at
+least ``COMPACT_FLOOR`` rows), one amortized rebuild folds it in
+(reference analogue: ``update_edge_info`` touches only mutated
+adjacency rows, ``src/hoover.cpp:450-600``).
+
+One batch body serves all four kernels, the way HOOVER runs every
+application through one main loop with per-application callbacks
+(``hvr_body``, ``src/hoover.cpp:3804-3947``): ingest (dedup, store
+append), then — triangles only — the Δ against the pre-merge view,
+then the delta merge/compaction, then — wcc, sssp, pagerank — the
+re-convergence on the merged view. Each kernel method returns
+``(state, changed, n_changed)``: ``changed is None`` asks for a full
+snapshot, ``n_changed == 0`` skips the durable write, and one shared
+tail persists, counts and logs. Every kernel publishes its state-row
+count (the quantity the snapshot threshold scales with) as
+``loop.kernel_state["n_state_rows"]``; the durable ``state_meta.json``
+keeps calling it ``n_vertices``.
 
 Layout safety (r3 ADVICE): ``store_meta.json`` pins ``n_buckets`` for
 the lifetime of a work_dir (a different value would silently remap
@@ -55,14 +69,15 @@ only the state rows the kernel actually changed (wcc's
 ``changed_rows`` view, published on every warm start — the reference
 ships only ``needs_send`` vertices, ``inc/hvr_vertex.h:79-86``) as a
 sequenced delta under ``state_deltas/seq=N``, plus a periodic full
-snapshot once accumulated deltas cross ``snapshot_frac`` of the state
-(bounded resume cost). ``_load_state`` composes snapshot + replay
-(latest-wins per vid). PageRank is the documented exception: damped
-power iteration is GLOBAL — a changed dangling mass or vertex count
-moves every rank, so its per-batch changed set IS the full state and
-it keeps full snapshots (writing "deltas" would rewrite |V| rows per
-batch under a different name). Its warm prep is O(|batch|) regardless:
-the vertex count is tracked incrementally (no ``prev.count()``), and
+snapshot once accumulated deltas cross ``SNAPSHOT_FRAC`` of the state
+(and at least ``SNAPSHOT_FLOOR`` rows; bounded resume cost).
+``_load_state`` composes snapshot + replay (latest-wins per vid).
+PageRank is the documented exception: damped power iteration is
+GLOBAL — a changed dangling mass or vertex count moves every rank, so
+its per-batch changed set IS the full state and it keeps full
+snapshots (writing "deltas" would rewrite |V| rows per batch under a
+different name). Its warm prep is O(|batch|) regardless: the vertex
+count is tracked incrementally (no ``prev.count()``), and
 renormalization rides the kernel's initial state projection
 (``initial_rank_sum``) instead of materializing a scaled O(|V|) copy.
 
@@ -90,14 +105,34 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.observation import Observation
 
 from hoover_spark.operators.graph import EDGE_SCHEMA, DeltaGraph, Graph
 from hoover_spark.operators.pagerank import pagerank
+from hoover_spark.operators.paths import sssp
+from hoover_spark.operators.triangles import triangle_delta
 from hoover_spark.operators.wcc import wcc
 from hoover_spark.plans.iteration import IterationLoop
+
+KERNELS = ("wcc", "pagerank", "sssp", "triangles")
+
+# Rebuild thresholds, read at call time. The graph-view delta is folded
+# into a rebuilt base once it reaches COMPACT_DELTA_FRAC of the base's
+# symmetric rows; the state deltas are folded into a full snapshot once
+# they reach SNAPSHOT_FRAC of the snapshot's rows. The floors keep tiny
+# graphs from rebuilding on every batch.
+COMPACT_DELTA_FRAC = 0.125
+COMPACT_FLOOR = 4096
+SNAPSHOT_FRAC = 0.25
+SNAPSHOT_FLOOR = 4096
+
+#: a kernel method's result: (state, changed rows or None for a full
+#: snapshot, changed-row count or None when unknown; 0 skips the write)
+Reconverged = tuple[DataFrame, DataFrame | None, int | None]
 
 
 class IncrementalGraphState:
@@ -111,11 +146,9 @@ class IncrementalGraphState:
         num_partitions: int = 32,
         kernel_kwargs: dict | None = None,
         n_buckets: int = 64,
-        compact_delta_frac: float = 0.125,
-        snapshot_frac: float = 0.25,
-        snapshot_floor: int = 4096,
     ) -> None:
-        assert kernel in ("wcc", "pagerank", "triangles", "sssp")
+        if kernel not in KERNELS:
+            raise ValueError(f"unknown kernel {kernel!r}: expected one of {KERNELS}")
         if "pre_contract" in (kernel_kwargs or {}):
             # contraction seeds only a cold wcc start (it sweeps the
             # whole edge store); reject it before any batch is stored
@@ -129,9 +162,6 @@ class IncrementalGraphState:
         self.num_partitions = num_partitions
         self.kernel_kwargs = kernel_kwargs or {}
         self.n_buckets = n_buckets
-        self.compact_delta_frac = compact_delta_frac
-        self.snapshot_frac = snapshot_frac
-        self.snapshot_floor = snapshot_floor
         self.edges_dir = os.path.join(work_dir, "edges")
         self.state_dir = os.path.join(work_dir, "state")
         self.state_deltas_dir = os.path.join(work_dir, "state_deltas")
@@ -141,18 +171,19 @@ class IncrementalGraphState:
         self._validate_layout()
         self._meta = self._load_state_meta()
         self._state: DataFrame | None = self._load_state()
-        #: incremental bookkeeping (no per-batch O(|V|) jobs): vertex
-        #: count, converged rank sum, triangle total, delta sequencing
-        self._n_vertices: int | None = self._meta.get("n_vertices")
+        #: incremental bookkeeping (no per-batch O(|V|) jobs): state-row
+        #: count (``n_vertices`` in state_meta.json), converged rank
+        #: sum, triangle total, delta sequencing
+        self._n_state_rows: int | None = self._meta.get("n_vertices")
         self._rank_sum: float = float(self._meta.get("rank_sum", 1.0))
         self.triangle_total: int = int(self._meta.get("triangle_total", 0))
         self._seq: int = int(self._meta.get("seq", 0))
         self._state_delta_rows: int = int(self._meta.get("state_delta_rows", 0))
         self._snapshot_rows: int = int(self._meta.get("snapshot_rows", 0))
-        if self._state is not None and self._n_vertices is None:
+        if self._state is not None and self._n_state_rows is None:
             # legacy layout (pre state_meta): one bounded resume-time
             # count, never repeated per batch
-            self._n_vertices = self._state.count()
+            self._n_state_rows = self._state.count()
         self.batches_applied = 0
         #: pruning evidence for the last batch's dedup anti-join
         self.last_scan: dict | None = None
@@ -263,7 +294,7 @@ class IncrementalGraphState:
         with open(tmp, "w") as f:
             json.dump(
                 {
-                    "n_vertices": self._n_vertices,
+                    "n_vertices": self._n_state_rows,
                     "rank_sum": self._rank_sum,
                     "triangle_total": self.triangle_total,
                     "seq": self._seq,
@@ -289,7 +320,7 @@ class IncrementalGraphState:
     def _load_state(self) -> DataFrame | None:
         """Resume: full snapshot + replay of sequenced deltas,
         latest-wins per vid. Replay cost is bounded: a snapshot is
-        rewritten whenever accumulated deltas cross ``snapshot_frac``
+        rewritten whenever accumulated deltas cross ``SNAPSHOT_FRAC``
         of the state, so at most that fraction is replayed."""
         snap = None
         if os.path.isdir(self.state_dir) and os.path.exists(
@@ -318,8 +349,6 @@ class IncrementalGraphState:
 
     def _write_snapshot(self, df: DataFrame) -> None:
         """Full-state snapshot (atomic swap) + clear replayed deltas."""
-        import shutil
-
         tmp = self.state_dir + ".tmp"
         df.write.mode("overwrite").parquet(tmp)
         final_exists = os.path.isdir(self.state_dir)
@@ -331,7 +360,7 @@ class IncrementalGraphState:
             shutil.rmtree(swap, ignore_errors=True)
         shutil.rmtree(self.state_deltas_dir, ignore_errors=True)
         self._state_delta_rows = 0
-        self._snapshot_rows = int(self._n_vertices or 0)
+        self._snapshot_rows = int(self._n_state_rows or 0)
         self.state_snapshot_writes += 1
         self.last_state_write = {"mode": "snapshot", "rows": self._snapshot_rows}
 
@@ -339,8 +368,6 @@ class IncrementalGraphState:
         """Persist ONLY the batch's changed state rows (one row per vid)
         under ``state_deltas/seq=N``; returns the row count (measured by
         an Observation riding the write — no extra job)."""
-        from pyspark.sql.observation import Observation
-
         obs = Observation()
         path = os.path.join(self.state_deltas_dir, f"seq={self._seq}")
         delta_df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
@@ -364,9 +391,7 @@ class IncrementalGraphState:
             self._write_snapshot(state_df)
         else:
             self._write_state_delta(changed_df)
-            threshold = max(
-                int(self._snapshot_rows * self.snapshot_frac), self.snapshot_floor
-            )
+            threshold = max(int(self._snapshot_rows * SNAPSHOT_FRAC), SNAPSHOT_FLOOR)
             if self._state_delta_rows >= threshold:
                 self._write_snapshot(state_df)
         self._write_state_meta()
@@ -439,12 +464,12 @@ class IncrementalGraphState:
         self._delta_rows = self._delta_sym.count()
 
     def _maybe_compact(self) -> None:
-        """When the delta outgrows ``compact_delta_frac`` of the base,
+        """When the delta outgrows ``COMPACT_DELTA_FRAC`` of the base,
         release the old base and let the next ``_ensure_base`` fold the
         (already durably appended) delta in — one amortized rebuild."""
         if self._base is None or self._delta_rows == 0:
             return
-        threshold = max(int(self._base_rows * self.compact_delta_frac), 4096)
+        threshold = max(int(self._base_rows * COMPACT_DELTA_FRAC), COMPACT_FLOOR)
         if self._delta_rows >= threshold:
             old = self._base
             self._base = None
@@ -525,10 +550,11 @@ class IncrementalGraphState:
             self._log(batch_id, 0, 0, time.perf_counter() - t0)
             return
 
+        loop = IterationLoop(self.spark, kernel=self.kernel, max_iterations=200)
         if self.kernel == "triangles":
-            self._apply_triangles_batch(batch_id, fresh, delta_sym_batch, n_fresh, t0)
-            return
-
+            # the Δ joins the batch against the OLD adjacency: before
+            # this batch's edges are merged into the graph view
+            state, changed, n_changed = self._triangles(delta_sym_batch, loop)
         # graph view: the first batch of this state's lifetime builds
         # the persisted base (from the just-appended store); later
         # batches fold their fresh edges into the O(|batch|) delta and
@@ -536,155 +562,130 @@ class IncrementalGraphState:
         if delta_sym_batch is not None:
             self._merge_delta(fresh, delta_sym_batch)
             self._maybe_compact()
-        graph = self._graph_for_batch()
+        if self.kernel != "triangles":
+            graph = self._graph_for_batch()
+            kernel = {"wcc": self._wcc, "sssp": self._sssp, "pagerank": self._pagerank}
+            state, changed, n_changed = kernel[self.kernel](graph, fresh, loop)
+            if graph is not self._base:
+                graph.unpersist()  # composite's own cache only; base persists
 
-        loop = IterationLoop(self.spark, kernel=self.kernel, max_iterations=200)
-        prev = self._state
-        fresh_verts = new_verts = None
-        if prev is not None:
-            fresh_verts = (
-                fresh.select(F.col("src").alias("vid"))
-                .unionByName(fresh.select(F.col("dst").alias("vid")))
-                .distinct()
-            )
-            # new vertices come from the batch's own endpoints, never a
-            # full-store vertex scan (prev covers every seen vertex;
-            # prev is vid-partitioned so only the tiny side shuffles)
-            new_verts = fresh_verts.join(
-                prev.select("vid"), on="vid", how="left_anti"
-            )
-        if self.kernel == "wcc":
-            if prev is not None:
-                new_labeled = new_verts.select("vid", F.col("vid").alias("label"))
-                warm = prev.select("vid", "label").unionByName(new_labeled)
-                state = wcc(
-                    graph,
-                    loop=loop,
-                    initial_labels=warm,
-                    initial_frontier=fresh_verts,
-                    **self.kernel_kwargs,
-                )
-                # durable write = ONLY the rows the kernel changed plus
-                # the brand-new vertices (labels are monotone: min
-                # resolves a vid present in both)
-                changed = (
-                    loop.kernel_state["changed_rows"]
-                    .unionByName(new_labeled)
-                    .groupBy("vid")
-                    .agg(F.min("label").alias("label"))
-                )
-            else:
-                state = wcc(graph, loop=loop, **self.kernel_kwargs)
-                changed = None  # cold start: the delta IS the state
-            self._n_vertices = int(
-                loop.kernel_state.get("n_vertices") or self._n_vertices or 0
-            )
-        elif self.kernel == "sssp":
-            from hoover_spark.operators.paths import sssp
-
-            kw = dict(self.kernel_kwargs)
-            seed_vids = kw.pop("seed_vids")
-            seeds = self.spark.createDataFrame(
-                [(int(v),) for v in seed_vids], "vid long"
-            )
-            if prev is not None:
-                # frontier = fresh-edge sources that already carry a
-                # distance (an unreached source relaxes nothing yet; it
-                # re-enters the frontier the round it is reached)
-                frontier = fresh.select(F.col("src").alias("vid")).distinct()
-                state = sssp(
-                    graph,
-                    seeds,
-                    loop=loop,
-                    initial_dists=prev.select("vid", "dist"),
-                    initial_frontier=frontier,
-                    track_changes=True,
-                    **kw,
-                )
-                changed = loop.kernel_state["changed_rows"]
-            else:
-                state = sssp(graph, seeds, loop=loop, track_changes=True, **kw)
-                changed = None
-            # bookkeeping count = state rows (reached vids), the
-            # quantity the snapshot threshold scales with
-            self._n_vertices = int(
-                loop.kernel_state.get("n_state_rows")
-                or self._n_vertices
-                or 0
-            )
-        else:
-            warm = None
-            n_vertices = None
-            init_sum = None
-            if prev is not None:
-                # O(|batch|) warm prep: vertex count tracked
-                # incrementally (no prev.count()), renormalization
-                # folded into the kernel's initial projection via
-                # initial_rank_sum (no O(|V|) sum + scaled copy)
-                n_new = new_verts.count()
-                n_vertices = int(self._n_vertices) + n_new
-                warm = prev.select("vid", "rank").unionByName(
-                    new_verts.select(
-                        "vid", F.lit(1.0 / n_vertices).alias("rank")
-                    )
-                )
-                init_sum = self._rank_sum + (n_new / n_vertices if n_new else 0.0)
-            state = pagerank(
-                graph,
-                loop=loop,
-                initial_ranks=warm,
-                n_vertices=n_vertices,
-                initial_rank_sum=init_sum,
-                **self.kernel_kwargs,
-            )
-            self._rank_sum = float(loop.kernel_state.get("rank_sum") or 1.0)
-            self._n_vertices = int(
-                loop.kernel_state.get("n_vertices") or n_vertices or 0
-            )
-            # power iteration is GLOBAL: dangling mass + teleport base
-            # move every rank whenever anything changes, so the changed
-            # set IS the state — keep honest full snapshots (see module
-            # docstring) instead of |V|-row "deltas"
-            changed = None
-
+        self._n_state_rows = int(loop.kernel_state.get("n_state_rows") or 0)
         # in-memory state stays the kernel's localCheckpoint-backed,
         # vid-partitioned output (no per-batch parquet re-read)
         self._state = state
-        if (
-            self.kernel == "sssp"
-            and changed is not None
-            and int(loop.kernel_state.get("total_improvements") or 0) == 0
-        ):
-            # fresh edges opened no shorter path: skip the durable
-            # write entirely (triangles-style "mode: none")
+        if changed is not None and n_changed == 0:
+            # nothing changed: skip the durable write entirely
             self._seq += 1
-            self.last_state_write = {"mode": "none", "rows": 0}
             self._write_state_meta()
         else:
             self._persist_state(state, changed)
-        if graph is not self._base:
-            graph.unpersist()  # composite's own cache only; base persists
         self.batches_applied += 1
-        self._log(batch_id, n_fresh, len(loop.metrics), time.perf_counter() - t0)
+        extra = None
+        if self.kernel == "triangles":
+            extra = {
+                "triangle_delta": loop.kernel_state["triangle_delta"],
+                "triangle_total": self.triangle_total,
+            }
+        self._log(batch_id, n_fresh, len(loop.metrics), time.perf_counter() - t0, extra)
 
-    def _apply_triangles_batch(
-        self,
-        batch_id: int,
-        fresh: DataFrame,
-        delta_sym_batch: DataFrame | None,
-        n_fresh: int,
-        t0: float,
-    ) -> None:
+    # -- per-kernel re-convergence: (state, changed, n_changed) ------------
+    def _endpoints(self, fresh: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """The batch's endpoint vids, and those the state has not seen:
+        new vertices come from the batch's own edges, never a full-store
+        vertex scan (the state is vid-partitioned, so only the tiny side
+        shuffles)."""
+        verts = (
+            fresh.select(F.col("src").alias("vid"))
+            .unionByName(fresh.select(F.col("dst").alias("vid")))
+            .distinct()
+        )
+        return verts, verts.join(self._state.select("vid"), on="vid", how="left_anti")
+
+    def _wcc(self, graph: Graph, fresh: DataFrame, loop: IterationLoop) -> Reconverged:
+        if self._state is None:
+            # cold start: the delta IS the state
+            return wcc(graph, loop=loop, **self.kernel_kwargs), None, None
+        fresh_verts, new_verts = self._endpoints(fresh)
+        new_labeled = new_verts.select("vid", F.col("vid").alias("label"))
+        state = wcc(
+            graph,
+            loop=loop,
+            initial_labels=self._state.select("vid", "label").unionByName(new_labeled),
+            initial_frontier=fresh_verts,
+            **self.kernel_kwargs,
+        )
+        # durable write = ONLY the rows the kernel changed plus the
+        # brand-new vertices (labels are monotone: min resolves a vid
+        # present in both)
+        changed = (
+            loop.kernel_state["changed_rows"]
+            .unionByName(new_labeled)
+            .groupBy("vid")
+            .agg(F.min("label").alias("label"))
+        )
+        return state, changed, None
+
+    def _sssp(self, graph: Graph, fresh: DataFrame, loop: IterationLoop) -> Reconverged:
+        kw = dict(self.kernel_kwargs)
+        seeds = self.spark.createDataFrame(
+            [(int(v),) for v in kw.pop("seed_vids")], "vid long"
+        )
+        if self._state is None:
+            return sssp(graph, seeds, loop=loop, **kw), None, None
+        # frontier = fresh-edge sources that already carry a distance
+        # (an unreached source relaxes nothing yet; it re-enters the
+        # frontier the round it is reached)
+        state = sssp(
+            graph,
+            seeds,
+            loop=loop,
+            initial_dists=self._state.select("vid", "dist"),
+            initial_frontier=fresh.select(F.col("src").alias("vid")).distinct(),
+            **kw,
+        )
+        ks = loop.kernel_state
+        return state, ks["changed_rows"], ks["total_improvements"]
+
+    def _pagerank(
+        self, graph: Graph, fresh: DataFrame, loop: IterationLoop
+    ) -> Reconverged:
+        warm = n_vertices = init_sum = None
+        if self._state is not None:
+            # O(|batch|) warm prep: vertex count tracked incrementally
+            # (no prev.count()), renormalization folded into the
+            # kernel's initial projection via initial_rank_sum (no
+            # O(|V|) sum + scaled copy)
+            _, new_verts = self._endpoints(fresh)
+            n_new = new_verts.count()
+            n_vertices = int(self._n_state_rows) + n_new
+            warm = self._state.select("vid", "rank").unionByName(
+                new_verts.select("vid", F.lit(1.0 / n_vertices).alias("rank"))
+            )
+            init_sum = self._rank_sum + (n_new / n_vertices if n_new else 0.0)
+        state = pagerank(
+            graph,
+            loop=loop,
+            initial_ranks=warm,
+            n_vertices=n_vertices,
+            initial_rank_sum=init_sum,
+            **self.kernel_kwargs,
+        )
+        self._rank_sum = float(loop.kernel_state.get("rank_sum") or 1.0)
+        # power iteration is GLOBAL: dangling mass + teleport base move
+        # every rank whenever anything changes, so the changed set IS
+        # the state — keep honest full snapshots (see module docstring)
+        # instead of |V|-row "deltas"
+        return state, None, None
+
+    def _triangles(
+        self, delta_sym_batch: DataFrame | None, loop: IterationLoop
+    ) -> Reconverged:
         """Incremental triangle maintenance: Δcount per batch from
         joining the batch's new undirected edges against the persisted
         OLD adjacency (base built before this batch's append) —
         O(|batch|·d̄), the base is never shuffled. State = per-vertex
         triangle counts (only vids on ≥1 triangle); running total in
         state_meta.json."""
-        from pyspark.sql.observation import Observation
-
-        from hoover_spark.operators.triangles import triangle_delta
-
         old_graph = self._graph_for_batch()  # base ∪ prior deltas, pre-batch
         # the genuinely-new undirected pairs; canonical orientation
         newU = (
@@ -692,15 +693,14 @@ class IncrementalGraphState:
             if delta_sym_batch is not None
             else self.spark.createDataFrame([], EDGE_SCHEMA)
         )
-        inc = triangle_delta(old_graph.sym_edge_views(), newU)
         obs = Observation()
-        inc = inc.observe(
-            obs,
-            F.sum("d").alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        ).localCheckpoint(eager=True)
+        inc = (
+            triangle_delta(old_graph.sym_edge_views(), newU)
+            .observe(obs, F.sum("d").alias("s"), F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
         tri_delta = int(obs.get["s"] or 0) // 3
-        n_inc = int(obs.get["n"] or 0)
+        loop.kernel_state["triangle_delta"] = tri_delta
         self.triangle_total += tri_delta
 
         prev = self._state
@@ -708,15 +708,10 @@ class IncrementalGraphState:
             merged = inc.select("vid", F.col("d").alias("tri"))
         else:
             # prev is vid-partitioned; inc is O(Δ) — only inc shuffles
-            merged = (
-                prev.join(inc, on="vid", how="full")
-                .select(
-                    "vid",
-                    (
-                        F.coalesce("tri", F.lit(0)) + F.coalesce("d", F.lit(0))
-                    ).alias("tri"),
-                    F.col("d").isNotNull().alias("_chg"),
-                )
+            merged = prev.join(inc, on="vid", how="full").select(
+                "vid",
+                (F.coalesce("tri", F.lit(0)) + F.coalesce("d", F.lit(0))).alias("tri"),
+                F.col("d").isNotNull().alias("_chg"),
             )
         obs2 = Observation()
         held = (
@@ -724,36 +719,12 @@ class IncrementalGraphState:
             .repartition(self.num_partitions, "vid")
             .localCheckpoint(eager=True)
         )
-        # for this kernel the bookkeeping count is STATE rows (vids on
-        # ≥1 triangle), the quantity the snapshot threshold scales with
-        self._n_vertices = int(obs2.get["rows"] or 0)
+        # state rows = vids on ≥1 triangle
+        loop.kernel_state["n_state_rows"] = int(obs2.get["rows"] or 0)
         if prev is None:
-            self._state = held
-            changed = None
-        else:
-            self._state = held.select("vid", "tri")
-            changed = held.where(F.col("_chg")).select("vid", "tri")
-
-        # fold the batch into the long-lived graph view for next time
-        if delta_sym_batch is not None:
-            self._merge_delta(fresh, delta_sym_batch)
-            self._maybe_compact()
-
-        if changed is not None and n_inc == 0:
-            # nothing changed: skip the durable write entirely
-            self._seq += 1
-            self.last_state_write = {"mode": "none", "rows": 0}
-            self._write_state_meta()
-        else:
-            self._persist_state(self._state, changed)
-        self.batches_applied += 1
-        self._log(
-            batch_id,
-            n_fresh,
-            0,
-            time.perf_counter() - t0,
-            extra={"triangle_delta": tri_delta, "triangle_total": self.triangle_total},
-        )
+            return held, None, None
+        changed = held.where(F.col("_chg")).select("vid", "tri")
+        return held.select("vid", "tri"), changed, int(obs.get["n"] or 0)
 
     def _log(
         self,
@@ -803,8 +774,6 @@ def run_stream(
     max_files_per_trigger: int = 1,
     kernel_kwargs: dict | None = None,
     n_buckets: int = 64,
-    snapshot_frac: float = 0.25,
-    snapshot_floor: int = 4096,
 ) -> IncrementalGraphState:
     """Consume all pending edge-drop parquet files as micro-batches
     (``Trigger.AvailableNow`` semantics) and return the converged state.
@@ -815,7 +784,6 @@ def run_stream(
     state = IncrementalGraphState(
         spark, work_dir, kernel=kernel, num_partitions=num_partitions,
         kernel_kwargs=kernel_kwargs, n_buckets=n_buckets,
-        snapshot_frac=snapshot_frac, snapshot_floor=snapshot_floor,
     )
     stream = (
         spark.readStream.schema(EDGE_SCHEMA)

@@ -96,7 +96,8 @@ def test_pagerank_stream_equals_batch(spark, tmp_path):
 
 def test_stream_resume_after_restart(spark, tmp_path):
     """Stop after the first drop, then deliver the rest with a fresh
-    run_stream over the same work dir — must reach the batch answer."""
+    run_stream over the same work dir — must reach the batch answer,
+    for wcc and for pagerank."""
     g = rmat_graph(spark, scale=6, edge_factor=4)
     drops1 = str(tmp_path / "d1")
     drops2 = str(tmp_path / "d2")
@@ -115,15 +116,25 @@ def test_stream_resume_after_restart(spark, tmp_path):
             shutil.move(f, os.path.join(d, f"b{i}.parquet"))
         shutil.rmtree(d + "/p")
 
-    work = str(tmp_path / "work")
-    run_stream(spark, drops1, work, kernel="wcc", num_partitions=8)
-    # second delivery into the same store (fresh stream checkpoint dir)
-    shutil.rmtree(os.path.join(work, "stream_ck"))
-    state = run_stream(spark, drops2, work, kernel="wcc", num_partitions=8)
+    def resumed(kernel, **kw):
+        work = str(tmp_path / f"work_{kernel}")
+        run_stream(spark, drops1, work, kernel=kernel, num_partitions=8, **kw)
+        # second delivery into the same store (fresh stream checkpoint dir)
+        shutil.rmtree(os.path.join(work, "stream_ck"))
+        return run_stream(spark, drops2, work, kernel=kernel, num_partitions=8, **kw)
 
+    state = resumed("wcc")
     got = {r["vid"]: r["label"] for r in state.state().collect()}
     want = {r["vid"]: r["label"] for r in wcc(g).collect()}
     assert got == want
+
+    # pagerank resumes its vertex count and rank sum from state_meta.json
+    state = resumed("pagerank", kernel_kwargs={"tol": 1e-9})
+    got = {r["vid"]: r["rank"] for r in state.state().collect()}
+    want = {r["vid"]: r["rank"] for r in pagerank(g, tol=1e-9).collect()}
+    assert got.keys() == want.keys()
+    for v in got:
+        assert math.isclose(got[v], want[v], abs_tol=1e-6)
 
 
 def test_dedup_antijoin_is_bucket_pruned(spark, tmp_path):
@@ -221,15 +232,16 @@ def test_per_batch_graph_is_base_plus_delta(spark, tmp_path):
     assert got2 == want
 
 
-def test_compaction_folds_delta_into_base(spark, tmp_path):
+def test_compaction_folds_delta_into_base(spark, tmp_path, monkeypatch):
     """Once the delta outgrows the threshold, ONE amortized rebuild
     folds it into a fresh persisted base (and results stay exact)."""
+    from hoover_spark.streaming import ingest
     from hoover_spark.streaming.ingest import IncrementalGraphState
 
+    monkeypatch.setattr(ingest, "COMPACT_DELTA_FRAC", 0.01)
     work = str(tmp_path / "work")
     state = IncrementalGraphState(
-        spark, work, kernel="wcc", num_partitions=8, n_buckets=16,
-        compact_delta_frac=0.01,
+        spark, work, kernel="wcc", num_partitions=8, n_buckets=16
     )
     g1 = rmat_graph(spark, scale=7, edge_factor=4).cleaned()
     state.apply_batch(g1, 0)
@@ -263,7 +275,7 @@ def test_store_layout_validation(spark, tmp_path):
     """n_buckets is pinned in store_meta.json (changing it silently
     remaps bucket ids → broken dedup); a legacy flat store and a
     bucketed store without store_meta.json are rejected loudly (r3
-    ADVICE medium)."""
+    ADVICE medium), and so is an unknown kernel."""
     import pytest
 
     from hoover_spark.streaming.ingest import IncrementalGraphState
@@ -290,6 +302,12 @@ def test_store_layout_validation(spark, tmp_path):
     with pytest.raises(ValueError, match="store_meta.json"):
         IncrementalGraphState(spark, work, kernel="wcc", n_buckets=16)
 
+    # an unknown kernel fails in the constructor, before the work dir
+    work3 = tmp_path / "w3"
+    with pytest.raises(ValueError, match="unknown kernel"):
+        IncrementalGraphState(spark, str(work3), kernel="bfs")
+    assert not work3.exists()
+
 
 def test_state_write_is_o_changed(spark, tmp_path):
     """The r4 scale item: per-batch durable state writes must be
@@ -308,7 +326,7 @@ def test_state_write_is_o_changed(spark, tmp_path):
     big = rmat_graph(spark, scale=8, edge_factor=4).cleaned()
     state.apply_batch(big, 0)
     assert state.state_snapshot_writes == 1          # cold start: full write
-    n_v = state._n_vertices
+    n_v = state._n_state_rows
     assert n_v > 50
 
     # tiny micro-batches: each merges two existing components and adds
@@ -344,15 +362,17 @@ def test_state_write_is_o_changed(spark, tmp_path):
     assert got == want
 
 
-def test_state_snapshot_rotation(spark, tmp_path):
-    """Once accumulated deltas cross snapshot_frac of the state, one
+def test_state_snapshot_rotation(spark, tmp_path, monkeypatch):
+    """Once accumulated deltas cross SNAPSHOT_FRAC of the state, one
     full snapshot folds them in (bounded resume/replay cost)."""
+    from hoover_spark.streaming import ingest
     from hoover_spark.streaming.ingest import IncrementalGraphState
 
+    monkeypatch.setattr(ingest, "SNAPSHOT_FRAC", 0.01)
+    monkeypatch.setattr(ingest, "SNAPSHOT_FLOOR", 4)
     work = str(tmp_path / "work")
     state = IncrementalGraphState(
-        spark, work, kernel="wcc", num_partitions=8, n_buckets=16,
-        snapshot_frac=0.01, snapshot_floor=4,
+        spark, work, kernel="wcc", num_partitions=8, n_buckets=16
     )
     big = rmat_graph(spark, scale=7, edge_factor=4).cleaned()
     state.apply_batch(big, 0)
@@ -500,7 +520,7 @@ def test_sssp_state_write_o_changed_and_resume(spark, tmp_path):
     )
     st.apply_batch(big, 0)
     assert st.state_snapshot_writes == 1             # cold start: full write
-    n_reached = st._n_vertices
+    n_reached = st._n_state_rows
     assert n_reached > 10
     dist0 = {r["vid"]: r["dist"] for r in st.state().collect()}
     assert max(dist0.values()) >= 2                  # shortcut below must help
