@@ -213,11 +213,15 @@ def modularity(graph: Graph, labels: DataFrame) -> DataFrame:
     )
 
 
+# Synchronous move rounds between local checkpoints of the label state
+# (bounds the round-over-round lineage; 2-round runs never reach it).
+MOVE_CHECKPOINT_EVERY = 4
+
+
 def louvain_move(
     graph: "Graph",
     n_rounds: int = 2,
     labels: DataFrame | None = None,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """One-level Louvain local-moving phase — synchronous, deterministic,
     integer-exact. Returns ``(vid, label)`` after ``n_rounds`` rounds.
@@ -237,98 +241,58 @@ def louvain_move(
     moves can oscillate on pathological symmetric graphs, which is why
     this is exposed as a bounded-round operator (run modularity() after
     each round to monitor; the classic Blondel et al. 2008 phase-2
-    graph contraction is this engine's WCC-style relabel + groupBy).
+    graph contraction is :func:`louvain_levels`).
+
+    The rounds are :func:`_weighted_move_rounds` on unit weights
+    (``S = Σk = 2m``, ``k`` = degree). ``labels`` warm-starts them;
+    vertices outside the symmetric edges (self-loop-only) keep their
+    initial label — their own vid, or their given label.
 
     Int64 exactness: products are bounded by 2m·max_deg ≤ (2m)², exact
     while 4m² < 2⁶³ (m < 1.5e9) — same bound as :func:`modularity`;
     past that scale the score to double (≤1 ulp per 2⁵³, and the
     argmax only needs relative order within one vertex's candidates).
-
-    Plan shape per round: one groupBy(label) for D_c (|V|-sized), one
-    neighbor-label groupBy for w (map-side combined on the persisted
-    hash(src) edge partitioning), one broadcast of the 1-row m
-    aggregate, one argmax groupBy(vid). No windows over edges, no
-    collect; candidate volume is Σ_v |distinct neighbor labels| ≤ 2m.
     """
-    sym = graph.sym_edges()
-    deg = graph.degrees()
-    m1 = graph.canonical().agg(F.count(F.lit(1)).alias("m"))
-    lab = (
+    wall = graph.sym_edges().select("src", "dst", F.lit(1).cast("long").alias("w"))
+    lab0 = (
         labels.select("vid", "label")
         if labels is not None
         else graph.vertices().select("vid", F.col("vid").alias("label"))
     )
-    for r in range(n_rounds):
-        dc = (
-            lab.join(deg, on="vid")
-            .groupBy("label")
-            .agg(F.sum("degree").alias("dc"))
-            .select(F.col("label").alias("c"), "dc")
-        )
-        nbr = (
-            sym.join(
-                lab.select(F.col("vid").alias("dst"), F.col("label").alias("c")),
-                on="dst",
-            )
-            .groupBy(F.col("src").alias("vid"), "c")
-            .agg(F.count(F.lit(1)).alias("w"))
-        )
-        own = lab.select("vid", F.col("label").alias("c"), F.lit(0).cast("long").alias("w"))
-        cand = (
-            nbr.unionByName(own).groupBy("vid", "c").agg(F.max("w").alias("w"))
-        )
-        scored = (
-            cand.join(lab, on="vid")
-            .join(deg, on="vid", how="left")
-            .withColumn("degree", F.coalesce("degree", F.lit(0)))
-            # left: a self-loop-only vertex's own community has no
-            # degree mass (no dc row) but must keep its label
-            .join(dc, on="c", how="left")
-            .withColumn("dc", F.coalesce("dc", F.lit(0)))
-            .crossJoin(F.broadcast(m1))
-            .select(
-                "vid",
-                "c",
-                (
-                    F.lit(2) * F.col("m") * F.col("w")
-                    - F.col("degree")
-                    * (
-                        F.col("dc")
-                        - F.when(F.col("c") == F.col("label"), F.col("degree")).otherwise(F.lit(0))
-                    )
-                ).alias("score"),
-            )
-        )
-        lab = (
-            scored.groupBy("vid")
-            .agg(F.min(F.struct((-F.col("score")).alias("ns"), F.col("c"))).alias("b"))
-            .select("vid", F.col("b.c").alias("label"))
-        )
-        if (r + 1) % checkpoint_every == 0 and r + 1 < n_rounds:
-            lab = lab.localCheckpoint(eager=True)
-    return lab
+    return _weighted_move_rounds(wall, n_rounds, lab0)
 
 
 def _weighted_move_rounds(
-    wall: DataFrame, n_rounds: int
+    wall: DataFrame, n_rounds: int, labels: DataFrame | None = None
 ) -> DataFrame:
     """Synchronous Louvain move rounds on a weighted symmetric edge
     list ``(src, dst, w)`` that INCLUDES self-loops under the doubled
     convention (a self-loop row carries twice its undirected weight, so
     ``k_v = Σ_{(v,·)} w`` is the standard weighted degree). Labels
-    start at vid. Score, with ``S = Σ_v k_v = 2m``:
+    start at ``labels`` (default: vid of every vertex of ``wall``); a
+    labelled vertex outside ``wall`` keeps its label. Score, with
+    ``S = Σ_v k_v = 2m``:
 
         score(v→c) = S·w(v,c) − k_v·(Σtot(c) − k_v·[c = label_v])
 
     ``w(v,c)`` excludes self-loops (they move with the vertex — a
-    candidate-constant). Int64-exact, ties → smaller label; unit
-    weights reduce to :func:`louvain_move`'s score exactly.
+    candidate-constant). Int64-exact, ties → smaller label.
+
+    Plan shape per round: one groupBy(label) for Σtot (|V|-sized), one
+    neighbor-label groupBy for w (map-side combined on the persisted
+    hash(src) edge partitioning), one broadcast of the 1-row S
+    aggregate, one argmax groupBy(vid). No windows over edges, no
+    collect; candidate volume is Σ_v |distinct neighbor labels| ≤ 2m.
     """
     k = wall.groupBy(F.col("src").alias("vid")).agg(F.sum("w").alias("k"))
     s1 = k.agg(F.sum("k").alias("S"))
-    lab = k.select("vid", F.col("vid").alias("label"))
+    lab = (
+        labels.select("vid", "label")
+        if labels is not None
+        else k.select("vid", F.col("vid").alias("label"))
+    )
     nself = wall.where(F.col("src") != F.col("dst"))
-    for _ in range(n_rounds):
+    for r in range(n_rounds):
         dc = (
             lab.join(k, on="vid")
             .groupBy("label")
@@ -347,8 +311,12 @@ def _weighted_move_rounds(
         cand = nbr.unionByName(own).groupBy("vid", "c").agg(F.max("wc").alias("wc"))
         scored = (
             cand.join(lab, on="vid")
-            .join(k, on="vid")
-            .join(dc, on="c")
+            .join(k, on="vid", how="left")
+            .withColumn("k", F.coalesce("k", F.lit(0)))
+            # left: a vertex outside wall (self-loop-only) has no
+            # weight mass (no dc row) but must keep its label
+            .join(dc, on="c", how="left")
+            .withColumn("dc", F.coalesce("dc", F.lit(0)))
             .crossJoin(F.broadcast(s1))
             .select(
                 "vid",
@@ -368,6 +336,8 @@ def _weighted_move_rounds(
             .agg(F.min(F.struct((-F.col("score")).alias("ns"), F.col("c"))).alias("b"))
             .select("vid", F.col("b.c").alias("label"))
         )
+        if (r + 1) % MOVE_CHECKPOINT_EVERY == 0 and r + 1 < n_rounds:
+            lab = lab.localCheckpoint(eager=True)
     return lab
 
 

@@ -2,17 +2,24 @@
 
 Reference mapping: HOOVER stores every edge on *both* endpoints inside
 per-vertex AVL trees (``src/hoover.cpp:487-492``,
-``inc/hvr_irregular_matrix.h:14-20``). Here the single source of truth
-is ``edges(src: long, dst: long)``; symmetrization / canonicalization
-are cheap derived DataFrames, and the per-partition CSR block (the
-reference's ``linearize``, ``src/hvr_irregular_matrix.cpp:67-70``) is
-built with ``groupBy(part).applyInPandas`` when a vectorized kernel
-wants array-form adjacency.
+``inc/hvr_irregular_matrix.h:14-20``) and every analytic reads that one
+store. Here the single source of truth is ``edges(src: long, dst:
+long)``, read through exactly two persisted hash(src)-partitioned
+views: ``clean_edges()`` (deduped, no self-loops) and ``sym_edges()``
+(both directions, derived from ``clean_edges()``). Every other view
+(``canonical``, ``degrees``, CSR blocks) derives from those two, so
+what a derived view costs never depends on which kernel ran first.
+The per-partition CSR block (the reference's ``linearize``,
+``src/hvr_irregular_matrix.cpp:67-70``) is built with
+``groupBy(part).applyInPandas`` when a vectorized kernel wants
+array-form adjacency.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -30,8 +37,8 @@ class Graph:
     """A graph over 64-bit vertex ids, backed by an edge DataFrame.
 
     ``edges`` is treated as a *directed* edge list (deduped, no
-    self-loops after :meth:`cleaned`). Undirected algorithms use
-    :meth:`symmetric`; triangle counting uses :meth:`canonical`.
+    self-loops in :meth:`clean_edges`). Undirected algorithms use
+    :meth:`sym_edges`; triangle counting uses :meth:`canonical`.
     """
 
     edges: DataFrame
@@ -39,51 +46,52 @@ class Graph:
     _cache: dict = field(default_factory=dict, repr=False)
 
     # ------------------------------------------------------------------
-    # derived views
+    # persisted, hash-partitioned edge views — the only edge readers.
+    # The dedup/symmetrize shuffles run ONCE per graph, not once per
+    # kernel call (pagerank + wcc + triangles on the same graph reuse
+    # the same cached edge partitions — the reference's analogue is
+    # that its adjacency store simply persists across analytics).
     # ------------------------------------------------------------------
-    def cleaned(self) -> DataFrame:
-        """Deduped, self-loop-free directed edges. Returns the persisted
-        partitioned view when :meth:`clean_edges` has materialized one,
-        so downstream derivations (symmetric, canonical) never redo the
-        dedup shuffle."""
-        if "clean_part" in self._cache:
-            return self._cache["clean_part"]
-        return (
-            self.edges.select("src", "dst")
-            .where(F.col("src") != F.col("dst"))
-            .dropDuplicates(["src", "dst"])
-        )
+    def clean_edges(self) -> DataFrame:
+        """Deduped, self-loop-free directed edges, partitioned by
+        hash(src) and persisted."""
+        if "clean_part" not in self._cache:
+            self._cache["clean_part"] = (
+                self.edges.select("src", "dst")
+                .where(F.col("src") != F.col("dst"))
+                .dropDuplicates(["src", "dst"])
+                .repartition(self.num_partitions, "src")
+                .persist()
+            )
+        return self._cache["clean_part"]
 
-    def symmetric(self) -> DataFrame:
-        """Both directions, deduped — the reference's both-endpoint
+    def sym_edges(self) -> DataFrame:
+        """Both directions of :meth:`clean_edges`, deduped, partitioned
+        by hash(src) and persisted — the reference's both-endpoint
         storage (``src/hoover.cpp:487-492``) as a view, not a copy kept
         in sync by hand."""
-        if "sym_part" in self._cache:
-            return self._cache["sym_part"]
-        if "symmetric" not in self._cache:
-            e = self.cleaned()
-            sym = e.unionByName(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            ).dropDuplicates(["src", "dst"])
-            self._cache["symmetric"] = sym
-        return self._cache["symmetric"]
+        if "sym_part" not in self._cache:
+            e = self.clean_edges()
+            self._cache["sym_part"] = (
+                e.unionByName(
+                    e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+                )
+                .dropDuplicates(["src", "dst"])
+                .repartition(self.num_partitions, "src")
+                .persist()
+            )
+        return self._cache["sym_part"]
 
     def canonical(self) -> DataFrame:
         """Undirected edge set stored once with ``src < dst``."""
-        e = self._cache.get("clean_part")
-        if e is None:
-            e = self.cleaned()
-        return e.select(
+        return self.clean_edges().select(
             F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
         ).dropDuplicates(["src", "dst"])
 
     def vertices(self) -> DataFrame:
         """Distinct vertex ids appearing at either endpoint of the RAW
-        edge list — always the same canonical source, regardless of
-        which derived views have been cached. (Deriving from the
-        cleaned symmetric view would silently drop a vertex whose only
-        incidence is a self-loop, and make results depend on which
-        kernel ran first.)"""
+        edge list, so a vertex whose only incidence is a self-loop (it
+        never reaches the cleaned views) is kept."""
         if "vertices" not in self._cache:
             e = self.edges
             self._cache["vertices"] = (
@@ -95,44 +103,14 @@ class Graph:
 
     def degrees(self) -> DataFrame:
         """(vid, degree) over the undirected (symmetric) view."""
-        sym = self._cache.get("sym_part")
-        if sym is None:
-            sym = self.symmetric()
-        return sym.groupBy(F.col("src").alias("vid")).agg(
+        return self.sym_edges().groupBy(F.col("src").alias("vid")).agg(
             F.count(F.lit(1)).alias("degree")
         )
 
-    # ------------------------------------------------------------------
-    # persisted, hash-partitioned edge views — shared across kernels.
-    # The dedup/symmetrize shuffles run ONCE per graph, not once per
-    # kernel call (pagerank + wcc + triangles on the same graph reuse
-    # the same cached edge partitions — the reference's analogue is
-    # that its adjacency store simply persists across analytics).
-    # ------------------------------------------------------------------
-    def clean_edges(self) -> DataFrame:
-        """Persisted ``cleaned()`` partitioned by hash(src)."""
-        if "clean_part" not in self._cache:
-            self._cache["clean_part"] = (
-                self.cleaned().repartition(self.num_partitions, "src").persist()
-            )
-        return self._cache["clean_part"]
-
-    def sym_edges(self) -> DataFrame:
-        """Persisted ``symmetric()`` partitioned by hash(src)."""
-        if "sym_part" not in self._cache:
-            self._cache["sym_part"] = (
-                self.symmetric().repartition(self.num_partitions, "src").persist()
-            )
-        return self._cache["sym_part"]
-
-    # -- composite views ------------------------------------------------
     # Iterative kernels join edges against a (small) frontier every
-    # round. Exposing the edge set as a LIST of views lets a composite
-    # graph (persisted base + tiny delta, see :class:`DeltaGraph`) keep
-    # the base's known hash-partitioning in each per-view join — a
-    # union view would erase outputPartitioning and re-shuffle the full
-    # edge side every round. Kernels union the (frontier-bounded,
-    # small) JOIN OUTPUTS instead.
+    # round and combine the per-view outputs with :func:`per_view`, so
+    # a composite graph (persisted base + tiny delta, see
+    # :class:`DeltaGraph`) keeps the base's hash-partitioning.
     def sym_edge_views(self) -> list[DataFrame]:
         return [self.sym_edges()]
 
@@ -164,7 +142,7 @@ class Graph:
         ``indices[indptr[i]:indptr[i+1]]``.
         """
         num_parts = num_parts or self.num_partitions
-        e = self.symmetric().withColumn(
+        e = self.sym_edges().withColumn(
             "part", F.pmod(F.xxhash64("src"), F.lit(num_parts)).cast("int")
         )
 
@@ -202,12 +180,15 @@ class Graph:
 class DeltaGraph(Graph):
     """A long-lived persisted ``base`` Graph plus a small edge delta.
 
-    Construction and every derived view cost O(|delta|) on top of the
-    base's already-persisted hash-partitioned views — the streaming
-    ingest path builds one of these per micro-batch instead of
-    re-scanning + re-shuffling the full durable store (the r3
-    scale-killer: a 16-edge micro-batch paying one O(|E|) pass to
-    re-materialize the symmetric view). Reference analogue:
+    Its two view lists cost O(|delta|) on top of the base's
+    already-persisted hash-partitioned views — the streaming ingest
+    path builds one of these per micro-batch instead of re-scanning +
+    re-shuffling the full durable store (the r3 scale-killer: a
+    16-edge micro-batch paying one O(|E|) pass to re-materialize the
+    symmetric view). The warm kernels it feeds read only those lists,
+    ``edges.sparkSession`` and ``num_partitions``; the inherited
+    whole-graph views would rebuild from the unioned raw edges.
+    Reference analogue:
     ``update_edge_info`` touches only the mutated adjacency rows
     (``src/hoover.cpp:450-600``) while the store persists.
 
@@ -237,39 +218,25 @@ class DeltaGraph(Graph):
     def clean_edge_views(self) -> list[DataFrame]:
         return [self.base.clean_edges(), self.delta]
 
-    def cleaned(self) -> DataFrame:
-        # delta is pre-deduped against the base store: plain union
-        return self.base.clean_edges().unionByName(self.delta)
-
-    def clean_edges(self) -> DataFrame:
-        return self.cleaned()
-
-    def symmetric(self) -> DataFrame:
-        return self.base.sym_edges().unionByName(self.delta_sym)
-
-    def sym_edges(self) -> DataFrame:
-        return self.symmetric()
-
-    def vertices(self) -> DataFrame:
-        if "vertices" not in self._cache:
-            dv = self.delta.select(F.col("src").alias("vid")).unionByName(
-                self.delta.select(F.col("dst").alias("vid"))
-            )
-            self._cache["vertices"] = (
-                self.base.vertices().unionByName(dv).distinct()
-            )
-        return self._cache["vertices"]
-
-    def degrees(self) -> DataFrame:
-        return self.symmetric().groupBy(F.col("src").alias("vid")).agg(
-            F.count(F.lit(1)).alias("degree")
-        )
-
     def unpersist(self) -> None:
         """Release only this composite's own cache — the base's views
         are long-lived by design (the whole point is not rebuilding
         them per batch); compaction releases them explicitly."""
         self._cache.clear()
+
+
+def per_view(
+    views: list[DataFrame], fn: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Union of ``fn(v)`` over the edge views ``v``.
+
+    A kernel joins each view against its (small) frontier and unions
+    the join OUTPUTS. A union of the views themselves would erase the
+    base view's persisted hash-partitioning and re-shuffle the FULL
+    edge side every round of every micro-batch (see
+    :class:`DeltaGraph`).
+    """
+    return reduce(DataFrame.unionByName, map(fn, views))
 
 
 def graph_from_pairs(spark, pairs, num_partitions: int = 8) -> Graph:
@@ -354,7 +321,7 @@ def reciprocity(graph: Graph) -> DataFrame:
     the caller acts). At 10¹² edges the join is a plain sort-merge on
     the same key layout the canonicalization already shuffles by.
     """
-    e = graph.cleaned().select("src", "dst")
+    e = graph.clean_edges().select("src", "dst")
     rev = e.select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
     ).withColumn("has_rev", F.lit(1))

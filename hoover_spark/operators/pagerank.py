@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hoover_spark.functions.skew import with_salt
-from hoover_spark.operators.graph import Graph
+from hoover_spark.operators.graph import Graph, per_view
 from hoover_spark.plans.iteration import IterationLoop
 
 
@@ -90,12 +90,6 @@ def pagerank(
         max_iterations=n_iterations or max_iterations,
     )
 
-    # Edge set as a LIST of views (usually one). A composite graph
-    # (persisted base + micro-batch delta, DeltaGraph) yields two: the
-    # per-iteration contribution join runs per view and unions the
-    # outputs, so the base keeps its persisted hash-partitioning — a
-    # union of the views themselves would erase it and re-shuffle the
-    # FULL edge side every iteration of every micro-batch.
     edge_views = graph.clean_edge_views()
     verts = None
     if n_vertices is not None and initial_ranks is not None:
@@ -103,23 +97,12 @@ def pagerank(
     else:
         verts = graph.vertices().persist()
         n = verts.count()
-    if len(edge_views) == 1:
-        out_deg = (
-            edge_views[0]
-            .groupBy(F.col("src").alias("vid"))
-            .agg(F.count(F.lit(1)).alias("out_deg"))
-            .persist()
-        )
-    else:
-        degs = None
-        for v in edge_views:
-            d = v.groupBy(F.col("src").alias("vid")).agg(
-                F.count(F.lit(1)).alias("_od")
-            )
-            degs = d if degs is None else degs.unionByName(d)
-        out_deg = (
-            degs.groupBy("vid").agg(F.sum("_od").alias("out_deg")).persist()
-        )
+    out_deg = (
+        per_view(edge_views, lambda v: v.select("src"))
+        .groupBy(F.col("src").alias("vid"))
+        .agg(F.count(F.lit(1)).alias("out_deg"))
+        .persist()
+    )
 
     start_iter = 0
     ranks = None
@@ -159,10 +142,9 @@ def pagerank(
             F.col("vid").alias("src"),
             (F.col("rank") / F.col("out_deg")).alias("w"),
         )
-        contribs = None
-        for v in edge_views:
-            c = v.join(wsrc, on="src").select("dst", "w")
-            contribs = c if contribs is None else contribs.unionByName(c)
+        contribs = per_view(
+            edge_views, lambda v: v.join(wsrc, on="src").select("dst", "w")
+        )
         if salt_buckets > 0:
             salted = with_salt(contribs, salt_buckets, cols=["w"])
             partial = salted.groupBy("dst", "salt").agg(

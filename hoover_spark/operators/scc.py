@@ -111,7 +111,7 @@ def scc(
     spark = graph.edges.sparkSession
     loop = loop or IterationLoop(spark, kernel="scc", max_iterations=10_000)
 
-    edges = graph.cleaned().select("src", "dst")
+    edges = graph.clean_edges().select("src", "dst")
     active, stats = loop.hold_observed(
         graph.vertices(), F.count(F.lit(1)).alias("n_active")
     )

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from hoover_spark.operators.graph import Graph
+from hoover_spark.operators.graph import Graph, per_view
 
 
 def _orient(canon: DataFrame, deg: DataFrame) -> DataFrame:
@@ -165,28 +165,26 @@ def triangle_delta(
         """old_adj ⋈ broadcast(cand) on (a, b) = (key_a, key_b); the
         old views are disjoint by construction (delta_sym excludes
         stored pairs), so the per-view union never double-counts."""
-        out = None
-        for v in old_sym_views:
-            adj = v.select(F.col("src").alias("_a"), F.col("dst").alias("_b"))
-            m = adj.join(
+        return per_view(
+            old_sym_views,
+            lambda v: v.select(F.col("src").alias("_a"), F.col("dst").alias("_b"))
+            .join(
                 F.broadcast(cand),
                 (F.col("_a") == F.col(key_a)) & (F.col("_b") == F.col(key_b)),
-            ).select(*out_cols)
-            out = m if out is None else out.unionByName(m)
-        return out
+            )
+            .select(*out_cols),
+        )
 
     # case 1 — new (u,v), old (u,w) and (v,w): first fan out over
     # N_old(u) (b is only bounded by (a,b)=(u,*), so key_b is a free
     # match via the join's `u` side), then membership-check (v,w).
     nu = newU.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    cand1 = None
-    for view in old_sym_views:
-        adj = view.select(F.col("src").alias("_a"), F.col("dst").alias("_b"))
-        m = adj.join(F.broadcast(nu), F.col("_a") == F.col("u")).select(
-            "u", "v", F.col("_b").alias("w")
-        )
-        cand1 = m if cand1 is None else cand1.unionByName(m)
-    cand1 = cand1.where(F.col("w") != F.col("v"))
+    cand1 = per_view(
+        old_sym_views,
+        lambda v: v.select(F.col("src").alias("_a"), F.col("dst").alias("_b"))
+        .join(F.broadcast(nu), F.col("_a") == F.col("u"))
+        .select("u", "v", F.col("_b").alias("w")),
+    ).where(F.col("w") != F.col("v"))
     tri1 = scan_old(cand1, "v", "w", ["u", "v", "w"])
 
     # case 2 — two new edges share center c; closing edge (u,v) is old

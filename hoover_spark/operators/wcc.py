@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from hoover_spark.operators.graph import Graph
+from hoover_spark.operators.graph import Graph, per_view
 from hoover_spark.plans.iteration import IterationLoop
 
 
@@ -129,12 +129,6 @@ def wcc(
         max_iterations=max_iterations,
     )
 
-    # Edge set as a LIST of views (usually one). A composite graph
-    # (persisted base + micro-batch delta, DeltaGraph) yields two: the
-    # per-round message join runs per view and unions the (small,
-    # frontier-bounded) outputs, so the base keeps its persisted
-    # hash-partitioning — a union of the views themselves would erase
-    # it and re-shuffle the full edge side every round.
     edge_views = graph.sym_edge_views()
     warm = initial_labels is not None
 
@@ -217,10 +211,10 @@ def wcc(
         else:
             front = state.where(F.col("label") < F.col("_prev"))
         fsrc = front.select(F.col("vid").alias("src"), "label")
-        msgs = None
-        for v in edge_views:
-            m = v.join(fsrc, on="src").select(F.col("dst").alias("vid"), "label")
-            msgs = m if msgs is None else msgs.unionByName(m)
+        msgs = per_view(
+            edge_views,
+            lambda v: v.join(fsrc, on="src").select(F.col("dst").alias("vid"), "label"),
+        )
         mins = msgs.groupBy("vid").agg(
             F.min("label").alias("msg_label"), F.count(F.lit(1)).alias("msg_cnt")
         )
@@ -311,11 +305,10 @@ def multi_contract(edge_views, num_partitions: int = 32):
     All levels are lazy (no action): the whole pyramid lands inside
     round 1's plan.
     """
-    mapping = local_contract(edge_views[0], num_partitions, assume_partitioned=True)
-    for v in edge_views[1:]:
-        mapping = mapping.unionByName(
-            local_contract(v, num_partitions, assume_partitioned=True)
-        )
+    mapping = per_view(
+        edge_views,
+        lambda v: local_contract(v, num_partitions, assume_partitioned=True),
+    )
     cur = mapping
     for _ in range(CONTRACT_LEVELS - 1):
         star = cur.select(F.col("vid").alias("src"), F.col("root").alias("dst"))

@@ -125,7 +125,7 @@ def rmat_graph(
 
 def edges_to_pairs(g: Graph) -> list[tuple[int, int]]:
     """Collect a small fixture's edge list for driver-side oracles."""
-    return [(r["src"], r["dst"]) for r in g.cleaned().collect()]
+    return [(r["src"], r["dst"]) for r in g.clean_edges().collect()]
 
 
 __all__ = [

@@ -28,7 +28,7 @@ def _roundtrip(blocks):
 def test_csr_blocks_roundtrip(spark):
     g = two_cliques(spark, k=4, bridge=True)
     blocks = g.csr_blocks(num_parts=4).collect()
-    expected = {(r["src"], r["dst"]) for r in g.symmetric().collect()}
+    expected = {(r["src"], r["dst"]) for r in g.sym_edges().collect()}
     assert _roundtrip(blocks) == expected
 
 

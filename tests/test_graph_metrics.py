@@ -227,3 +227,20 @@ def test_four_cycles_center_cap(spark):
     # the hub contributes wedge pairs but no C4; cap excluding it must
     # not change the count here, and never raises it
     assert capped <= full
+
+
+def test_derived_views_read_persisted_edges(spark):
+    """``canonical()`` and ``degrees()`` read the persisted edge views
+    whatever was built first: on a fresh graph, and on one whose first
+    read was ``sym_edges()``. Plans only — no Spark action."""
+    from hoover_spark.operators.graph import graph_from_pairs
+
+    pairs = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 3)]
+    fresh = graph_from_pairs(spark, pairs)
+    sym_first = graph_from_pairs(spark, pairs)
+    sym_first.sym_edges()
+    for g in (fresh, sym_first):
+        for df in (g.canonical(), g.degrees()):
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "InMemoryRelation" in plan
+        g.unpersist()

@@ -108,7 +108,7 @@ def test_scc_directed_ring_single_component(spark):
 
 def test_scc_self_loop_only_vertex_is_singleton(spark):
     """A vertex whose only incidence is a self-loop still appears,
-    as its own SCC (vertices() keeps it; cleaned() drops the loop)."""
+    as its own SCC (vertices() keeps it; clean_edges() drops the loop)."""
     pairs = [(0, 1), (1, 0), (5, 5)]
     got = run_scc(spark, pairs)
     assert got == {0: 0, 1: 0, 5: 5}

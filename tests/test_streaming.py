@@ -18,7 +18,7 @@ def _write_drops(spark, g: Graph, drops_dir: str, k: int):
     """Split a graph's edges deterministically into k ordered drops."""
     from pyspark.sql import functions as F
 
-    e = g.cleaned().withColumn("b", F.pmod(F.xxhash64("src", "dst"), F.lit(k)))
+    e = g.clean_edges().withColumn("b", F.pmod(F.xxhash64("src", "dst"), F.lit(k)))
     for b in range(k):
         e.where(F.col("b") == b).select("src", "dst").coalesce(1).write.parquet(
             os.path.join(drops_dir, f"drop_{b:03d}")
@@ -70,7 +70,7 @@ def test_duplicate_batches_idempotent(spark, tmp_path):
     assert got == want
     # durable edge store holds each edge exactly once
     n_store = spark.read.parquet(os.path.join(str(tmp_path / "work"), "edges")).count()
-    assert n_store == g.cleaned().count()
+    assert n_store == g.clean_edges().count()
 
 
 def test_pagerank_stream_equals_batch(spark, tmp_path):
@@ -105,9 +105,9 @@ def test_stream_resume_after_restart(spark, tmp_path):
     os.makedirs(drops2)
     from pyspark.sql import functions as F
 
-    e = g.cleaned().withColumn("b", F.pmod(F.xxhash64("src", "dst"), F.lit(2)))
-    e.where("b = 0").select("src", "dst").write.parquet(drops1 + "/p")
-    e.where("b = 1").select("src", "dst").write.parquet(drops2 + "/p")
+    e = g.clean_edges().withColumn("b", F.pmod(F.xxhash64("src", "dst"), F.lit(2)))
+    e.where("b = 0").select("src", "dst").coalesce(1).write.parquet(drops1 + "/p")
+    e.where("b = 1").select("src", "dst").coalesce(1).write.parquet(drops2 + "/p")
     import glob
     import shutil
 
@@ -151,7 +151,7 @@ def test_dedup_antijoin_is_bucket_pruned(spark, tmp_path):
         n_buckets=32,
     )
     # seed batch: spread the store across (almost) all buckets
-    big = rmat_graph(spark, scale=8, edge_factor=4).cleaned()
+    big = rmat_graph(spark, scale=8, edge_factor=4).clean_edges()
     state.apply_batch(big, 0)
     assert state.last_scan["bucket_dirs_total"] == 0  # store was empty
 
@@ -190,7 +190,7 @@ def test_per_batch_graph_is_base_plus_delta(spark, tmp_path):
     state = IncrementalGraphState(
         spark, work, kernel="wcc", num_partitions=8, n_buckets=32
     )
-    big = rmat_graph(spark, scale=8, edge_factor=4).cleaned()
+    big = rmat_graph(spark, scale=8, edge_factor=4).clean_edges()
     state.apply_batch(big, 0)
     assert state.base_builds == 1
 
@@ -243,7 +243,7 @@ def test_compaction_folds_delta_into_base(spark, tmp_path, monkeypatch):
     state = IncrementalGraphState(
         spark, work, kernel="wcc", num_partitions=8, n_buckets=16
     )
-    g1 = rmat_graph(spark, scale=7, edge_factor=4).cleaned()
+    g1 = rmat_graph(spark, scale=7, edge_factor=4).clean_edges()
     state.apply_batch(g1, 0)
     assert state.base_builds == 1
     # a second large batch overflows the 1% threshold (floor 4096 rows
@@ -253,7 +253,7 @@ def test_compaction_folds_delta_into_base(spark, tmp_path, monkeypatch):
 
     g2 = (
         rmat_graph(spark, scale=9, edge_factor=8)
-        .cleaned()
+        .clean_edges()
         .select(
             (F.col("src") + 50_000_000).alias("src"),
             (F.col("dst") + 50_000_000).alias("dst"),
@@ -323,7 +323,7 @@ def test_state_write_is_o_changed(spark, tmp_path):
     state = IncrementalGraphState(
         spark, work, kernel="wcc", num_partitions=8, n_buckets=32
     )
-    big = rmat_graph(spark, scale=8, edge_factor=4).cleaned()
+    big = rmat_graph(spark, scale=8, edge_factor=4).clean_edges()
     state.apply_batch(big, 0)
     assert state.state_snapshot_writes == 1          # cold start: full write
     n_v = state._n_state_rows
@@ -374,7 +374,7 @@ def test_state_snapshot_rotation(spark, tmp_path, monkeypatch):
     state = IncrementalGraphState(
         spark, work, kernel="wcc", num_partitions=8, n_buckets=16
     )
-    big = rmat_graph(spark, scale=7, edge_factor=4).cleaned()
+    big = rmat_graph(spark, scale=7, edge_factor=4).clean_edges()
     state.apply_batch(big, 0)
     assert state.state_snapshot_writes == 1
 
@@ -455,7 +455,7 @@ def test_triangles_stream_resume(spark, tmp_path):
     from hoover_spark.streaming.ingest import IncrementalGraphState
 
     g = rmat_graph(spark, scale=6, edge_factor=6)
-    e = g.cleaned().persist()
+    e = g.clean_edges().persist()
     half1 = e.limit(e.count() // 2)
     work = str(tmp_path / "work")
     s1 = IncrementalGraphState(
@@ -511,7 +511,7 @@ def test_sssp_state_write_o_changed_and_resume(spark, tmp_path):
     from hoover_spark.operators.paths import sssp
     from hoover_spark.streaming.ingest import IncrementalGraphState
 
-    big = rmat_graph(spark, scale=7, edge_factor=4).cleaned()
+    big = rmat_graph(spark, scale=7, edge_factor=4).clean_edges()
     seed = min(r["vid"] for r in Graph(big).vertices().collect())
     work = str(tmp_path / "work")
     st = IncrementalGraphState(

@@ -304,7 +304,7 @@ def main():
 
     color = verts.select("vid", F.col("vid").alias("color"))
     msgs = (
-        g.cleaned()
+        g.clean_edges()
         .join(color.select(F.col("vid").alias("src"), "color"), on="src")
         .groupBy(F.col("dst").alias("vid"))
         .agg(F.min("color").alias("mc"))

@@ -57,7 +57,9 @@ def main():
     import __spark_entry__ as entry
     from hoover_spark.session import get_spark
 
-    spark = get_spark("verify_entry")
+    spark = get_spark(
+        "verify_entry", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -75,14 +77,14 @@ def main():
             spark_cols = df.columns
             spark_rows = [tuple(r) for r in df.collect()]
         except Exception as ex:
-            print(f"FAIL {name}: spark error {type(ex).__name__}: {ex}")
+            print(f"FAIL {name}: spark error {type(ex).__name__}: {ex}", flush=True)
             failures.append(name)
             continue
         dt = time.time() - t0
         if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(spark_rows)} rows, {dt:.1f}s)")
+            print(f"ok   {name}: rows-only ({len(spark_rows)} rows, {dt:.1f}s)", flush=True)
             if len(spark_rows) == 0:
-                print(f"     WARNING: {name} returned 0 rows")
+                print(f"     WARNING: {name} returned 0 rows", flush=True)
             continue
         try:
             # Arrow fetch so DuckDB HUGEINT surfaces as Decimal (the
@@ -91,30 +93,30 @@ def main():
             ora_cols = tbl.column_names
             ora_rows = [tuple(d[c] for c in ora_cols) for d in tbl.to_pylist()]
         except Exception as ex:
-            print(f"FAIL {name}: duckdb error {ex}")
+            print(f"FAIL {name}: duckdb error {ex}", flush=True)
             failures.append(name)
             continue
         sc, sv = frame_key(spark_cols, spark_rows)
         oc, ov = frame_key(ora_cols, ora_rows)
         if sc != oc:
-            print(f"FAIL {name}: columns {sc} vs {oc}")
+            print(f"FAIL {name}: columns {sc} vs {oc}", flush=True)
             failures.append(name)
             continue
         if len(sv) != len(ov):
-            print(f"FAIL {name}: rowcount {len(sv)} vs {len(ov)}")
+            print(f"FAIL {name}: rowcount {len(sv)} vs {len(ov)}", flush=True)
             failures.append(name)
             continue
         if sv != ov:
             bad = [i for i, (a, b) in enumerate(zip(sv, ov)) if a != b]
-            print(f"FAIL {name}: {len(bad)}/{len(sv)} rows differ; first: ")
+            print(f"FAIL {name}: {len(bad)}/{len(sv)} rows differ; first: ", flush=True)
             for i in bad[:3]:
-                print(f"  spark={sv[i]}")
-                print(f"  duck ={ov[i]}")
+                print(f"  spark={sv[i]}", flush=True)
+                print(f"  duck ={ov[i]}", flush=True)
             failures.append(name)
             continue
-        print(f"ok   {name}: {len(sv)} rows match ({dt:.1f}s)")
+        print(f"ok   {name}: {len(sv)} rows match ({dt:.1f}s)", flush=True)
 
-    print("\n== summary:", "ALL PASS" if not failures else f"FAILED: {failures}")
+    print("\n== summary:", "ALL PASS" if not failures else f"FAILED: {failures}", flush=True)
     return 1 if failures else 0
 
 
