@@ -9,10 +9,12 @@ iteration so the unrolled DuckDB twin is hash-exact (the same
 per-round re-basing trick as k-means centroids: both engines enter
 every round from identical doubles).
 
-These are the bounded-round analysis forms; for convergence-driven
-runs at scale, drive them through ``plans/iteration.py`` like
-pagerank (the loop, checkpointing, and Observation machinery are
-orthogonal to the update rule).
+Both run their rounds on ``IterationLoop.run``
+(``plans/iteration.py``) with a fixed round count: each round's state
+is held in the round's one checkpoint action, so the plan of round N
+never contains rounds 1..N−1. Weighted PageRank carries a static
+"dangling" flag in its state and measures the next round's dangling
+mass in that action's Observation, as pagerank does.
 
 Scale notes: per round, exactly one shuffle (the dst-keyed message
 sum — map-side combined); the edge side should be the Graph's
@@ -26,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
+from hoover_spark.plans.iteration import IterationLoop, fixed_rounds
 
 
 def katz(
@@ -44,10 +47,11 @@ def katz(
     doubles. Vertices with no in-edges hold x = β. Returns
     ``(vid, katz)``.
     """
+    loop = IterationLoop(graph.edges.sparkSession, kernel="katz", max_iterations=n_iterations)
     edges = graph.clean_edges()
-    verts = graph.vertices()
-    x = verts.select("vid", F.lit(float(beta)).alias("x"))
-    for _ in range(n_iterations):
+    x = graph.vertices().select("vid", F.lit(float(beta)).alias("x"))
+
+    def step(x, _it, _prev):
         msgs = (
             edges.join(
                 x.select(F.col("vid").alias("src"), "x"), on="src"
@@ -55,14 +59,17 @@ def katz(
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.sum("x").alias("s"))
         )
-        x = verts.join(msgs, on="vid", how="left").select(
+        stepped = x.select("vid").join(msgs, on="vid", how="left").select(
             "vid",
             F.round(
                 F.lit(float(alpha)) * F.coalesce("s", F.lit(0.0)) + F.lit(float(beta)),
                 6,
             ).alias("x"),
         )
-    return x.select("vid", F.col("x").alias("katz"))
+        return stepped, [F.count(F.lit(1)).alias("n_vertices")]
+
+    x, it, _ = loop.run(x, step, fixed_rounds("n_vertices"), rounds=n_iterations)
+    return loop.finish(x.select("vid", F.col("x").alias("katz")), it)
 
 
 def weighted_pagerank(
@@ -89,6 +96,9 @@ def weighted_pagerank(
     the rank join, so the per-round plan is identical to unweighted
     pagerank's: one src join, one dst-keyed sum, one left join back.
     """
+    loop = IterationLoop(
+        graph.edges.sparkSession, kernel="weighted_pagerank", max_iterations=n_iterations
+    )
     edges = graph.clean_edges().select("src", "dst", weight_col.alias("w"))
     verts = graph.vertices()
     n1 = verts.agg(F.count(F.lit(1)).alias("n"))
@@ -98,31 +108,45 @@ def weighted_pagerank(
         "src", "dst", (F.col("w").cast("double") / F.col("s")).alias("p")
     )
     d = float(damping)
-    r = verts.crossJoin(F.broadcast(n1)).select(
-        "vid", "n", F.round(F.lit(1.0) / F.col("n"), 6).alias("rank")
+    dangling_mass = F.sum(
+        F.when(F.col("dangling"), F.col("rank")).otherwise(F.lit(0.0))
+    ).alias("dm")
+    # state (vid, n, dangling, rank): the static dangling flag kills the
+    # per-round anti-join, and each checkpoint's Observation measures
+    # the next round's dangling mass
+    r, stats = loop.hold_observed(
+        verts.crossJoin(F.broadcast(n1))
+        .join(strength.select(F.col("src").alias("vid"), "s"), on="vid", how="left")
+        .select(
+            "vid",
+            "n",
+            F.col("s").isNull().alias("dangling"),
+            F.round(F.lit(1.0) / F.col("n"), 6).alias("rank"),
+        ),
+        dangling_mass,
     )
-    for _ in range(n_iterations):
+
+    def step(r, _it, prev):
         msgs = (
             trans.join(r.select(F.col("vid").alias("src"), "rank"), on="src")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.sum(F.col("rank") * F.col("p")).alias("m"))
         )
-        dangle = (
-            r.join(strength.select(F.col("src").alias("vid")), on="vid", how="left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
+        stepped = r.join(msgs, on="vid", how="left").select(
+            "vid",
+            "n",
+            "dangling",
+            F.round(
+                (F.lit(1.0) - F.lit(d)) / F.col("n")
+                + F.lit(d)
+                * (
+                    F.coalesce("m", F.lit(0.0))
+                    + F.lit(float(prev["dm"] or 0.0)) / F.col("n")
+                ),
+                6,
+            ).alias("rank"),
         )
-        r = (
-            r.join(msgs, on="vid", how="left")
-            .crossJoin(F.broadcast(dangle))
-            .select(
-                "vid",
-                "n",
-                F.round(
-                    (F.lit(1.0) - F.lit(d)) / F.col("n")
-                    + F.lit(d)
-                    * (F.coalesce("m", F.lit(0.0)) + F.col("dm") / F.col("n")),
-                    6,
-                ).alias("rank"),
-            )
-        )
-    return r.select("vid", "rank")
+        return stepped, [dangling_mass, F.count(F.lit(1)).alias("n_vertices")]
+
+    r, it, _ = loop.run(r, step, fixed_rounds("n_vertices"), rounds=n_iterations, stats=stats)
+    return loop.finish(r.select("vid", "rank"), it)

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from hoover_spark.operators.similarity import _dot, with_unit_vec
+from hoover_spark.plans.iteration import IterationLoop, until_zero
 
 
 def _as_double(vec_col):
@@ -60,13 +61,21 @@ def kmeans_centroids(
     ``(cluster, centroid: array<double>)`` — the centroids the FINAL
     assignment was computed against (rounded to 6 dp except the raw
     float32-exact init).
+
+    The ``assign_rounds − 1`` updates run on ``IterationLoop.run``
+    (``plans/iteration.py``): each round (assign + update) holds the
+    centroid table in one checkpoint action, whose Observation counts
+    the centroids that changed. A round that changes none is a fixed
+    point — every later round would repeat it — so the updates stop
+    there and the final assignment is the same.
     """
     if k < 1 or assign_rounds < 1:
         raise ValueError("k and assign_rounds must be >= 1")
+    loop = IterationLoop(emb.sparkSession, kernel="kmeans", max_iterations=assign_rounds - 1)
     ev = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
     # init: k smallest ids, cluster = rank-1 (window runs over k rows
     # post-limit — not a global single-partition sort of the corpus)
-    cent = (
+    cent = loop.hold(
         ev.orderBy(id_col)
         .limit(k)
         .select(
@@ -74,13 +83,13 @@ def kmeans_centroids(
             F.col("v").alias("centroid"),
         )
     )
-    assign = None
-    for r in range(assign_rounds):
+
+    def assignment(cent):
         # score = c·c − 2 v·c  (|v−c|² minus the row-constant v·v):
         # same argmin, one fewer dot product, and bit-portable because
         # both engines fold the dot sequentially over doubles.
         scored = (
-            ev.crossJoin(F.broadcast(cent))
+            ev.crossJoin(F.broadcast(cent.select("cluster", "centroid")))
             .select(
                 id_col,
                 "cluster",
@@ -91,18 +100,19 @@ def kmeans_centroids(
                 ).alias("score"),
             )
         )
-        assign = (
+        return (
             scored.groupBy(id_col)
             .agg(F.min(F.struct("score", "cluster")).alias("m"))
             .select(id_col, F.col("m.cluster").alias("cluster"))
         )
-        if r == assign_rounds - 1:
-            break
+
+    def step(cent, _it, _prev):
         # update: element-wise mean per cluster. posexplode rows are
         # combined map-side (hash aggregate) — only k·d partials per
         # partition shuffle.
         upd = (
-            assign.join(ev, on=id_col)
+            assignment(cent)
+            .join(ev, on=id_col)
             .select("cluster", F.posexplode("v").alias("pos", "val"))
             .groupBy("cluster", "pos")
             .agg(F.round(F.avg("val"), 6).alias("m"))
@@ -115,11 +125,16 @@ def kmeans_centroids(
             )
         )
         # empty cluster keeps its previous centroid
-        cent = (
-            cent.join(upd, on="cluster", how="left")
-            .select("cluster", F.coalesce("newc", "centroid").alias("centroid"))
+        stepped = cent.join(upd, on="cluster", how="left").select(
+            "cluster",
+            F.coalesce("newc", "centroid").alias("centroid"),
+            F.coalesce(F.col("newc") != F.col("centroid"), F.lit(False)).alias("moved"),
         )
-    return assign, cent
+        return stepped, [F.sum(F.col("moved").cast("long")).alias("n_moved")]
+
+    cent, it, _ = loop.run(cent, step, until_zero("n_moved"), rounds=assign_rounds - 1)
+    cent = loop.finish(cent.select("cluster", "centroid"), it)
+    return assignment(cent), cent
 
 
 def kmeans_assign(

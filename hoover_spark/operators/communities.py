@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 from hoover_spark.operators.graph import Graph
 from hoover_spark.operators.triangles import oriented_edges, triangles
 from hoover_spark.operators.wcc import wcc
+from hoover_spark.plans.iteration import IterationLoop, until_zero
 
 
 def detect_communities_from_points(
@@ -213,11 +214,6 @@ def modularity(graph: Graph, labels: DataFrame) -> DataFrame:
     )
 
 
-# Synchronous move rounds between local checkpoints of the label state
-# (bounds the round-over-round lineage; 2-round runs never reach it).
-MOVE_CHECKPOINT_EVERY = 4
-
-
 def louvain_move(
     graph: "Graph",
     n_rounds: int = 2,
@@ -263,7 +259,10 @@ def louvain_move(
 
 
 def _weighted_move_rounds(
-    wall: DataFrame, n_rounds: int, labels: DataFrame | None = None
+    wall: DataFrame,
+    n_rounds: int,
+    labels: DataFrame | None = None,
+    loop: IterationLoop | None = None,
 ) -> DataFrame:
     """Synchronous Louvain move rounds on a weighted symmetric edge
     list ``(src, dst, w)`` that INCLUDES self-loops under the doubled
@@ -278,27 +277,41 @@ def _weighted_move_rounds(
     ``w(v,c)`` excludes self-loops (they move with the vertex — a
     candidate-constant). Int64-exact, ties → smaller label.
 
+    The rounds run on ``IterationLoop.run`` (``plans/iteration.py``,
+    ``loop`` or a fresh one). The weighted degrees are held once, and
+    ``S`` comes from that hold's Observation. The state is
+    ``(vid, label, k)`` (``k = 0`` outside ``wall``), held once per
+    round; the round's Observation counts the vertices that moved. A
+    round in which none moved is a fixed point, which every later
+    synchronous round would repeat, so the run stops there.
+
     Plan shape per round: one groupBy(label) for Σtot (|V|-sized), one
     neighbor-label groupBy for w (map-side combined on the persisted
-    hash(src) edge partitioning), one broadcast of the 1-row S
-    aggregate, one argmax groupBy(vid). No windows over edges, no
-    collect; candidate volume is Σ_v |distinct neighbor labels| ≤ 2m.
+    hash(src) edge partitioning), one argmax groupBy(vid). No windows
+    over edges, no collect; candidate volume is
+    Σ_v |distinct neighbor labels| ≤ 2m.
     """
-    k = wall.groupBy(F.col("src").alias("vid")).agg(F.sum("w").alias("k"))
-    s1 = k.agg(F.sum("k").alias("S"))
+    loop = loop or IterationLoop(wall.sparkSession, kernel="louvain", max_iterations=n_rounds)
+    k, kstats = loop.hold_observed(
+        wall.groupBy(F.col("src").alias("vid")).agg(F.sum("w").alias("k")),
+        F.sum("k").alias("S"),
+    )
+    s_total = F.lit(int(kstats["S"] or 0)).cast("long")
     lab = (
         labels.select("vid", "label")
         if labels is not None
         else k.select("vid", F.col("vid").alias("label"))
     )
+    # left: a vertex outside wall (self-loop-only) has no weight mass
+    # (k = 0, no Σtot share) but must keep its label
+    state = lab.join(k, on="vid", how="left").select(
+        "vid", "label", F.coalesce("k", F.lit(0)).cast("long").alias("k")
+    )
     nself = wall.where(F.col("src") != F.col("dst"))
-    for r in range(n_rounds):
-        dc = (
-            lab.join(k, on="vid")
-            .groupBy("label")
-            .agg(F.sum("k").alias("dc"))
-            .select(F.col("label").alias("c"), "dc")
-        )
+
+    def step(state, _it, _prev):
+        lab = state.select("vid", "label", "k")
+        dc = lab.groupBy(F.col("label").alias("c")).agg(F.sum("k").alias("dc"))
         nbr = (
             nself.join(
                 lab.select(F.col("vid").alias("dst"), F.col("label").alias("c")),
@@ -311,18 +324,15 @@ def _weighted_move_rounds(
         cand = nbr.unionByName(own).groupBy("vid", "c").agg(F.max("wc").alias("wc"))
         scored = (
             cand.join(lab, on="vid")
-            .join(k, on="vid", how="left")
-            .withColumn("k", F.coalesce("k", F.lit(0)))
-            # left: a vertex outside wall (self-loop-only) has no
-            # weight mass (no dc row) but must keep its label
             .join(dc, on="c", how="left")
             .withColumn("dc", F.coalesce("dc", F.lit(0)))
-            .crossJoin(F.broadcast(s1))
             .select(
                 "vid",
                 "c",
+                "label",
+                "k",
                 (
-                    F.col("S") * F.col("wc")
+                    s_total * F.col("wc")
                     - F.col("k")
                     * (
                         F.col("dc")
@@ -331,14 +341,19 @@ def _weighted_move_rounds(
                 ).alias("score"),
             )
         )
-        lab = (
+        stepped = (
             scored.groupBy("vid")
-            .agg(F.min(F.struct((-F.col("score")).alias("ns"), F.col("c"))).alias("b"))
-            .select("vid", F.col("b.c").alias("label"))
+            .agg(
+                F.min(F.struct((-F.col("score")).alias("ns"), F.col("c"))).alias("b"),
+                F.max("label").alias("prev"),
+                F.max("k").alias("k"),
+            )
+            .select("vid", F.col("b.c").alias("label"), "k", "prev")
         )
-        if (r + 1) % MOVE_CHECKPOINT_EVERY == 0 and r + 1 < n_rounds:
-            lab = lab.localCheckpoint(eager=True)
-    return lab
+        return stepped, [F.sum((F.col("label") != F.col("prev")).cast("long")).alias("moved")]
+
+    state, _, _ = loop.run(state, step, until_zero("moved"), rounds=n_rounds)
+    return state.select("vid", "label")
 
 
 def louvain_levels(
@@ -361,10 +376,11 @@ def louvain_levels(
     weights; contraction sums stay integral), so the 2-level contract
     query has a hash-exact unrolled DuckDB twin.
     """
+    loop = IterationLoop(graph.edges.sparkSession, kernel="louvain", max_iterations=n_rounds)
     wall = graph.sym_edges().select("src", "dst", F.lit(1).cast("long").alias("w"))
     mapping = None  # orig vid -> current-level label
     for lvl in range(n_levels):
-        lab = _weighted_move_rounds(wall, n_rounds)
+        lab = _weighted_move_rounds(wall, n_rounds, loop=loop)
         mapping = (
             lab
             if mapping is None
@@ -377,7 +393,7 @@ def louvain_levels(
             )
         )
         if lvl + 1 < n_levels:
-            wall = (
+            wall = loop.hold(
                 wall.join(
                     lab.select(F.col("vid").alias("src"), F.col("label").alias("ls")),
                     on="src",
@@ -388,9 +404,8 @@ def louvain_levels(
                 )
                 .groupBy(F.col("ls").alias("src"), F.col("ld").alias("dst"))
                 .agg(F.sum("w").alias("w"))
-                .localCheckpoint(eager=True)
             )
-            mapping = mapping.localCheckpoint(eager=True)
+            mapping = loop.hold(mapping)
     # vertices whose only incidence is a self-loop never reach
     # sym_edges (same guard as wcc's pre_contract): singleton community
     loners = (

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph, per_view
-from hoover_spark.plans.iteration import IterationLoop, until_zero
+from hoover_spark.plans.iteration import IterationLoop, fixed_rounds, until_zero
 
 
 def bfs_hops(
@@ -366,11 +366,7 @@ def random_walks(
         )
         return picked, [F.count(F.lit(1)).alias("n_walks")]
 
-    def observe(stats, _prev):
-        n = int(stats["n_walks"] or 0)
-        return n, 0.0, n, False
-
-    state, _, _ = loop.run(state, step, observe, rounds=walk_length)
+    state, _, _ = loop.run(state, step, fixed_rounds("n_walks"), rounds=walk_length)
     positions.append(state)
     out = None
     for t, pos in enumerate(positions):
@@ -418,10 +414,13 @@ def hyperball(graph: Graph, h: int, lgk: int = 12) -> DataFrame:
     4 KB dense, bytes while sparse); iteration t unions each vertex's
     sketch with its neighbors' via ``hll_union_agg`` — a single
     groupBy per round, exactly the WCC message shape with sketch-merge
-    instead of min. This is THE 100 TB-scale neighborhood-function
-    plan: O(|V|) state, O(|E|) sketch shuffle per round, no pair-set
-    blowup, registers merged JVM-side (Datasketches), no Python.
+    instead of min. The ``h`` rounds run on ``IterationLoop.run``
+    (``plans/iteration.py``), which holds each round's sketches. This
+    is THE 100 TB-scale neighborhood-function plan: O(|V|) state,
+    O(|E|) sketch shuffle per round, no pair-set blowup, registers
+    merged JVM-side (Datasketches), no Python.
     """
+    loop = IterationLoop(graph.edges.sparkSession, kernel="hyperball", max_iterations=h)
     sym = graph.sym_edges().select("src", "dst")
     # seed sketches: one-row-per-vertex sketch of {vid}
     state = (
@@ -429,17 +428,21 @@ def hyperball(graph: Graph, h: int, lgk: int = 12) -> DataFrame:
         .groupBy("vid")
         .agg(F.hll_sketch_agg(F.col("vid"), F.lit(lgk)).alias("sketch"))
     )
-    for _ in range(h):
+
+    def step(state, _it, _prev):
         msgs = sym.join(
             state.select(F.col("vid").alias("src"), "sketch"), on="src"
         ).select(F.col("dst").alias("vid"), "sketch")
-        state = (
+        merged = (
             state.unionByName(msgs)
             .groupBy("vid")
             .agg(F.hll_union_agg(F.col("sketch"), F.lit(True)).alias("sketch"))
-        ).localCheckpoint(eager=True)
-    return state.select(
-        "vid", F.hll_sketch_estimate(F.col("sketch")).alias("nf_estimate")
+        )
+        return merged, [F.count(F.lit(1)).alias("n_vertices")]
+
+    state, it, _ = loop.run(state, step, fixed_rounds("n_vertices"), rounds=h)
+    return loop.finish(
+        state.select("vid", F.hll_sketch_estimate(F.col("sketch")).alias("nf_estimate")), it
     )
 
 

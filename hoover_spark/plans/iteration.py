@@ -218,7 +218,6 @@ class IterationLoop:
         return out
 
 
-
 def until_zero(name: str) -> Callable[[dict, dict | None], tuple[int, float, int, bool]]:
     """``observe`` for frontier kernels: the Observation count ``name``
     is the round's rows shuffled, delta and frontier, and the run stops
@@ -227,6 +226,18 @@ def until_zero(name: str) -> Callable[[dict, dict | None], tuple[int, float, int
     def observe(stats: dict, _prev: dict | None) -> tuple[int, float, int, bool]:
         n = int(stats[name] or 0)
         return n, float(n), n, n == 0
+
+    return observe
+
+
+def fixed_rounds(name: str) -> Callable[[dict, dict | None], tuple[int, float, int, bool]]:
+    """``observe`` for bounded-round kernels: the Observation count
+    ``name`` is the round's rows shuffled and frontier, and the run
+    stops only at its round cap."""
+
+    def observe(stats: dict, _prev: dict | None) -> tuple[int, float, int, bool]:
+        n = int(stats[name] or 0)
+        return n, 0.0, n, False
 
     return observe
 

@@ -280,7 +280,7 @@ def main():
          plan_of(neighborhood_function(g, 2)))
     )
     sections.append(
-        ("hyperball h=1 (hll_union_agg sketch merge — the at-scale ANF)",
+        ("hyperball h=1 (estimate over the held hll_union_agg sketches — the at-scale ANF)",
          plan_of(hyperball(g, 1)))
     )
     sections.append(
@@ -360,8 +360,10 @@ def main():
     # (HashAggregate x2 on (cluster, pos)); semantic_dedup's pair join
     # keys on the cluster id (equi-join, AQE-splittable), never
     # all-pairs; a louvain move round is three label/degree joins + an
-    # argmax groupBy with the 1-row m aggregate broadcast;
-    # degree_quantiles is one global percentile agg with partials.
+    # argmax groupBy; degree_quantiles is one global percentile agg
+    # with partials. Louvain's and k-means' rounds run on
+    # IterationLoop.run, so their dumps show the plan over the held
+    # round state.
     from hoover_spark.operators.clustering import kmeans_assign, semantic_dedup_pairs
     from hoover_spark.operators.communities import louvain_levels, louvain_move
     from hoover_spark.operators.graph import degree_quantiles
@@ -375,11 +377,11 @@ def main():
          plan_of(semantic_dedup_pairs(emb, k=4, assign_rounds=2, tau=0.3)))
     )
     sections.append(
-        ("louvain_move (1 round: label joins + argmax groupBy)",
+        ("louvain_move (held label state after 1 round)",
          plan_of(louvain_move(g, n_rounds=1)))
     )
     sections.append(
-        ("louvain_levels (2 weighted levels + contraction)",
+        ("louvain_levels (2 weighted levels + contraction, held per level)",
          plan_of(louvain_levels(g, n_levels=2, n_rounds=1)))
     )
     sections.append(
@@ -393,18 +395,19 @@ def main():
     # folded into the edge side ONCE); token_rarity is explode →
     # freq groupBy → tok equi-join → id groupBy (all hash aggregates);
     # cooccurrence pairs join on the BASKET key (bounded by basket
-    # size, not item popularity).
+    # size, not item popularity). Katz and weighted pagerank run their
+    # rounds on IterationLoop.run, so their dumps show the held state.
     from hoover_spark.functions.text import token_rarity
     from hoover_spark.operators.centrality import katz, weighted_pagerank
     from hoover_spark.operators.cooccur import cooccurrence_lift
 
     sections.append(
-        ("katz (1 round: src join + dst sum + left join)",
+        ("katz (held state after 1 round)",
          plan_of(katz(g, n_iterations=1)))
     )
     sections.append(
-        ("weighted_pagerank (1 round, strength folded edge-side)",
-         plan_of(weighted_pagerank(g, (F.col("src") + F.col("dst")) % 5 + 1, n_iterations=1)))
+        ("weighted_pagerank (held state after 1 round)",
+         plan_of(weighted_pagerank(g, F.pmod(F.col("dst"), F.lit(5)) + 1, n_iterations=1)))
     )
     sections.append(
         ("token_rarity (freq groupBy + tok join + id groupBy)",
