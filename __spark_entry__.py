@@ -203,20 +203,20 @@ def q_graph_degrees(spark, sf_dir):
 
 def q_wcc_components(spark, sf_dir):
     g = Graph(_customer_edges(spark, sf_dir))
-    return wcc(g, spark=spark).select("vid", "label")
+    return wcc(g).select("vid", "label")
 
 
 def q_wcc_two_phase(spark, sf_dir):
     """WCC seeded by the per-partition union-find contraction (phase
     one) before the hash-min rounds (phase two)."""
     g = Graph(_customer_edges(spark, sf_dir))
-    return wcc(g, spark=spark, pre_contract=True).select("vid", "label")
+    return wcc(g, pre_contract=True).select("vid", "label")
 
 
 def q_wcc_sizes(spark, sf_dir):
     g = Graph(_customer_edges(spark, sf_dir))
     return (
-        wcc(g, spark=spark)
+        wcc(g)
         .groupBy("label")
         .agg(F.count(F.lit(1)).alias("size"))
         .select(F.col("label").alias("component"), "size")
@@ -225,7 +225,7 @@ def q_wcc_sizes(spark, sf_dir):
 
 def q_pagerank_3iter(spark, sf_dir):
     g = Graph(_order_part_edges(spark, sf_dir))
-    pr = pagerank(g, spark=spark, n_iterations=3)
+    pr = pagerank(g, n_iterations=3)
     return pr.select("vid", F.round("rank", 6).alias("rank"))
 
 
@@ -259,13 +259,11 @@ def q_kcore_3(spark, sf_dir):
 
 
 def q_ppr_3iter(spark, sf_dir):
-    from hoover_spark.operators.ppr import personalized_pagerank
-
     g = Graph(_order_part_edges(spark, sf_dir))
     seeds = g.vertices().where(
         (F.col("vid") % 97 == 0) & (F.col("vid") < 1_000_000)
     )
-    out = personalized_pagerank(g, seeds, n_iterations=3)
+    out = pagerank(g, seeds=seeds, n_iterations=3)
     return out.select("vid", F.round("rank", 6).alias("rank"))
 
 
@@ -312,7 +310,7 @@ def q_vertex_metrics(spark, sf_dir):
     one cached Graph, so the edge views materialize once."""
     g = Graph(_customer_edges(spark, sf_dir))
     deg = g.degrees().select("vid", F.col("degree").cast("long").alias("degree"))
-    labels = wcc(g, spark=spark).select("vid", "label")
+    labels = wcc(g).select("vid", "label")
     sizes = labels.groupBy("label").agg(
         F.count(F.lit(1)).alias("component_size")
     )
@@ -1105,7 +1103,7 @@ def q_repos_wcc(spark, sf_dir):
     assert verify_content_sha256(repos, n_rows).limit(1).count() == 0
     ref_edges(repos).write.mode("overwrite").parquet(REPOS_EDGES_PATH)
     g = Graph(spark.read.parquet(REPOS_EDGES_PATH), num_partitions=16)
-    return wcc(g, spark=spark).select("vid", "label")
+    return wcc(g).select("vid", "label")
 
 
 def q_lsh_ann_topk(spark, sf_dir):

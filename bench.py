@@ -149,7 +149,7 @@ def main() -> None:
         # one Spark job per iteration; chaining several iterations per
         # job measured slower at this scale (BENCH.md r5)
         loop = IterationLoop(spark, kernel="pagerank", max_iterations=200)
-        pagerank(state["graph"], spark=spark, tol=1e-6, loop=loop).count()
+        pagerank(state["graph"], tol=1e-6, loop=loop).count()
         extras["pagerank_iters"] = len(loop.metrics)
 
     def q_wcc():
@@ -160,7 +160,7 @@ def main() -> None:
         # 29.5 s with the jump pinned on every round (also 5 rounds)
         # and 39.6 s / 21 rounds without contraction.
         loop = IterationLoop(spark, kernel="wcc", max_iterations=100)
-        wcc(state["graph"], spark=spark, loop=loop, pre_contract=True).count()
+        wcc(state["graph"], loop=loop, pre_contract=True).count()
         extras["wcc_iters"] = len(loop.metrics)
 
     def q_triangles():

@@ -25,9 +25,13 @@ state rows ``(v1..v4, n, last, matrix)`` expand through an equi-join on
 the last-added vertex against the symmetric edge list; each step sets at
 least one previously-unset matrix bit, so the walk terminates in ≤ 4
 rounds (a ≤4-vertex pattern holds ≤ 4 insertion-reachable undirected
-edges). Counts are plain ``groupBy(matrix).count()`` over all visited
-states — partial-aggregated, shuffle = one join per round keyed by
-vertex id. No per-row Python; multiplicities match the reference's DFS
+edges). The rounds run on the superstep driver
+(:meth:`~hoover_spark.plans.iteration.IterationLoop.run`): each round's
+frontier is held with its state count in one Spark job, and the walk
+stops at the first empty frontier. Counts are plain
+``groupBy(matrix).count()`` over all held frontiers, summed once at the
+end — partial-aggregated, shuffle = one join per round keyed by vertex
+id. No per-row Python; multiplicities match the reference's DFS
 visit counts exactly (verified against a recursive python mirror in
 ``tests/test_gbad.py``).
 
@@ -41,10 +45,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from hoover_spark.plans.iteration import IterationLoop, until_zero
+
 MAX_SUBGRAPH_VERTICES = 4
 N_PATTERNS_SHARED = 5
 N_PATTERNS_TO_CONSIDER = 6
 MAX_DISTANCE_FOR_ANOMALY = 1
+
+#: round cap: every round adds one undirected edge and a ≤4-vertex
+#: subgraph has at most 6, so the 7th round's frontier is empty at the
+#: latest
+_MAX_ROUNDS = MAX_SUBGRAPH_VERTICES * (MAX_SUBGRAPH_VERTICES - 1) // 2 + 1
 
 #: mask of lower-triangle bits (j <= i) of the 4x4 slot matrix — the
 #: reference's adjacency_matrix_n_edges counts each undirected edge once.
@@ -130,18 +141,22 @@ def pattern_counts(
         del keep
 
     nil = F.lit(None).cast("long")
-    frontier = vertices.select(
-        F.col("vid").alias("v1"),
-        nil.alias("v2"),
-        nil.alias("v3"),
-        nil.alias("v4"),
-        F.lit(1).alias("n"),
-        F.lit(0).alias("last"),
-        F.lit(0).alias("matrix"),
-    ).localCheckpoint()
+    loop = IterationLoop(e.sparkSession, kernel="gbad", max_iterations=_MAX_ROUNDS)
+    frontier = loop.hold(
+        vertices.select(
+            F.col("vid").alias("v1"),
+            nil.alias("v2"),
+            nil.alias("v3"),
+            nil.alias("v4"),
+            F.lit(1).alias("n"),
+            F.lit(0).alias("last"),
+            F.lit(0).alias("matrix"),
+        )
+    )
+    frontiers = []  # the held state of every round
 
-    per_round = [frontier.groupBy("matrix").agg(F.count(F.lit(1)).alias("c"))]
-    while True:
+    def step(frontier, _it, _prev):
+        frontiers.append(frontier)
         expandable = frontier.where(F.col("n") < MAX_SUBGRAPH_VERTICES)
         lv = F.element_at(F.array("v1", "v2", "v3", "v4"), F.col("last") + 1)
         joined = expandable.withColumn("lv", lv).join(
@@ -182,15 +197,15 @@ def pattern_counts(
                 "       | shiftleft(1, cast(last * 4 + n as int))"
             ).alias("matrix"),
         )
-        frontier = edge_add.unionByName(vertex_add).localCheckpoint()
-        if frontier.limit(1).count() == 0:
-            break
-        per_round.append(frontier.groupBy("matrix").agg(F.count(F.lit(1)).alias("c")))
+        return edge_add.unionByName(vertex_add), [F.count(F.lit(1)).alias("n_states")]
 
-    allc = per_round[0]
-    for r in per_round[1:]:
-        allc = allc.unionByName(r)
-    return allc.groupBy("matrix").agg(F.sum("c").alias("count"))
+    frontier, it, _ = loop.run(frontier, step, until_zero("n_states"), rounds=_MAX_ROUNDS)
+    frontiers.append(frontier)
+    allc = None
+    for f in frontiers:
+        c = f.groupBy("matrix").agg(F.count(F.lit(1)).alias("c"))
+        allc = c if allc is None else allc.unionByName(c)
+    return loop.finish(allc.groupBy("matrix").agg(F.sum("c").alias("count")), it)
 
 
 def frequent_patterns(counts: DataFrame, top_k: int = N_PATTERNS_TO_CONSIDER) -> DataFrame:

@@ -18,7 +18,7 @@ Both are pure join+agg programs; the mode step's
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
 from hoover_spark.operators.wcc import wcc
@@ -35,7 +35,7 @@ def min_label_propagation(
     spark = graph.edges.sparkSession
     loop = loop or IterationLoop(spark, kernel="min_lp", max_iterations=n_iterations)
     loop.max_iterations = n_iterations
-    return wcc(graph, spark=spark, pointer_jumping=False, loop=loop)
+    return wcc(graph, pointer_jumping=False, loop=loop)
 
 
 def mode_label_propagation(

@@ -29,11 +29,26 @@ Scale notes:
 - hot destinations (a file imported by everything) are handled by the
   explicit salted two-stage SUM (north rule; SURVEY.md §4 O10) on top
   of Spark's map-side partial aggregation.
+
+Personalized PageRank (random walk with restart to a seed set, the
+standard seed-proximity score for link graphs: Page et al. 1999 §6;
+Jeh & Widom WWW'03) is the same damped step with the teleport and the
+dangling redistribution biased to a seed distribution ``p`` instead of
+``1/n``:
+
+    r'(v) = (1-α)·p(v) + α·( Σ_{u→v} r(u)/out_deg(u) + D·p(v) )
+
+with ``D`` the dangling mass of the previous iterate. Restart mass
+re-enters ONLY at seeds, so scores decay with distance from the seed
+set and the uniform kernel's ``(1-α)/n`` floor disappears for
+non-seeds. The state carries ``p`` as a static column (0 off-seed), so
+personalization costs no extra join or shuffle per iteration, and the
+dangling mass stays one scalar riding the same Observation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.functions.skew import with_salt
 from hoover_spark.operators.graph import Graph, per_view
@@ -42,19 +57,17 @@ from hoover_spark.plans.iteration import IterationLoop
 
 def pagerank(
     graph: Graph,
-    spark: SparkSession | None = None,
     alpha: float = 0.85,
     tol: float = 1e-6,
     max_iterations: int = 100,
     n_iterations: int | None = None,
     salt_buckets: int = 0,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 5,
     resume: bool = False,
     loop: IterationLoop | None = None,
     initial_ranks: DataFrame | None = None,
     n_vertices: int | None = None,
     initial_rank_sum: float | None = None,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Return ``(vid: long, rank: double)``; ranks sum to 1.
 
@@ -75,20 +88,36 @@ def pagerank(
     independent of the initial sum, so an incrementally-tracked
     approximation is fine.
 
+    ``seeds`` switches to personalized PageRank (module docstring):
+    either ``(vid)``, which spreads the restart mass uniformly over the
+    set, or ``(vid, p)`` with an explicit distribution. Ranks start at
+    ``p``, and an empty ``(vid)`` set raises ``ValueError``, as does
+    combining ``seeds`` with ``initial_ranks``. Pair it with
+    ``n_iterations`` for the bounded-iteration semantics the SQL
+    oracle unrolls.
+
     The final converged ``sum(rank)`` is published as
     ``loop.kernel_state["rank_sum"]`` (measured by the per-iteration
     Observation — no extra job); the streaming path feeds it back as
     the next batch's ``initial_rank_sum`` numerator. The vertex count
     is published as ``loop.kernel_state["n_state_rows"]``.
     """
-    spark = spark or graph.edges.sparkSession
+    if seeds is not None and initial_ranks is not None:
+        raise ValueError("pagerank: seeds cannot warm-start from initial_ranks")
     loop = loop or IterationLoop(
-        spark,
+        graph.edges.sparkSession,
         kernel="pagerank",
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
         max_iterations=n_iterations or max_iterations,
     )
+
+    static = []  # per-vertex columns carried unchanged through the rounds
+    if seeds is not None:
+        if "p" not in seeds.columns:
+            n_seeds = seeds.count()
+            if n_seeds == 0:
+                raise ValueError("pagerank: empty seed set")
+            seeds = seeds.select("vid", F.lit(1.0 / n_seeds).alias("p"))
+        static = ["p"]
 
     edge_views = graph.clean_edge_views()
     verts = None
@@ -109,7 +138,7 @@ def pagerank(
     if resume:
         loaded = loop.load_latest()
         if loaded is not None:
-            ranks, start_iter = loaded[0].select("vid", "rank"), loaded[1]
+            ranks, start_iter = loaded[0].select("vid", "rank", *static), loaded[1]
     if ranks is None:
         if initial_ranks is not None:
             ranks = initial_ranks.select("vid", "rank")
@@ -118,6 +147,12 @@ def pagerank(
                     "vid",
                     (F.col("rank") / F.lit(float(initial_rank_sum))).alias("rank"),
                 )
+        elif seeds is not None:
+            # ranks start AT the restart distribution (0 off-seed)
+            p = F.coalesce("p", F.lit(0.0))
+            ranks = verts.join(seeds.select("vid", "p"), on="vid", how="left").select(
+                "vid", p.alias("rank"), p.alias("p")
+            )
         else:
             ranks = verts.select("vid", F.lit(1.0 / n).alias("rank"))
 
@@ -157,19 +192,22 @@ def pagerank(
             sums = contribs.groupBy("dst").agg(
                 F.sum("w").alias("in_sum"), F.count(F.lit(1)).alias("msg_cnt")
             )
+        # restart and dangling mass re-enter uniformly, or at the seeds
+        dangling = float(prev["dangling"] or 0.0)
+        if seeds is None:
+            restart, spread = F.lit(base), F.lit(dangling / n)
+        else:
+            restart = F.lit(1.0 - alpha) * F.col("p")
+            spread = F.lit(dangling) * F.col("p")
         stepped = state.select(
-            "vid", "out_deg", F.col("rank").alias("_prev")
+            "vid", "out_deg", *static, F.col("rank").alias("_prev")
         ).join(sums.withColumnRenamed("dst", "vid"), on="vid", how="left").select(
             "vid",
             "out_deg",
+            *static,
             "_prev",
             (
-                F.lit(base)
-                + F.lit(alpha)
-                * (
-                    F.coalesce("in_sum", F.lit(0.0))
-                    + F.lit(float(prev["dangling"] or 0.0) / n)
-                )
+                restart + F.lit(alpha) * (F.coalesce("in_sum", F.lit(0.0)) + spread)
             ).alias("rank"),
             F.coalesce("msg_cnt", F.lit(0)).alias("_m"),
         )

@@ -21,22 +21,24 @@ directed hash-min kernel per outer round:
    FW-BW argument). Members leave the active set; unassigned color
    classes retry next round.
 
-Both runs use **pointer jumping**: min-reachability is transitive
-(``u →* v`` and ``w →* u`` imply ``w →* v``), so
-``color(v) ← min(color(v), color(color(v)))`` is sound and monotone —
-the same doubling that cuts WCC's rounds cuts the directed sweeps from
-O(diameter) to O(log diameter)-ish. The jump lookup self-joins the
-round's relaxed table; Catalyst reuses the underlying exchange
-(ReusedExchange), so the relax subplan is shuffled once.
+Both runs are :func:`~hoover_spark.operators.wcc.hash_min_rounds` —
+WCC's own rounds, over the one-view lists ``[e]`` and ``[er]`` instead
+of the symmetric edges, so the neighbor-min rule is written once. Its
+adaptive **pointer jumping** stays sound on directed edges:
+min-reachability is transitive (``u →* v`` and ``w →* u`` imply
+``w →* v``), so ``color(v) ← min(color(v), color(color(v)))`` only
+ever lowers a color to a vertex that still reaches ``v``, and it cuts
+the convergence tail from O(diameter) to O(log diameter)-ish rounds.
 
-Spark-first plan: state is ``(vid, color)``; each inner round is one
-Spark job (``hold_observed``) of three co-keyed shuffles — message
-min, relax join, jump lookup — against the per-outer-round persisted
-active-subgraph edge view (O(active edges), reused across all inner
-rounds). At 10¹² edges the outer-round count is the graph's SCC-DAG
-"peeling depth" from each round's root set — small on web graphs,
-where one giant SCC dominates (Broder et al.); ``max_outer`` guards
-pathological chains.
+Spark-first plan: state is ``(vid, label)``, hash-partitioned by vid;
+each inner round is one Spark job (the held state's Observation) that
+joins only the **frontier** — the rows whose color dropped last round
+— against the per-outer-round persisted active-subgraph edge view
+(O(active edges), reused across all inner rounds), so a settled color
+is never re-sent. At 10¹² edges the outer-round count is the graph's
+SCC-DAG "peeling depth" from each round's root set — small on web
+graphs, where one giant SCC dominates (Broder et al.); ``max_outer``
+guards pathological chains.
 """
 
 from __future__ import annotations
@@ -44,55 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
-from hoover_spark.plans.iteration import IterationLoop, until_zero
-
-
-def _minlabel_directed(
-    e: DataFrame,
-    init: DataFrame,
-    loop: IterationLoop,
-    it0: int,
-    max_rounds: int = 200,
-) -> tuple[DataFrame, int]:
-    """Directed hash-min to convergence with pointer jumping.
-
-    ``e`` is a persisted ``(src, dst)`` view; ``init`` is ``(vid,
-    color)`` covering the vertex domain. Returns the converged
-    ``(vid, color)`` (checkpointed) and the updated iteration counter.
-    """
-
-    def step(color, _it, _prev):
-        color = color.select("vid", "color")
-        msgs = (
-            e.join(color.select(F.col("vid").alias("src"), "color"), on="src")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.min("color").alias("mc"))
-        )
-        relaxed = color.join(msgs, on="vid", how="left").select(
-            "vid",
-            F.col("color").alias("prev"),
-            F.least("color", F.coalesce("mc", "color")).alias("c1"),
-        )
-        jumped = relaxed.join(
-            relaxed.select(F.col("vid").alias("c1"), F.col("c1").alias("cc")),
-            on="c1",
-            how="left",
-        ).select(
-            "vid", "prev", F.least("c1", F.coalesce("cc", "c1")).alias("color")
-        )
-        stepped = jumped.select(
-            "vid",
-            "color",
-            (F.col("color") != F.col("prev")).cast("long").alias("chg"),
-        )
-        return stepped, [F.sum("chg").alias("changed")]
-
-    color, it, stats = loop.run(
-        loop.hold(init), step, until_zero("changed"), rounds=max_rounds, start=it0
-    )
-    if int(stats["changed"] or 0) != 0:
-        raise RuntimeError("scc: directed min-label failed to converge")
-    return color.select("vid", "color"), it
+from hoover_spark.operators.wcc import hash_min_rounds
+from hoover_spark.plans.iteration import IterationLoop
 
 
 def scc(
@@ -119,6 +74,16 @@ def scc(
     result: DataFrame | None = None
     it = 0
 
+    def sweep(view: DataFrame, init: DataFrame, it0: int) -> tuple[DataFrame, int]:
+        """Directed hash-min over ``view`` to convergence: ``(vid, label)``
+        with label = the min vid of ``init`` reaching each vertex."""
+        labels, it1, stats = hash_min_rounds(
+            [view], init, loop, graph.num_partitions, rounds=200, start=it0
+        )
+        if int(stats["changed"] or 0) != 0:
+            raise RuntimeError("scc: directed min-label failed to converge")
+        return labels.select("vid", "label"), it1
+
     for _outer in range(1, max_outer + 1):
         if n_active == 0:
             break
@@ -129,32 +94,30 @@ def scc(
                 active.select(F.col("vid").alias("dst")), on="dst", how="left_semi"
             )
         )
-        init = active.select("vid", F.col("vid").alias("color"))
+        init = active.select("vid", F.col("vid").alias("label"))
 
-        color, it = _minlabel_directed(e, init, loop, it)
+        color, it = sweep(e, init, it)
 
         # reversed, class-restricted edges: a path in er never leaves
         # its color class, so rcolor is within-class min reachability
         er = loop.hold(
             e.join(
-                color.select(F.col("vid").alias("src"), F.col("color").alias("cs")),
+                color.select(F.col("vid").alias("src"), F.col("label").alias("cs")),
                 on="src",
             )
             .join(
-                color.select(F.col("vid").alias("dst"), F.col("color").alias("cd")),
+                color.select(F.col("vid").alias("dst"), F.col("label").alias("cd")),
                 on="dst",
             )
             .where(F.col("cs") == F.col("cd"))
             .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        rcolor, it = _minlabel_directed(er, init, loop, it)
+        rcolor, it = sweep(er, init, it)
 
         member = (
-            color.join(
-                rcolor.select("vid", F.col("color").alias("rc")), on="vid"
-            )
-            .where(F.col("color") == F.col("rc"))
-            .select("vid", F.col("color").alias("label"))
+            color.join(rcolor.select("vid", F.col("label").alias("rc")), on="vid")
+            .where(F.col("label") == F.col("rc"))
+            .select("vid", "label")
         )
         member = loop.hold(member)
         result = member if result is None else result.unionByName(member)

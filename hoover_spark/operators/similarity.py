@@ -18,17 +18,13 @@ An IVF variant (k-means-free: centroids = hash-picked corpus rows) is
 provided as :func:`ivf_topk` — the same probe-then-rescore plan shape
 used by real IVF indexes.
 
-No per-row Python anywhere; the only pandas use is optional batched
-numpy rescoring (:func:`cosine_topk_pandas`) which processes whole
-Arrow batches as matrix products.
+No per-row Python and no pandas anywhere: every strategy is a JVM
+plan of joins, higher-order functions and window ranks.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def _dot(a, b):
@@ -89,57 +85,6 @@ def cosine_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "vec_id", "cosine", "rank")
-    )
-
-
-def cosine_topk_pandas(
-    vectors: DataFrame,
-    queries_pdf: pd.DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Arrow-batched exact top-k: the query matrix (small, collected
-    once) is matrix-multiplied against each corpus Arrow batch with
-    numpy — the mapInPandas path for when the per-batch work is a
-    genuine matmul. Returns (query_id, vec_id, cosine) candidates;
-    global top-k still needs the groupBy(query) reduce."""
-    import numpy as np
-
-    qm = np.stack(queries_pdf[vec_col].to_numpy()).astype("float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    qids = queries_pdf["query_id"].to_numpy()
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vm = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            vm /= np.linalg.norm(vm, axis=1, keepdims=True)
-            sims = qm @ vm.T  # (Q, B)
-            top = min(k + 1, sims.shape[1])
-            idx = np.argpartition(-sims, top - 1, axis=1)[:, :top]
-            out = {
-                "query_id": np.repeat(qids, top),
-                "vec_id": pdf[id_col].to_numpy()[idx].ravel(),
-                "cosine": np.take_along_axis(sims, idx, axis=1).ravel(),
-            }
-            yield pd.DataFrame(out)
-
-    cand = vectors.select(id_col, vec_col).mapInPandas(run, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cand.where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
     )
 
 

@@ -31,8 +31,13 @@ Spark-first design:
   state-checkpoint action — ONE Spark job per round, no separate
   stats job or barrier;
 - state is ``localCheckpoint``-ed every iteration (lineage truncation)
-  and durably checkpointed every ``checkpoint_every`` iterations for
-  resume (north rule).
+  and, when the caller's ``loop`` has a checkpoint dir, durably
+  checkpointed at its cadence for resume (north rule);
+- the rounds live in :func:`hash_min_rounds`, which :func:`scc` runs
+  over directed edge views for its color sweeps — the one neighbor-min
+  rule for both kernels, as the reference's community detection reuses
+  its connected-components kernel
+  (``test/community_detection.cpp:493-512``).
 
 The result labels each vertex with the minimum vertex id of its
 component — exactly the reference's converged state, independent of
@@ -41,7 +46,7 @@ partitioning / parallelism (min is order-insensitive).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph, per_view
 from hoover_spark.plans.iteration import IterationLoop
@@ -49,11 +54,8 @@ from hoover_spark.plans.iteration import IterationLoop
 
 def wcc(
     graph: Graph,
-    spark: SparkSession | None = None,
     max_iterations: int = 100,
     pointer_jumping: bool = True,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 5,
     resume: bool = False,
     loop: IterationLoop | None = None,
     initial_labels: DataFrame | None = None,
@@ -120,13 +122,8 @@ def wcc(
             "pre_contract seeds a cold start only; it cannot be combined "
             "with initial_labels or initial_frontier"
         )
-    spark = spark or graph.edges.sparkSession
     loop = loop or IterationLoop(
-        spark,
-        kernel="wcc",
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        max_iterations=max_iterations,
+        graph.edges.sparkSession, kernel="wcc", max_iterations=max_iterations
     )
 
     edge_views = graph.sym_edge_views()
@@ -166,17 +163,63 @@ def wcc(
         # reference point for the changed-rows view: the caller's
         # initial label (prev stored state). Lazy; folds into round 1.
         labels = labels.withColumn("l0", F.col("label"))
+    labels, it, stats = hash_min_rounds(
+        edge_views,
+        labels,
+        loop,
+        graph.num_partitions,
+        rounds=loop.max_iterations - start_iter,
+        start=start_iter,
+        frontier=initial_frontier if start_iter == 0 else None,
+        pointer_jumping=pointer_jumping,
+    )
+    loop.kernel_state["n_state_rows"] = None if stats is None else int(stats["total"] or 0)
+    if warm:
+        # zero-shuffle filter over the final materialized state — the
+        # rows whose label moved below the caller's initial mapping
+        loop.kernel_state["changed_rows"] = labels.where(
+            F.col("label") < F.col("l0")
+        ).select("vid", "label")
+    return loop.finish(labels.select("vid", "label"), it)
+
+
+def hash_min_rounds(
+    edge_views: list[DataFrame],
+    labels: DataFrame,
+    loop: IterationLoop,
+    num_partitions: int,
+    rounds: int,
+    start: int = 0,
+    frontier: DataFrame | None = None,
+    pointer_jumping: bool = True,
+) -> tuple[DataFrame, int, dict | None]:
+    """The hash-min rounds of :func:`wcc`, along the ``(src, dst)``
+    edges of ``edge_views``: each round a vertex takes the min of its
+    label and the labels sent to it.
+
+    ``labels`` is ``(vid, label)`` plus any columns to carry unchanged
+    (wcc's ``l0``). Round 1 sends from every vertex, or only from the
+    ``frontier`` vid set when given; later rounds send only from the
+    rows whose label just dropped. ``pointer_jumping`` is wcc's adaptive
+    jump. Runs at most ``rounds`` rounds numbered from ``start + 1`` and
+    returns ``loop.run``'s ``(state, it, stats)``: the last held state
+    (``label`` and its carried columns among the round's scratch
+    columns), and the last round's Observation, whose ``changed`` is 0
+    once the labels converged and ``total`` counts the state rows.
+
+    Over a symmetric view the labels converge to the component min;
+    over a directed one to the min vid that reaches each vertex (the
+    jump stays sound: min-reachability is transitive).
+    """
     # keep state hash-partitioned by vid across iterations so the
     # labels ⟕ mins join only shuffles the (smaller) message side
-    labels = loop.hold(labels.repartition(graph.num_partitions, "vid"))
+    labels = loop.hold(labels.repartition(num_partitions, "vid"))
 
     # Initially every vertex is "dirty" (reference: iteration-0 full send,
     # send_all_vertices_in_partition, src/hoover.cpp:1517-1533) — unless a
     # warm start narrows the dirty set to changed-adjacency vertices.
-    if initial_frontier is not None and start_iter == 0:
-        frontier = labels.join(
-            initial_frontier.select("vid"), on="vid", how="left_semi"
-        )
+    if frontier is not None:
+        frontier = labels.join(frontier.select("vid"), on="vid", how="left_semi")
     else:
         frontier = labels
 
@@ -188,7 +231,7 @@ def wcc(
     # chains are already collapsed — so it retires immediately and
     # degenerates to no-jump, 19 vs 14 rounds on the sf0.1 repo graph.)
     jump = {"on": False, "retired": not pointer_jumping}
-    carry = ["l0"] if warm else []
+    carry = [c for c in labels.columns if c not in ("vid", "label")]
 
     def step(state, it, prev):
         if prev is not None and not jump["retired"]:
@@ -206,7 +249,7 @@ def wcc(
         # 1. neighbor-min over the frontier only (delta processing):
         #    one join per edge view, small outputs unioned. After round
         #    1 the frontier is the rows whose label just dropped.
-        if it == start_iter + 1:
+        if it == start + 1:
             front = frontier
         else:
             front = state.where(F.col("label") < F.col("_prev"))
@@ -259,20 +302,9 @@ def wcc(
 
     def observe(stats, _prev):
         changed = int(stats["changed"] or 0)
-        loop.kernel_state["n_state_rows"] = int(stats["total"] or 0)
         return int(stats["shuffled"] or 0), float(changed), changed, changed == 0
 
-    loop.kernel_state["n_state_rows"] = None
-    labels, it, _ = loop.run(
-        labels, step, observe, rounds=loop.max_iterations - start_iter, start=start_iter
-    )
-    if warm:
-        # zero-shuffle filter over the final materialized state — the
-        # rows whose label moved below the caller's initial mapping
-        loop.kernel_state["changed_rows"] = labels.where(
-            F.col("label") < F.col("l0")
-        ).select("vid", "label")
-    return loop.finish(labels.select("vid", "label"), it)
+    return loop.run(labels, step, observe, rounds=rounds, start=start)
 
 
 # Contraction depth of ``pre_contract``: the star forest is contracted

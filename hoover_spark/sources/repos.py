@@ -22,10 +22,7 @@ read must equal the generator's recomputation — see
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 #: deterministic lang assignment, ref count range, module fan.
 _LANGS = ["py", "c", "java", "js"]
@@ -236,45 +233,7 @@ def extract_refs(repos: DataFrame) -> DataFrame:
     )
 
 
-def extract_refs_pandas(repos: DataFrame) -> DataFrame:
-    """Same extraction as a vectorized Arrow-batched pandas UDF
-    (``mapInPandas``) — the mandated extension path for parsers that
-    outgrow a single regex (real import resolution, tree-sitter, ...).
-    Tested equivalent to :func:`extract_refs`."""
-    import re
-
-    compiled = {lang: re.compile(pat) for lang, pat in _REF_PATTERNS.items()}
-    out_schema = T.StructType(
-        [
-            T.StructField("src_repo", T.StringType()),
-            T.StructField("src_path", T.StringType()),
-            T.StructField("ref_token", T.StringType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"src_repo": [], "src_path": [], "ref_token": []}
-            # vectorize per language: one findall pass per lang subset
-            for lang, rx in compiled.items():
-                sub = pdf[pdf["lang"] == lang]
-                if sub.empty:
-                    continue
-                found = sub["content"].str.findall(rx)
-                counts = found.str.len().astype(int)
-                rows["src_repo"].extend(sub["repo"].repeat(counts))
-                rows["src_path"].extend(sub["path"].repeat(counts))
-                rows["ref_token"].extend(
-                    tok.replace(".", "/") for toks in found for tok in toks
-                )
-            yield pd.DataFrame(rows)
-
-    return repos.select("repo", "path", "lang", "content").mapInPandas(
-        run, schema=out_schema
-    )
-
-
-def ref_edges(repos: DataFrame, method: str = "builtin") -> DataFrame:
+def ref_edges(repos: DataFrame) -> DataFrame:
     """The canonical link-graph edge table ``edges(src, dst)``.
 
     src = vid of the referencing file; dst = vid of the referenced file
@@ -289,7 +248,7 @@ def ref_edges(repos: DataFrame, method: str = "builtin") -> DataFrame:
     falls back to sort-merge — the SHUFFLE_HASH hint keeps the
     equi-join a hashed join (no per-side sort of millions of string
     tokens; AQE still upgrades to broadcast when runtime stats allow)."""
-    refs = extract_refs(repos) if method == "builtin" else extract_refs_pandas(repos)
+    refs = extract_refs(repos)
     verts = file_vertices(repos)
     dict_side = verts.select("ref_token", F.col("vid").alias("dst"))
     return (

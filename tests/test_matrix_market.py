@@ -153,6 +153,6 @@ def test_binary_wcc_end_to_end(spark, tmp_path):
 
     p = os.path.join(tmp_path, "g.bin")
     write_binary(p, MM_EDGES)
-    labels = wcc(Graph(load_binary_edges(spark, p)), spark)
+    labels = wcc(Graph(load_binary_edges(spark, p)))
     n_comp = labels.select("label").distinct().count()
     assert n_comp == 2

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from hoover_spark.functions.text import tf_idf_top_terms, tf_idf_top_terms_sql
 from hoover_spark.operators.graph import Graph
 from hoover_spark.operators.ktruss import ktruss
-from hoover_spark.operators.ppr import personalized_pagerank
+from hoover_spark.operators.pagerank import pagerank
 from hoover_spark.sources.synthetic import (
     clique_graph,
     edges_to_pairs,
@@ -26,7 +26,7 @@ from tests.oracles import ktruss_oracle, ppr_oracle
 
 def _ppr_spark(spark, g, seeds, iters):
     sdf = spark.createDataFrame([(v,) for v in sorted(seeds)], schema="vid long")
-    got = personalized_pagerank(g, sdf, n_iterations=iters).collect()
+    got = pagerank(g, seeds=sdf, n_iterations=iters).collect()
     return {r["vid"]: r["rank"] for r in got}
 
 
@@ -59,11 +59,24 @@ def test_ppr_mass_conserved_and_seed_localized(spark):
     assert hub is not None  # direction probe only
 
 
+def test_ppr_all_vertex_seeds_equals_pagerank(spark):
+    """Seeding every vertex makes the restart distribution uniform, so
+    the seeded step is the uniform step round for round."""
+    g = rmat_graph(spark, scale=6, edge_factor=4)
+    verts = {r["vid"] for r in g.vertices().collect()}
+    for iters in (1, 3):
+        got = _ppr_spark(spark, g, verts, iters)
+        want = {r["vid"]: r["rank"] for r in pagerank(g, n_iterations=iters).collect()}
+        assert set(got) == set(want)
+        for v in got:
+            assert got[v] == pytest.approx(want[v], abs=1e-12), f"iters={iters}"
+
+
 def test_ppr_empty_seeds_raises(spark):
     g = path_graph(spark, 4)
     empty = g.vertices().where(F.lit(False))
     with pytest.raises(ValueError):
-        personalized_pagerank(g, empty, n_iterations=1)
+        pagerank(g, seeds=empty, n_iterations=1)
 
 
 # ---------------------------------------------------------------------------

@@ -40,7 +40,7 @@ def test_wcc_matches_union_find(spark, pairs):
     """Hash-min WCC label == min vid of the union-find component, for
     any multigraph (duplicate edges, self-loops, both directions)."""
     edges = spark.createDataFrame(pairs, schema="src long, dst long")
-    got = {r["vid"]: r["label"] for r in wcc(Graph(edges), spark).collect()}
+    got = {r["vid"]: r["label"] for r in wcc(Graph(edges)).collect()}
     want = union_find_components(pairs)
     # union_find_components only tracks vertices seen in pairs; wcc
     # derives vertices from raw edges, so the keysets must agree too.
@@ -54,10 +54,10 @@ def test_wcc_warm_start_converges_same(spark, pairs, n_iter):
     same fixpoint (checkpoint/resume correctness, north-rule item)."""
     edges = spark.createDataFrame(pairs, schema="src long, dst long")
     g = Graph(edges)
-    prefix = wcc(g, spark, max_iterations=n_iter) if n_iter else None
+    prefix = wcc(g, max_iterations=n_iter) if n_iter else None
     got = {
         r["vid"]: r["label"]
-        for r in wcc(g, spark, initial_labels=prefix).collect()
+        for r in wcc(g, initial_labels=prefix).collect()
     }
     assert got == union_find_components(pairs)
 
@@ -121,7 +121,7 @@ def test_pagerank_matches_power_iteration(spark, pairs):
     edges = spark.createDataFrame(simple, schema="src long, dst long")
     got = {
         r["vid"]: r["rank"]
-        for r in pagerank(Graph(edges), spark, n_iterations=3).collect()
+        for r in pagerank(Graph(edges), n_iterations=3).collect()
     }
     want = pagerank_oracle(simple, n_iter=3)
     assert set(got) == set(want)

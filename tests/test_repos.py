@@ -79,20 +79,13 @@ def test_extraction_matches_python_oracle(spark):
     }
     got = {
         (vid_to_idx[r["src"]], vid_to_idx[r["dst"]])
-        for r in R.ref_edges(t, method="builtin").collect()
+        for r in R.ref_edges(t).collect()
     }
     assert got == want
     # every candidate target obeys the closed-form formula
     cand = {i: set(R.candidate_targets(i, N)) for i, _ in want}
     for i, j in want:
         assert j in cand[i]
-
-
-def test_pandas_udf_extraction_equivalent(spark):
-    t = _table(spark)
-    a = R.ref_edges(t, method="builtin").orderBy("src", "dst").collect()
-    b = R.ref_edges(t, method="pandas").orderBy("src", "dst").collect()
-    assert a == b
 
 
 def test_vids_unique(spark):

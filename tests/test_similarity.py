@@ -8,7 +8,6 @@ from pyspark.sql import functions as F, types as T
 
 from hoover_spark.operators.similarity import (
     cosine_topk,
-    cosine_topk_pandas,
     embedding_near_dup_pairs,
     ivf_topk,
     lsh_ann_topk,
@@ -69,20 +68,6 @@ def test_cosine_topk_matches_numpy(spark, vec_df):
     for q in range(8):
         ids = [v for _, v in sorted(got[q])]
         assert ids == oracle[q], q
-
-
-def test_cosine_topk_pandas_matches(spark, vec_df):
-    vs = _vecs()
-    import pandas as pd
-
-    qpdf = pd.DataFrame({"query_id": [0, 3, 5], "embedding": [vs[i] for i in (0, 3, 5)]})
-    res = cosine_topk_pandas(vec_df, qpdf, k=5).collect()
-    oracle = np_topk(5, [0, 3, 5])
-    got = {}
-    for r in res:
-        got.setdefault(r["query_id"], []).append((r["rank"], r["vec_id"]))
-    for q in (0, 3, 5):
-        assert [v for _, v in sorted(got[q])] == oracle[q]
 
 
 def test_lsh_ann_recall(spark, vec_df):

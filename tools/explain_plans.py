@@ -170,13 +170,14 @@ def main():
     )
 
     # 13. r5 link kernels — one representative round each. kcore/ktruss
-    # peel rounds and the hits/ppr iterations must stay one-shuffle-
-    # per-gather shapes over the persisted edge side (no Exchange on
-    # the cached big side; per-vertex sides broadcastable by AQE).
+    # peel rounds and the hits/personalized-pagerank iterations must
+    # stay one-shuffle-per-gather shapes over the persisted edge side
+    # (no Exchange on the cached big side; per-vertex sides
+    # broadcastable by AQE).
     from hoover_spark.functions.text import tf_idf_top_terms
     from hoover_spark.operators.hits import hits
     from hoover_spark.operators.kcore import kcore
-    from hoover_spark.operators.ppr import personalized_pagerank
+    from hoover_spark.operators.pagerank import pagerank
     from hoover_spark.operators.triangles import edge_support
 
     sections.append(("hits (2 iterations, L2 norm in-plan)", plan_of(hits(g, n_iterations=2))))
@@ -187,8 +188,8 @@ def main():
     )
     seeds = verts.where(F.col("vid") % 11 == 0)
     sections.append(
-        ("ppr (1 iteration, seed-biased dangling)",
-         plan_of(personalized_pagerank(g, seeds, n_iterations=1)))
+        ("pagerank with seeds (1 iteration, seed-biased restart + dangling)",
+         plan_of(pagerank(g, seeds=seeds, n_iterations=1)))
     )
     sections.append(
         ("tfidf_top_terms (explode + two-level agg + window)",
