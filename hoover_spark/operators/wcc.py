@@ -23,9 +23,7 @@ Spark-first design:
   by default it runs only in the convergence tail;
 - the callers' two switches are ``pointer_jumping`` (adaptive jump or
   none) and ``pre_contract`` (a cold start seeded by an iterated
-  per-partition union-find contraction); a warm start
-  (``initial_labels``) publishes the rows it lowered as
-  ``loop.kernel_state["changed_rows"]``;
+  per-partition union-find contraction);
 - per-iteration metrics (rows shuffled = messages aggregated, delta
   norm = label changes, frontier size) ride an ``Observation`` on the
   state-checkpoint action — ONE Spark job per round, no separate
@@ -37,7 +35,13 @@ Spark-first design:
   over directed edge views for its color sweeps — the one neighbor-min
   rule for both kernels, as the reference's community detection reuses
   its connected-components kernel
-  (``test/community_detection.cpp:493-512``).
+  (``test/community_detection.cpp:493-512``);
+- :func:`min_label_roots` is the numpy union-find that the contraction
+  sweep runs per task and the streaming ingest runs on the driver: an
+  insert-only edge batch merges whole components, so a warm stream
+  relabels by a union-find over the batch's ``(label(src),
+  label(dst))`` pairs instead of re-running these rounds
+  (:mod:`hoover_spark.streaming.ingest`).
 
 The result labels each vertex with the minimum vertex id of its
 component — exactly the reference's converged state, independent of
@@ -58,8 +62,6 @@ def wcc(
     pointer_jumping: bool = True,
     resume: bool = False,
     loop: IterationLoop | None = None,
-    initial_labels: DataFrame | None = None,
-    initial_frontier: DataFrame | None = None,
     pre_contract: bool = False,
 ) -> DataFrame:
     """Return ``(vid: long, label: long)`` — label = min vid in component.
@@ -84,7 +86,7 @@ def wcc(
     labels are identical either way (hash-min is monotone); only the
     round count differs.
 
-    ``pre_contract=True`` seeds a COLD start from :func:`multi_contract`'s
+    ``pre_contract=True`` seeds the start from :func:`multi_contract`'s
     iterated per-partition union-find pass: each edge partition is
     collapsed to a star forest in one zero-shuffle ``mapInPandas``
     sweep, the star forest is contracted again ``CONTRACT_LEVELS - 1``
@@ -93,41 +95,19 @@ def wcc(
     component members ≥ the component min, and the component's min
     vertex always seeds itself, so hash-min converges to the exact same
     labels. The sweep reads the full edge set, so it is a caller choice
-    for large cold graphs (fewer rounds), not a default, and combining
-    it with ``initial_labels`` or ``initial_frontier`` raises
-    ``ValueError``: a warm start should cost O(batch), not O(|E|).
+    for large graphs (fewer rounds), not a default.
 
-    ``initial_labels`` warm-starts the iteration (streaming incremental
-    re-convergence; reference analogue: mirrors persist across
-    ``start_time_step`` batches). ``initial_frontier`` (vid set)
-    restricts the first round's messages to vertices whose adjacency
-    changed — the reference's ``mark_for_processing`` on edge insert
-    (``src/hoover.cpp:603-622``); correct because any label improvement
-    must originate at a vertex incident to a new edge.
-
-    Whenever ``initial_labels`` is given, the kernel carries each
-    vertex's initial label as an extra state column and publishes
-    ``loop.kernel_state["changed_rows"]`` — a lazy ``(vid, label)`` view
-    over the final materialized state of exactly the rows whose label
-    dropped below their initial label (the reference's ``needs_send``
-    set, ``inc/hvr_vertex.h:79-86``). The streaming path persists ONLY
-    these rows per micro-batch. Cost: one 8-byte column carried through
-    the rounds and a zero-shuffle filter at the end (labels are
-    monotone non-increasing, so no per-round bookkeeping). Every run
-    publishes the vertex count as ``loop.kernel_state["n_state_rows"]``
-    (from the per-round Observation, no extra job).
+    ``resume=True`` continues from the newest checkpoint of ``loop``'s
+    checkpoint dir (any round prefix converges to the same labels).
+    Every run publishes the vertex count as
+    ``loop.kernel_state["n_state_rows"]`` (from the per-round
+    Observation, no extra job).
     """
-    if pre_contract and (initial_labels is not None or initial_frontier is not None):
-        raise ValueError(
-            "pre_contract seeds a cold start only; it cannot be combined "
-            "with initial_labels or initial_frontier"
-        )
     loop = loop or IterationLoop(
         graph.edges.sparkSession, kernel="wcc", max_iterations=max_iterations
     )
 
     edge_views = graph.sym_edge_views()
-    warm = initial_labels is not None
 
     start_iter = 0
     labels = None
@@ -135,7 +115,7 @@ def wcc(
         loaded = loop.load_latest()
         if loaded is not None:
             # a checkpoint is a held round state; keep the label columns
-            labels, start_iter = loaded[0].drop("_prev", "_sl", "_m"), loaded[1]
+            labels, start_iter = loaded[0].select("vid", "label"), loaded[1]
     if labels is None:
         if pre_contract:
             # a vertex split across partitions keeps the min of its
@@ -153,16 +133,10 @@ def wcc(
                 .select("vid", F.col("vid").alias("label"))
             )
             labels = seed.unionByName(missing)
-        elif warm:
-            labels = initial_labels.select("vid", "label")
         else:
             labels = graph.vertices().select(
                 F.col("vid"), F.col("vid").alias("label")
             )
-    if warm and "l0" not in labels.columns:
-        # reference point for the changed-rows view: the caller's
-        # initial label (prev stored state). Lazy; folds into round 1.
-        labels = labels.withColumn("l0", F.col("label"))
     labels, it, stats = hash_min_rounds(
         edge_views,
         labels,
@@ -170,16 +144,9 @@ def wcc(
         graph.num_partitions,
         rounds=loop.max_iterations - start_iter,
         start=start_iter,
-        frontier=initial_frontier if start_iter == 0 else None,
         pointer_jumping=pointer_jumping,
     )
     loop.kernel_state["n_state_rows"] = None if stats is None else int(stats["total"] or 0)
-    if warm:
-        # zero-shuffle filter over the final materialized state — the
-        # rows whose label moved below the caller's initial mapping
-        loop.kernel_state["changed_rows"] = labels.where(
-            F.col("label") < F.col("l0")
-        ).select("vid", "label")
     return loop.finish(labels.select("vid", "label"), it)
 
 
@@ -190,22 +157,20 @@ def hash_min_rounds(
     num_partitions: int,
     rounds: int,
     start: int = 0,
-    frontier: DataFrame | None = None,
     pointer_jumping: bool = True,
 ) -> tuple[DataFrame, int, dict | None]:
     """The hash-min rounds of :func:`wcc`, along the ``(src, dst)``
     edges of ``edge_views``: each round a vertex takes the min of its
     label and the labels sent to it.
 
-    ``labels`` is ``(vid, label)`` plus any columns to carry unchanged
-    (wcc's ``l0``). Round 1 sends from every vertex, or only from the
-    ``frontier`` vid set when given; later rounds send only from the
-    rows whose label just dropped. ``pointer_jumping`` is wcc's adaptive
-    jump. Runs at most ``rounds`` rounds numbered from ``start + 1`` and
-    returns ``loop.run``'s ``(state, it, stats)``: the last held state
-    (``label`` and its carried columns among the round's scratch
-    columns), and the last round's Observation, whose ``changed`` is 0
-    once the labels converged and ``total`` counts the state rows.
+    ``labels`` is ``(vid, label)``. Round 1 sends from every vertex;
+    later rounds send only from the rows whose label just dropped.
+    ``pointer_jumping`` is wcc's adaptive jump. Runs at most ``rounds``
+    rounds numbered from ``start + 1`` and returns ``loop.run``'s
+    ``(state, it, stats)``: the last held state (``label`` among the
+    round's scratch columns), and the last round's Observation, whose
+    ``changed`` is 0 once the labels converged and ``total`` counts the
+    state rows.
 
     Over a symmetric view the labels converge to the component min;
     over a directed one to the min vid that reaches each vertex (the
@@ -215,14 +180,6 @@ def hash_min_rounds(
     # labels ⟕ mins join only shuffles the (smaller) message side
     labels = loop.hold(labels.repartition(num_partitions, "vid"))
 
-    # Initially every vertex is "dirty" (reference: iteration-0 full send,
-    # send_all_vertices_in_partition, src/hoover.cpp:1517-1533) — unless a
-    # warm start narrows the dirty set to changed-adjacency vertices.
-    if frontier is not None:
-        frontier = labels.join(frontier.select("vid"), on="vid", how="left_semi")
-    else:
-        frontier = labels
-
     # The flood phase runs without the jump; the tail (small frontier)
     # enables it, and a round whose jump lowers nothing retires it.
     # ``pointer_jumping=False`` starts retired. (A start-on/retire-at-
@@ -231,7 +188,6 @@ def hash_min_rounds(
     # chains are already collapsed — so it retires immediately and
     # degenerates to no-jump, 19 vs 14 rounds on the sf0.1 repo graph.)
     jump = {"on": False, "retired": not pointer_jumping}
-    carry = [c for c in labels.columns if c not in ("vid", "label")]
 
     def step(state, it, prev):
         if prev is not None and not jump["retired"]:
@@ -247,10 +203,12 @@ def hash_min_rounds(
                 # self-join is cheap — compress them
                 jump["on"] = True
         # 1. neighbor-min over the frontier only (delta processing):
-        #    one join per edge view, small outputs unioned. After round
-        #    1 the frontier is the rows whose label just dropped.
+        #    one join per edge view, small outputs unioned. Round 1
+        #    sends from every vertex (reference: iteration-0 full send,
+        #    send_all_vertices_in_partition, src/hoover.cpp:1517-1533);
+        #    later rounds from the rows whose label just dropped.
         if it == start + 1:
-            front = frontier
+            front = state
         else:
             front = state.where(F.col("label") < F.col("_prev"))
         fsrc = front.select(F.col("vid").alias("src"), "label")
@@ -261,9 +219,9 @@ def hash_min_rounds(
         mins = msgs.groupBy("vid").agg(
             F.min("label").alias("msg_label"), F.count(F.lit(1)).alias("msg_cnt")
         )
-        keep = ["vid", *carry, "_prev"]
+        keep = ["vid", "_prev"]
         stepped = (
-            state.select("vid", *carry, F.col("label").alias("_prev"))
+            state.select("vid", F.col("label").alias("_prev"))
             .join(mins, on="vid", how="left")
             .select(
                 *keep,
@@ -392,22 +350,14 @@ def local_contract(edges, num_partitions: int = 32, assume_partitioned: bool = F
             yield pd.DataFrame({"vid": np.array([], dtype=np.int64),
                                 "root": np.array([], dtype=np.int64)})
             return
-        src = np.concatenate([c["src"].to_numpy() for c in chunks])
-        dst = np.concatenate([c["dst"].to_numpy() for c in chunks])
-        # dense local ids; fully vectorized min-propagation with pointer
-        # jumping (no per-row Python — the same no-per-row mandate the
-        # rest of the engine follows)
-        vids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
-        s_idx, d_idx = inv[: len(src)], inv[len(src):]
-        label = np.arange(len(vids), dtype=np.int64)
-        for _ in range(64):  # ~log(diameter) with jumping; any prefix is
-            prev = label.copy()  # still a CORRECT (conservative) refinement
-            np.minimum.at(label, d_idx, label[s_idx])
-            np.minimum.at(label, s_idx, label[d_idx])
-            label = label[label]  # pointer jump
-            if np.array_equal(label, prev):
-                break
-        yield pd.DataFrame({"vid": vids, "root": vids[label]})
+        # ~log(diameter) rounds with jumping; any prefix is still a
+        # CORRECT (conservative) refinement, so the sweep caps them
+        vids, roots = min_label_roots(
+            np.concatenate([c["src"].to_numpy() for c in chunks]),
+            np.concatenate([c["dst"].to_numpy() for c in chunks]),
+            max_rounds=64,
+        )
+        yield pd.DataFrame({"vid": vids, "root": roots})
 
     # keep EVERY (vid, root) pair: a vertex seen in several partitions
     # links its per-partition roots together — collapsing to one root
@@ -416,3 +366,30 @@ def local_contract(edges, num_partitions: int = 32, assume_partitioned: bool = F
         edges = edges.repartition(num_partitions, "src")
     return edges.mapInPandas(run, schema=schema).distinct()
 
+
+def min_label_roots(src, dst, max_rounds: int | None = None):
+    """Driver- or task-local union-find over the int64 pairs
+    ``(src[i], dst[i])``: returns ``(vids, roots)``, the sorted distinct
+    endpoints and, per vid, the min vid of its set.
+
+    Dense local ids, then vectorized min-propagation with pointer
+    jumping (no per-row Python — the same no-per-row mandate the rest of
+    the engine follows) until no label moves, or for at most
+    ``max_rounds`` rounds, which may leave a set split into several
+    roots (each still a member ≤ every vid mapped to it).
+    """
+    import numpy as np
+
+    vids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    s_idx, d_idx = inv[: len(src)], inv[len(src):]
+    label = np.arange(len(vids), dtype=np.int64)
+    rounds = 0
+    while max_rounds is None or rounds < max_rounds:
+        rounds += 1
+        prev = label.copy()
+        np.minimum.at(label, d_idx, label[s_idx])
+        np.minimum.at(label, s_idx, label[d_idx])
+        label = label[label]  # pointer jump
+        if np.array_equal(label, prev):
+            break
+    return vids, vids[label]

@@ -59,9 +59,9 @@ class IterationLoop:
     max_iterations: int = 200
     metrics: list[dict] = field(default_factory=list)
     #: kernel-published extras riding the run (no extra jobs): the
-    #: state-row count ``n_state_rows`` (wcc, pagerank, sssp), the
-    #: ``changed_rows`` lazy view (wcc on a warm start, sssp),
-    #: sssp's ``total_improvements`` and pagerank's final ``rank_sum``
+    #: state-row count ``n_state_rows`` (wcc, pagerank, sssp), sssp's
+    #: ``changed_rows`` lazy view and ``total_improvements``, and
+    #: pagerank's final ``rank_sum``
     #: (from the per-iteration Observation) — the streaming path uses
     #: these to keep its durable state writes O(changed) and its
     #: bookkeeping O(1).

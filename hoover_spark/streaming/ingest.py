@@ -11,10 +11,14 @@ directory → ``foreachBatch``:
 
 1. append the micro-batch to the durable edge store (parquet; the
    Iceberg-ready seam is :mod:`hoover_spark.sources.io`),
-2. warm-start the kernel from the previous converged state,
-3. restrict the initial frontier to endpoints of *new* edges (the
-   reference's ``mark_for_processing`` on edge insert),
-4. persist the re-converged state + per-batch metrics.
+2. re-converge from the previous converged state: ``wcc`` relabels
+   whole components by a driver-side union-find over the fresh edges'
+   endpoint labels (insert-only edges merge components, never split
+   one); ``sssp`` and ``pagerank`` warm-start their rounds, ``sssp``
+   from the fresh edges' sources only (the reference's
+   ``mark_for_processing`` on edge insert); ``triangles`` adds the
+   batch's Δ,
+3. persist the changed state rows + per-batch metrics.
 
 Idempotency: edges are deduped against the store per batch, so replayed
 / duplicate micro-batches are no-ops (reference analogue:
@@ -25,61 +29,55 @@ Scale: the durable store is hive-partitioned by
 ``bucket = pmod(xxhash64(src, dst), n_buckets)`` and the per-batch
 dedup anti-join reads ONLY the bucket directories the micro-batch's own
 edges hash into — per-batch cost is O(|batch| / n_buckets · |E|), not
-O(|E|). A 16-edge reference-style micro-batch against a 100 TB store
-touches ≤16 of the buckets instead of rescanning everything (the
-round-2 version anti-joined the full store every batch — the per-batch
-wall grew linearly with accumulated history). With Iceberg packaged the
-same seam becomes a ``MERGE INTO`` on the bucket-partitioned table.
+O(|E|). With Iceberg packaged the same seam becomes a ``MERGE INTO`` on
+the bucket-partitioned table.
 
-The GRAPH VIEW is long-lived too (r3 scale-killer: the dedup half was
-bucket-pruned but each batch still re-scanned + re-shuffled the FULL
-store to rebuild the symmetric edge view). The first batch of a state's
-lifetime materializes a persisted hash-partitioned base Graph ONCE;
-every later batch composes it with an O(|batch|) checkpointed delta
+The GRAPH VIEW of ``sssp``, ``pagerank`` and ``triangles`` is
+long-lived too: the first batch of a state's lifetime materializes a
+persisted hash-partitioned base Graph ONCE; every later batch composes
+it with an O(|batch|) checkpointed delta
 (:class:`hoover_spark.operators.graph.DeltaGraph`) — kernels join each
-view separately, so the base keeps its partitioning and the per-batch
-graph work is proportional to the batch, not the store. When the
+view separately, so the base keeps its partitioning. When the
 accumulated delta crosses ``COMPACT_DELTA_FRAC`` of the base (and at
 least ``COMPACT_FLOOR`` rows), one amortized rebuild folds it in
 (reference analogue: ``update_edge_info`` touches only mutated
-adjacency rows, ``src/hoover.cpp:450-600``).
+adjacency rows, ``src/hoover.cpp:450-600``). ``wcc`` reads the view
+only for its cold start and then releases it: its warm batches read
+the state alone, so a resumed ``wcc`` stream never builds a base.
 
 One batch body serves all four kernels, the way HOOVER runs every
 application through one main loop with per-application callbacks
 (``hvr_body``, ``src/hoover.cpp:3804-3947``): ingest (dedup, store
 append), then — triangles only — the Δ against the pre-merge view,
-then the delta merge/compaction, then — wcc, sssp, pagerank — the
-re-convergence on the merged view. Each kernel method returns
-``(state, changed, n_changed)``: ``changed is None`` asks for a full
-snapshot, ``n_changed == 0`` skips the durable write, and one shared
-tail persists, counts and logs. Every kernel publishes its state-row
-count (the quantity the snapshot threshold scales with) as
-``loop.kernel_state["n_state_rows"]``; the durable ``state_meta.json``
-keeps calling it ``n_vertices``.
+then the delta merge/compaction, then the re-convergence. Each kernel
+method returns ``(state, changed, n_changed)``: ``changed is None``
+asks for a full snapshot, ``n_changed == 0`` skips the durable write,
+and one shared tail persists, counts and logs. Every kernel publishes
+its state-row count as ``loop.kernel_state["n_state_rows"]``; the
+durable ``state_meta.json`` keeps calling it ``n_vertices``.
 
-Layout safety (r3 ADVICE): ``store_meta.json`` pins ``n_buckets`` for
-the lifetime of a work_dir (a different value would silently remap
-bucket ids and break dedup). A legacy flat (non-bucketed) edge store
-and a bucketed store without ``store_meta.json`` are both rejected
-loudly: neither records the bucket count its dedup depends on.
+Layout safety: ``store_meta.json`` pins ``n_buckets`` for the lifetime
+of a work_dir (a different value would silently remap bucket ids and
+break dedup). A legacy flat (non-bucketed) edge store and a bucketed
+store without ``store_meta.json`` are both rejected loudly: neither
+records the bucket count its dedup depends on.
 
-STATE writes are O(changed), not O(|V|) (r4 scale item — the smaller
-sibling of the r3 full-store graph rebuild): each micro-batch persists
-only the state rows the kernel actually changed (wcc's
-``changed_rows`` view, published on every warm start — the reference
-ships only ``needs_send`` vertices, ``inc/hvr_vertex.h:79-86``) as a
-sequenced delta under ``state_deltas/seq=N``, plus a periodic full
-snapshot once accumulated deltas cross ``SNAPSHOT_FRAC`` of the state
-(and at least ``SNAPSHOT_FLOOR`` rows; bounded resume cost).
-``_load_state`` composes snapshot + replay (latest-wins per vid).
-PageRank is the documented exception: damped power iteration is
-GLOBAL — a changed dangling mass or vertex count moves every rank, so
-its per-batch changed set IS the full state and it keeps full
-snapshots (writing "deltas" would rewrite |V| rows per batch under a
-different name). Its warm prep is O(|batch|) regardless: the vertex
-count is tracked incrementally (no ``prev.count()``), and
-renormalization rides the kernel's initial state projection
-(``initial_rank_sum``) instead of materializing a scaled O(|V|) copy.
+STATE writes are O(changed), not O(|V|): each micro-batch persists
+only the state rows the kernel changed (the reference ships only
+``needs_send`` vertices, ``inc/hvr_vertex.h:79-86``) as a sequenced
+delta under ``state_deltas/seq=N`` — for ``wcc`` the relabelled rows
+plus the new vertices, counted by the Observation on the relabel's
+hold; a batch that merges nothing and adds no vertex runs no job and
+writes nothing. A periodic full snapshot follows once accumulated
+deltas cross ``SNAPSHOT_FRAC`` of the state (and at least
+``SNAPSHOT_FLOOR`` rows; bounded resume cost). ``_load_state``
+composes snapshot + replay (latest-wins per vid). PageRank is the
+documented exception: damped power iteration is GLOBAL — a changed
+dangling mass or vertex count moves every rank, so its per-batch
+changed set IS the full state and it keeps full snapshots. Its warm
+prep is O(|batch|) regardless: the vertex count is tracked
+incrementally (no ``prev.count()``), and renormalization rides the
+kernel's initial state projection (``initial_rank_sum``).
 
 Incremental triangle counting (``kernel="triangles"``): the reference
 streams its triangle benchmark (``test/count_triangles.c:64-88``,
@@ -97,8 +95,8 @@ shortest distances, so each batch warm-starts
 table with the frontier = the distance-bearing src endpoints of the
 batch's fresh edges — every newly-shorter path uses ≥1 fresh edge, so
 re-relaxation from exactly those sources is exact. The durable write
-is the batch's improved rows only (``changed_rows``), O(changed); a
-batch whose fresh edges improve nothing skips the write entirely.
+is the batch's improved rows only (``changed_rows``); a batch whose
+fresh edges improve nothing skips the write entirely.
 """
 
 from __future__ import annotations
@@ -107,7 +105,10 @@ import json
 import os
 import shutil
 import time
+from functools import reduce
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.observation import Observation
 
@@ -115,7 +116,7 @@ from hoover_spark.operators.graph import EDGE_SCHEMA, DeltaGraph, Graph
 from hoover_spark.operators.pagerank import pagerank
 from hoover_spark.operators.paths import sssp
 from hoover_spark.operators.triangles import triangle_delta
-from hoover_spark.operators.wcc import wcc
+from hoover_spark.operators.wcc import min_label_roots, wcc
 from hoover_spark.plans.iteration import IterationLoop
 
 KERNELS = ("wcc", "pagerank", "sssp", "triangles")
@@ -149,13 +150,6 @@ class IncrementalGraphState:
     ) -> None:
         if kernel not in KERNELS:
             raise ValueError(f"unknown kernel {kernel!r}: expected one of {KERNELS}")
-        if "pre_contract" in (kernel_kwargs or {}):
-            # contraction seeds only a cold wcc start (it sweeps the
-            # whole edge store); reject it before any batch is stored
-            raise ValueError(
-                "kernel_kwargs may not set pre_contract: the warm "
-                "per-batch path cannot use the full-store contraction"
-            )
         self.spark = spark
         self.work_dir = work_dir
         self.kernel = kernel
@@ -208,11 +202,8 @@ class IncrementalGraphState:
     def _validate_layout(self) -> None:
         meta_path = os.path.join(self.work_dir, "store_meta.json")
         if os.path.isdir(self.edges_dir):
-            flat = [
-                n
-                for n in os.listdir(self.edges_dir)
-                if not (n.startswith("bucket=") or n.startswith("_") or n.startswith("."))
-            ]
+            names = os.listdir(self.edges_dir)
+            flat = [n for n in names if not n.startswith(("bucket=", "_", "."))]
             if flat:
                 raise ValueError(
                     f"edge store {self.edges_dir} contains non-bucketed entries "
@@ -306,40 +297,26 @@ class IncrementalGraphState:
         os.replace(tmp, self.state_meta_path)
 
     def _state_delta_dirs(self) -> list[tuple[int, str]]:
-        if not os.path.isdir(self.state_deltas_dir):
-            return []
-        out = []
-        for n in os.listdir(self.state_deltas_dir):
-            p = os.path.join(self.state_deltas_dir, n)
-            if n.startswith("seq=") and os.path.exists(
-                os.path.join(p, "_SUCCESS")
-            ):
-                out.append((int(n.split("=", 1)[1]), p))
-        return sorted(out)
+        d = self.state_deltas_dir
+        return sorted(
+            (int(n.split("=", 1)[1]), os.path.join(d, n))
+            for n in (os.listdir(d) if os.path.isdir(d) else [])
+            if n.startswith("seq=") and os.path.exists(os.path.join(d, n, "_SUCCESS"))
+        )
 
     def _load_state(self) -> DataFrame | None:
         """Resume: full snapshot + replay of sequenced deltas,
         latest-wins per vid. Replay cost is bounded: a snapshot is
         rewritten whenever accumulated deltas cross ``SNAPSHOT_FRAC``
         of the state, so at most that fraction is replayed."""
-        snap = None
-        if os.path.isdir(self.state_dir) and os.path.exists(
-            os.path.join(self.state_dir, "_SUCCESS")
-        ):
-            snap = self.spark.read.parquet(self.state_dir)
-        deltas = self._state_delta_dirs()
-        if snap is None and not deltas:
+        paths = [(-1, self.state_dir)] if self._have_snapshot() else []
+        parts = [
+            self.spark.read.parquet(path).withColumn("_seq", F.lit(seq))
+            for seq, path in paths + self._state_delta_dirs()
+        ]
+        if not parts:
             return None
-        parts = []
-        if snap is not None:
-            parts.append(snap.withColumn("_seq", F.lit(-1)))
-        for seq, path in deltas:
-            parts.append(
-                self.spark.read.parquet(path).withColumn("_seq", F.lit(seq))
-            )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+        df = reduce(DataFrame.unionByName, parts)
         if len(parts) == 1:
             return df.drop("_seq")
         val_cols = [c for c in df.columns if c not in ("vid", "_seq")]
@@ -364,10 +341,13 @@ class IncrementalGraphState:
         self.state_snapshot_writes += 1
         self.last_state_write = {"mode": "snapshot", "rows": self._snapshot_rows}
 
-    def _write_state_delta(self, delta_df: DataFrame) -> int:
+    def _have_snapshot(self) -> bool:
+        return os.path.exists(os.path.join(self.state_dir, "_SUCCESS"))
+
+    def _write_state_delta(self, delta_df: DataFrame) -> None:
         """Persist ONLY the batch's changed state rows (one row per vid)
-        under ``state_deltas/seq=N``; returns the row count (measured by
-        an Observation riding the write — no extra job)."""
+        under ``state_deltas/seq=N``; the row count rides the write as
+        an Observation (no extra job)."""
         obs = Observation()
         path = os.path.join(self.state_deltas_dir, f"seq={self._seq}")
         delta_df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
@@ -377,17 +357,13 @@ class IncrementalGraphState:
         self._state_delta_rows += n
         self.state_delta_writes += 1
         self.last_state_write = {"mode": "delta", "rows": n}
-        return n
 
     def _persist_state(self, state_df: DataFrame, changed_df: DataFrame | None) -> None:
         """One durable write per batch: the changed rows as a sequenced
         delta, escalating to a full snapshot when there is no previous
         snapshot or accumulated deltas cross the snapshot threshold."""
         self._seq += 1
-        have_snapshot = os.path.isdir(self.state_dir) and os.path.exists(
-            os.path.join(self.state_dir, "_SUCCESS")
-        )
-        if changed_df is None or not have_snapshot:
+        if changed_df is None or not self._have_snapshot():
             self._write_snapshot(state_df)
         else:
             self._write_state_delta(changed_df)
@@ -423,8 +399,6 @@ class IncrementalGraphState:
             base.vertices().persist().count()
             self._base = base
             self.base_builds += 1
-            # logged separately per batch so a latency SLO can tell the
-            # amortized rebuild spike from kernel wall (r4 advisory)
             self.last_base_build_s = round(time.perf_counter() - t0, 4)
         return self._base
 
@@ -463,27 +437,30 @@ class IncrementalGraphState:
             ).localCheckpoint(eager=True)
         self._delta_rows = self._delta_sym.count()
 
+    def _release_view(self) -> None:
+        """Drop the base and the deltas; the next ``_ensure_base``
+        rebuilds from the (already durably appended) store."""
+        old = self._base
+        self._base = None
+        self._delta = None
+        self._delta_sym = None
+        self._delta_rows = self._base_rows = 0
+        old.unpersist()
+
     def _maybe_compact(self) -> None:
         """When the delta outgrows ``COMPACT_DELTA_FRAC`` of the base,
         release the old base and let the next ``_ensure_base`` fold the
-        (already durably appended) delta in — one amortized rebuild."""
+        delta in — one amortized rebuild."""
         if self._base is None or self._delta_rows == 0:
             return
         threshold = max(int(self._base_rows * COMPACT_DELTA_FRAC), COMPACT_FLOOR)
         if self._delta_rows >= threshold:
-            old = self._base
-            self._base = None
-            self._delta = None
-            self._delta_sym = None
-            self._delta_rows = 0
-            old.unpersist()
+            self._release_view()
             self.compactions += 1
 
     def _graph_for_batch(self) -> Graph:
         base = self._ensure_base()
-        if self._delta is None:
-            return base
-        return DeltaGraph(base, self._delta, self._delta_sym)
+        return base if self._delta is None else DeltaGraph(base, self._delta, self._delta_sym)
 
     # -- the foreachBatch body ----------------------------------------------
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -505,16 +482,10 @@ class IncrementalGraphState:
         # matters for the symmetric-view delta) however large the
         # accumulated store has grown
         batch = batch.withColumn("bucket", self._bucket_expr())
+        rev = F.pmod(F.xxhash64("dst", "src"), F.lit(self.n_buckets))
         batch_buckets = [
             r["b"]
-            for r in batch.select(
-                F.explode(
-                    F.array(
-                        F.col("bucket"),
-                        F.pmod(F.xxhash64("dst", "src"), F.lit(self.n_buckets)),
-                    )
-                ).alias("b")
-            )
+            for r in batch.select(F.explode(F.array("bucket", rev)).alias("b"))
             .distinct()
             .collect()
         ]
@@ -525,16 +496,21 @@ class IncrementalGraphState:
         if self.kernel == "triangles":
             self._ensure_base()
         existing = self._store_slice(batch_buckets)
-        if existing is not None:
-            fresh = batch.join(existing, on=["src", "dst"], how="left_anti")
-        else:
-            fresh = batch
+        fresh = (
+            batch
+            if existing is None
+            else batch.join(existing, on=["src", "dst"], how="left_anti")
+        )
         # Sever lineage BEFORE appending: the append below would otherwise
         # trigger recacheByPath and re-evaluate this anti-join against the
         # post-append store (yielding zero "fresh" rows and an empty
-        # frontier). localCheckpoint pins the snapshot.
-        fresh = fresh.localCheckpoint(eager=True)
-        n_fresh = fresh.count()
+        # frontier). localCheckpoint pins the snapshot; its row count
+        # rides the same action.
+        obs = Observation()
+        fresh = fresh.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
+        )
+        n_fresh = int(obs.get["n"] or 0)
         # the sym-view complement must also be materialized pre-append
         # (same recacheByPath trap: `existing` reads the bucket dirs)
         delta_sym_batch = None
@@ -555,25 +531,25 @@ class IncrementalGraphState:
             # the Δ joins the batch against the OLD adjacency: before
             # this batch's edges are merged into the graph view
             state, changed, n_changed = self._triangles(delta_sym_batch, loop)
-        # graph view: the first batch of this state's lifetime builds
-        # the persisted base (from the just-appended store); later
-        # batches fold their fresh edges into the O(|batch|) delta and
-        # compose — NO per-batch store rescan / re-shuffle.
+        # graph view: later batches fold their fresh edges into the
+        # O(|batch|) delta — NO per-batch store rescan / re-shuffle
         if delta_sym_batch is not None:
             self._merge_delta(fresh, delta_sym_batch)
             self._maybe_compact()
-        if self.kernel != "triangles":
+        if self.kernel == "wcc":
+            state, changed, n_changed = self._wcc(fresh, loop)
+        elif self.kernel != "triangles":
             graph = self._graph_for_batch()
-            kernel = {"wcc": self._wcc, "sssp": self._sssp, "pagerank": self._pagerank}
+            kernel = {"sssp": self._sssp, "pagerank": self._pagerank}
             state, changed, n_changed = kernel[self.kernel](graph, fresh, loop)
             if graph is not self._base:
                 graph.unpersist()  # composite's own cache only; base persists
 
         self._n_state_rows = int(loop.kernel_state.get("n_state_rows") or 0)
-        # in-memory state stays the kernel's localCheckpoint-backed,
-        # vid-partitioned output (no per-batch parquet re-read)
+        # in-memory state stays the kernel's localCheckpoint-backed
+        # output (no per-batch parquet re-read)
         self._state = state
-        if changed is not None and n_changed == 0:
+        if n_changed == 0:
             # nothing changed: skip the durable write entirely
             self._seq += 1
             self._write_state_meta()
@@ -589,41 +565,65 @@ class IncrementalGraphState:
         self._log(batch_id, n_fresh, len(loop.metrics), time.perf_counter() - t0, extra)
 
     # -- per-kernel re-convergence: (state, changed, n_changed) ------------
-    def _endpoints(self, fresh: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """The batch's endpoint vids, and those the state has not seen:
-        new vertices come from the batch's own edges, never a full-store
-        vertex scan (the state is vid-partitioned, so only the tiny side
-        shuffles)."""
-        verts = (
-            fresh.select(F.col("src").alias("vid"))
-            .unionByName(fresh.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
-        return verts, verts.join(self._state.select("vid"), on="vid", how="left_anti")
-
-    def _wcc(self, graph: Graph, fresh: DataFrame, loop: IterationLoop) -> Reconverged:
+    def _wcc(self, fresh: DataFrame, loop: IterationLoop) -> Reconverged:
         if self._state is None:
-            # cold start: the delta IS the state
-            return wcc(graph, loop=loop, **self.kernel_kwargs), None, None
-        fresh_verts, new_verts = self._endpoints(fresh)
-        new_labeled = new_verts.select("vid", F.col("vid").alias("label"))
-        state = wcc(
-            graph,
-            loop=loop,
-            initial_labels=self._state.select("vid", "label").unionByName(new_labeled),
-            initial_frontier=fresh_verts,
-            **self.kernel_kwargs,
+            # cold start: hash-min over the store's base view, which no
+            # later batch reads
+            state = wcc(self._graph_for_batch(), loop=loop, **self.kernel_kwargs)
+            self._release_view()
+            return state, None, None
+        # Insert-only edges merge components and never split one, so the
+        # new labels are a union-find over the fresh edges' endpoint
+        # labels (Kiveris et al., SoCC'14, merge whole components).
+        edges = fresh.toPandas()
+        ends = np.unique(edges.to_numpy())
+        # one state scan for the endpoints' labels; the endpoints it
+        # lacks are new vertices, labelled by their own vid
+        known = self._state.where(F.col("vid").isin(ends.tolist())).toPandas()
+        new = ~np.isin(ends, known["vid"])
+        label = ends.copy()
+        label[~new] = known.sort_values("vid")["label"]
+        labels, roots = min_label_roots(
+            label[np.searchsorted(ends, edges["src"])],
+            label[np.searchsorted(ends, edges["dst"])],
         )
-        # durable write = ONLY the rows the kernel changed plus the
-        # brand-new vertices (labels are monotone: min resolves a vid
-        # present in both)
-        changed = (
-            loop.kernel_state["changed_rows"]
-            .unionByName(new_labeled)
-            .groupBy("vid")
-            .agg(F.min("label").alias("label"))
+        moved = (roots != labels) & np.isin(labels, known["label"])
+        if not moved.any() and not new.any():
+            # every fresh edge closes inside one component
+            loop.kernel_state["n_state_rows"] = self._n_state_rows
+            return self._state, None, 0
+        relabel = self.spark.createDataFrame(
+            pd.DataFrame({"label": labels[moved], "new_label": roots[moved]}),
+            "label long, new_label long",
         )
-        return state, changed, None
+        added = self.spark.createDataFrame(
+            pd.DataFrame(
+                {"vid": ends[new], "label": roots[np.searchsorted(labels, ends[new])]}
+            ),
+            "vid long, label long",
+        )
+        # relabel by a broadcast join on label and add the new vertices;
+        # the state and changed-row counts ride the hold
+        obs = Observation()
+        held = (
+            self._state.join(F.broadcast(relabel), on="label", how="left")
+            .select(
+                "vid",
+                F.coalesce("new_label", "label").alias("label"),
+                F.col("new_label").isNotNull().alias("_chg"),
+            )
+            .unionByName(added.withColumn("_chg", F.lit(True)))
+            .coalesce(self.num_partitions)
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(F.col("_chg").cast("long")).alias("changed"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        loop.kernel_state["n_state_rows"] = int(obs.get["rows"] or 0)
+        changed = held.where(F.col("_chg")).select("vid", "label")
+        return held.select("vid", "label"), changed, int(obs.get["changed"] or 0)
 
     def _sssp(self, graph: Graph, fresh: DataFrame, loop: IterationLoop) -> Reconverged:
         kw = dict(self.kernel_kwargs)
@@ -646,16 +646,20 @@ class IncrementalGraphState:
         ks = loop.kernel_state
         return state, ks["changed_rows"], ks["total_improvements"]
 
-    def _pagerank(
-        self, graph: Graph, fresh: DataFrame, loop: IterationLoop
-    ) -> Reconverged:
+    def _pagerank(self, graph: Graph, fresh: DataFrame, loop: IterationLoop) -> Reconverged:
         warm = n_vertices = init_sum = None
         if self._state is not None:
-            # O(|batch|) warm prep: vertex count tracked incrementally
-            # (no prev.count()), renormalization folded into the
-            # kernel's initial projection via initial_rank_sum (no
-            # O(|V|) sum + scaled copy)
-            _, new_verts = self._endpoints(fresh)
+            # O(|batch|) warm prep: new vertices from the batch's own
+            # endpoints (no full-store vertex scan), the vertex count
+            # tracked incrementally (no prev.count()), renormalization
+            # folded into the kernel's initial projection via
+            # initial_rank_sum (no O(|V|) sum + scaled copy)
+            new_verts = (
+                fresh.select(F.col("src").alias("vid"))
+                .unionByName(fresh.select(F.col("dst").alias("vid")))
+                .distinct()
+                .join(self._state.select("vid"), on="vid", how="left_anti")
+            )
             n_new = new_verts.count()
             n_vertices = int(self._n_state_rows) + n_new
             warm = self._state.select("vid", "rank").unionByName(
@@ -734,32 +738,26 @@ class IncrementalGraphState:
         secs: float,
         extra: dict | None = None,
     ) -> None:
+        row = {
+            "batch_id": int(batch_id),
+            "new_edges": int(n_new),
+            "reconverge_iters": int(iters),
+            "wall_s": round(secs, 4),
+            "dedup_scan": self.last_scan,
+            "graph_view": {
+                "base_builds": self.base_builds,
+                "base_sym_rows": self._base_rows,
+                "delta_sym_rows": self._delta_rows,
+                "compactions": self.compactions,
+                # the amortized inline rebuild's wall (0.0 when this
+                # batch paid none), apart from the kernel's
+                "base_build_s": self.last_base_build_s,
+            },
+            "state_write": self.last_state_write,
+            **(extra or {}),
+        }
         with open(self.metrics_path, "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "batch_id": int(batch_id),
-                        "new_edges": int(n_new),
-                        "reconverge_iters": int(iters),
-                        "wall_s": round(secs, 4),
-                        "dedup_scan": self.last_scan,
-                        "graph_view": {
-                            "base_builds": self.base_builds,
-                            "base_sym_rows": self._base_rows,
-                            "delta_sym_rows": self._delta_rows,
-                            "compactions": self.compactions,
-                            # the amortized inline rebuild's wall,
-                            # separated from kernel wall (0.0 when this
-                            # batch paid no rebuild) — the latency-SLO
-                            # evidence for the compaction spike
-                            "base_build_s": self.last_base_build_s,
-                        },
-                        "state_write": self.last_state_write,
-                        **(extra or {}),
-                    }
-                )
-                + "\n"
-            )
+            f.write(json.dumps(row) + "\n")
 
     def state(self) -> DataFrame | None:
         return self._state

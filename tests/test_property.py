@@ -13,12 +13,15 @@ hypothesis still shrinks failures to minimal graphs/strings.
 
 from __future__ import annotations
 
+import tempfile
+
 import duckdb
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from hoover_spark.functions.text import shingle_codes, shingle_codes_sql
 from hoover_spark.operators.graph import Graph
 from hoover_spark.operators.wcc import wcc
+from hoover_spark.plans.iteration import IterationLoop
 from tests.oracles import union_find_components
 
 SETTINGS = settings(
@@ -50,15 +53,20 @@ def test_wcc_matches_union_find(spark, pairs):
 @given(pairs=edge_lists, n_iter=st.integers(0, 3))
 @SETTINGS
 def test_wcc_warm_start_converges_same(spark, pairs, n_iter):
-    """Resuming from any bounded-iteration prefix state reaches the
+    """Resuming from any bounded-iteration prefix checkpoint reaches the
     same fixpoint (checkpoint/resume correctness, north-rule item)."""
     edges = spark.createDataFrame(pairs, schema="src long, dst long")
     g = Graph(edges)
-    prefix = wcc(g, max_iterations=n_iter) if n_iter else None
-    got = {
-        r["vid"]: r["label"]
-        for r in wcc(g, initial_labels=prefix).collect()
-    }
+    with tempfile.TemporaryDirectory() as ck:
+        prefix = IterationLoop(spark, "wcc", checkpoint_dir=ck, max_iterations=n_iter)
+        wcc(g, loop=prefix)
+        resumed = IterationLoop(spark, "wcc", checkpoint_dir=ck)
+        got = {
+            r["vid"]: r["label"]
+            for r in wcc(g, loop=resumed, resume=True).collect()
+        }
+    # the second run continued from the prefix's last round
+    assert resumed.metrics[0]["iter"] == len(prefix.metrics) + 1
     assert got == union_find_components(pairs)
 
 

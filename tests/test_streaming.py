@@ -4,6 +4,7 @@ Reference analogue: the same edge stream fed through start_time_step
 micro-batches must converge to the same state as a one-shot run
 (trace-diff methodology, tools/compare_traces.py)."""
 
+import json
 import math
 import os
 
@@ -175,6 +176,15 @@ def test_dedup_antijoin_is_bucket_pruned(spark, tmp_path):
     assert n_after == n_before
 
 
+def _sssp_dists(spark, work, seed_vids):
+    """Batch oracle: sssp over the full durable edge store."""
+    from hoover_spark.operators.paths import sssp
+
+    full = spark.read.parquet(os.path.join(work, "edges")).select("src", "dst")
+    seeds = spark.createDataFrame([(v,) for v in seed_vids], "vid long")
+    return {r["vid"]: r["dist"] for r in sssp(Graph(full, num_partitions=8), seeds).collect()}
+
+
 def test_per_batch_graph_is_base_plus_delta(spark, tmp_path):
     """The r3 scale-killer: every micro-batch re-scanned + re-shuffled
     the FULL durable store to rebuild the symmetric edge view. Now the
@@ -182,24 +192,24 @@ def test_per_batch_graph_is_base_plus_delta(spark, tmp_path):
     composes it with an O(|batch|) delta — evidenced by the build
     counter staying at 1 across many batches — while the converged
     state still matches a cold batch run over the full store."""
-    from pyspark.sql import functions as F
-
     from hoover_spark.streaming.ingest import IncrementalGraphState
 
     work = str(tmp_path / "work")
-    state = IncrementalGraphState(
-        spark, work, kernel="wcc", num_partitions=8, n_buckets=32
-    )
     big = rmat_graph(spark, scale=8, edge_factor=4).clean_edges()
+    vids = sorted(r["vid"] for r in Graph(big).vertices().collect())[:12]
+    seed_vids = [vids[0]]
+    state = IncrementalGraphState(
+        spark, work, kernel="sssp", num_partitions=8, n_buckets=32,
+        kernel_kwargs={"seed_vids": seed_vids},
+    )
     state.apply_batch(big, 0)
     assert state.base_builds == 1
 
-    # chain-link micro-batches: merge existing components + new vertices
-    vids = sorted(r["vid"] for r in Graph(big).vertices().limit(12).collect())
+    # chain-link micro-batches: shortcut existing vertices + new vertices
     for i in range(5):
         small = spark.createDataFrame(
             [
-                (vids[2 * i], vids[2 * i + 1]),          # may merge comps
+                (vids[2 * i], vids[2 * i + 1]),          # may shorten paths
                 (vids[2 * i], 10_000_000 + i),            # brand-new vertex
             ],
             schema="src long, dst long",
@@ -211,16 +221,12 @@ def test_per_batch_graph_is_base_plus_delta(spark, tmp_path):
     assert state.last_scan["bucket_dirs_scanned"] <= 4  # 2 edges x 2 dirs
 
     # correctness: incremental == cold run over the full durable store
-    full = spark.read.parquet(os.path.join(work, "edges")).select("src", "dst")
-    got = {r["vid"]: r["label"] for r in state.state().collect()}
-    want = {
-        r["vid"]: r["label"] for r in wcc(Graph(full, num_partitions=8)).collect()
-    }
-    assert got == want
+    got = {r["vid"]: r["dist"] for r in state.state().collect()}
+    assert got == _sssp_dists(spark, work, seed_vids)
 
     # reverse-direction delivery: (b,a) for a stored (a,b) must not
-    # duplicate the symmetric view (delta_sym excludes it) and must
-    # leave labels unchanged
+    # duplicate the symmetric view (delta_sym excludes it), and the
+    # directed distances still match the batch oracle
     one = big.limit(1).collect()[0]
     rev = spark.createDataFrame(
         [(one["dst"], one["src"])], schema="src long, dst long"
@@ -228,29 +234,34 @@ def test_per_batch_graph_is_base_plus_delta(spark, tmp_path):
     before = state._delta_rows
     state.apply_batch(rev, 99)
     assert state._delta_rows == before  # sym view gained nothing
-    got2 = {r["vid"]: r["label"] for r in state.state().collect()}
-    assert got2 == want
+    got2 = {r["vid"]: r["dist"] for r in state.state().collect()}
+    assert got2 == _sssp_dists(spark, work, seed_vids)
 
 
 def test_compaction_folds_delta_into_base(spark, tmp_path, monkeypatch):
     """Once the delta outgrows the threshold, ONE amortized rebuild
     folds it into a fresh persisted base (and results stay exact)."""
+    from pyspark.sql import functions as F
+
     from hoover_spark.streaming import ingest
     from hoover_spark.streaming.ingest import IncrementalGraphState
 
     monkeypatch.setattr(ingest, "COMPACT_DELTA_FRAC", 0.01)
     work = str(tmp_path / "work")
-    state = IncrementalGraphState(
-        spark, work, kernel="wcc", num_partitions=8, n_buckets=16
-    )
     g1 = rmat_graph(spark, scale=7, edge_factor=4).clean_edges()
+    # one seed in g1 and one in the shifted g2 below, so both halves
+    # of the final store carry distances
+    s1 = min(r["vid"] for r in Graph(g1).vertices().collect())
+    seed_vids = [s1, s1 + 50_000_000]
+    state = IncrementalGraphState(
+        spark, work, kernel="sssp", num_partitions=8, n_buckets=16,
+        kernel_kwargs={"seed_vids": seed_vids},
+    )
     state.apply_batch(g1, 0)
     assert state.base_builds == 1
     # a second large batch overflows the 1% threshold (floor 4096 rows
     # is above these sizes, so pre-floor: use enough edges) — deliver
     # a big disjoint graph shifted into a new id range
-    from pyspark.sql import functions as F
-
     g2 = (
         rmat_graph(spark, scale=9, edge_factor=8)
         .clean_edges()
@@ -262,13 +273,10 @@ def test_compaction_folds_delta_into_base(spark, tmp_path, monkeypatch):
     state.apply_batch(g2, 1)
     assert state.compactions == 1
     assert state.base_builds == 2  # rebuilt once, by compaction
+    assert state._delta_rows == 0  # the delta was folded into the base
 
-    full = spark.read.parquet(os.path.join(work, "edges")).select("src", "dst")
-    got = {r["vid"]: r["label"] for r in state.state().collect()}
-    want = {
-        r["vid"]: r["label"] for r in wcc(Graph(full, num_partitions=8)).collect()
-    }
-    assert got == want
+    got = {r["vid"]: r["dist"] for r in state.state().collect()}
+    assert got == _sssp_dists(spark, work, seed_vids)
 
 
 def test_store_layout_validation(spark, tmp_path):
@@ -566,17 +574,78 @@ def test_sssp_state_write_o_changed_and_resume(spark, tmp_path):
 
 
 def test_wcc_stream_pre_contract_kwargs(spark, tmp_path):
-    """kernel_kwargs may not carry pre_contract: contraction seeds only a
-    cold start, so the state rejects it at construction — before a cold
-    first batch could be stored and the warm second batch fail."""
-    import pytest
+    """kernel_kwargs may carry pre_contract: contraction seeds the cold
+    start's hash-min, the warm batches relabel by union-find, and the
+    stream still equals a batch run."""
+    g = rmat_graph(spark, scale=6, edge_factor=4)
+    drops = str(tmp_path / "drops")
+    os.makedirs(drops)
+    _write_drops(spark, g, drops, k=3)
+
+    state = run_stream(
+        spark, drops, str(tmp_path / "work"), kernel="wcc", num_partitions=8,
+        kernel_kwargs={"pre_contract": True},
+    )
+    assert state.batches_applied == 3
+    got = {r["vid"]: r["label"] for r in state.state().collect()}
+    want = {r["vid"]: r["label"] for r in wcc(g).collect()}
+    assert got == want
+
+
+def test_wcc_stream_union_find_relabel(spark, tmp_path):
+    """A warm wcc batch relabels by union-find over its endpoints'
+    labels: no hash-min rounds and no graph view after the cold start.
+    Per batch the labels equal the union-find oracle over every edge so
+    far, and the durable delta holds exactly the relabelled vids plus
+    the new ones; a batch inside one component writes nothing."""
+    import pandas as pd
 
     from hoover_spark.streaming.ingest import IncrementalGraphState
+    from tests.oracles import union_find_components
 
-    work = tmp_path / "work"
-    with pytest.raises(ValueError, match="pre_contract"):
-        IncrementalGraphState(
-            spark, str(work), kernel="wcc",
-            kernel_kwargs={"pre_contract": True},
-        )
-    assert not work.exists()
+    work = str(tmp_path / "work")
+    st = IncrementalGraphState(spark, work, kernel="wcc", num_partitions=4, n_buckets=8)
+    # four components: {1,2,3}, {10,11,12}, {20,21}, {30,31}
+    pairs = [(1, 2), (2, 3), (10, 11), (11, 12), (20, 21), (30, 31)]
+    st.apply_batch(spark.createDataFrame(pairs, "src long, dst long"), 0)
+    assert st.base_builds == 1 and st._base is None and st._delta is None
+
+    def apply(batch, batch_id):
+        before = {r["vid"]: r["label"] for r in st.state().collect()}
+        pairs.extend(batch)
+        st.apply_batch(spark.createDataFrame(batch, "src long, dst long"), batch_id)
+        got = {r["vid"]: r["label"] for r in st.state().collect()}
+        assert got == union_find_components(pairs)
+        return {v: l for v, l in got.items() if before.get(v) != l}
+
+    def written():
+        path = os.path.join(work, "state_deltas", f"seq={st._seq}")
+        rows = pd.read_parquet(path)
+        return dict(zip(rows["vid"].tolist(), rows["label"].tolist()))
+
+    # chains {1,2,3} - {10,11,12} - {20,21} transitively: both larger
+    # components take label 1, {30,31} stays
+    want = apply([(3, 10), (12, 20)], 1)
+    assert set(want) == {10, 11, 12, 20, 21}
+    assert written() == want
+    assert st.last_state_write == {"mode": "delta", "rows": 5}
+
+    # new vertices only: a fresh component, all rows written
+    want = apply([(100, 101), (101, 102)], 2)
+    assert want == {100: 100, 101: 100, 102: 100}
+    assert written() == want
+    assert st.last_state_write == {"mode": "delta", "rows": 3}
+
+    # an edge inside one component: no relabel job (the held state is
+    # kept as is), no write
+    seq, held = st._seq, st.state()
+    assert apply([(1, 21)], 3) == {}
+    assert st.state() is held
+    assert st.last_state_write == {"mode": "none", "rows": 0}
+    assert not os.path.exists(os.path.join(work, "state_deltas", f"seq={seq + 1}"))
+
+    # warm batches ran no rounds and never rebuilt the view
+    assert st.base_builds == 1 and st._base is None and st._delta_rows == 0
+    with open(os.path.join(work, "batch_metrics.jsonl")) as f:
+        lines = [json.loads(line) for line in f]
+    assert [l["reconverge_iters"] for l in lines[1:]] == [0, 0, 0]

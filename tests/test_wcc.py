@@ -1,7 +1,5 @@
 """WCC correctness vs union-find oracle (exact, per north rule)."""
 
-import pytest
-
 from hoover_spark.operators.wcc import wcc
 from hoover_spark.sources.synthetic import (
     cycle_graph,
@@ -176,15 +174,3 @@ def test_pre_contract_seeding_matches_plain(spark):
         else:
             assert len(seeded_loop.metrics) <= len(plain_loop.metrics)
 
-
-def test_pre_contract_with_frontier_is_sound(spark):
-    """Contraction seeds only a cold start: combining it with a warm
-    start (initial_frontier or initial_labels) raises instead of
-    sweeping the full edge set on every incremental call."""
-    g = path_graph(spark, 8)
-    frontier = spark.createDataFrame([(0,)], "vid long")
-    labels = spark.createDataFrame([(0, 0)], "vid long, label long")
-    with pytest.raises(ValueError, match="pre_contract"):
-        wcc(g, pre_contract=True, initial_frontier=frontier)
-    with pytest.raises(ValueError, match="pre_contract"):
-        wcc(g, pre_contract=True, initial_labels=labels)
