@@ -65,9 +65,11 @@ def kmeans_centroids(
     The ``assign_rounds − 1`` updates run on ``IterationLoop.run``
     (``plans/iteration.py``): each round (assign + update) holds the
     centroid table in one checkpoint action, whose Observation counts
-    the centroids that changed. A round that changes none is a fixed
-    point — every later round would repeat it — so the updates stop
-    there and the final assignment is the same.
+    the centroids that changed. The assignment's argmin carries each
+    vector on to the update, so a round scans the embeddings once. A
+    round that changes none is a fixed point — every later round would
+    repeat it — so the updates stop there and the final assignment is
+    the same.
     """
     if k < 1 or assign_rounds < 1:
         raise ValueError("k and assign_rounds must be >= 1")
@@ -84,10 +86,12 @@ def kmeans_centroids(
         )
     )
 
-    def assignment(cent):
+    def assignment(cent, *carry):
         # score = c·c − 2 v·c  (|v−c|² minus the row-constant v·v):
         # same argmin, one fewer dot product, and bit-portable because
-        # both engines fold the dot sequentially over doubles.
+        # both engines fold the dot sequentially over doubles. The
+        # ``carry`` columns ride the argmin struct after (score,
+        # cluster), which is unique per id, so they never break a tie.
         scored = (
             ev.crossJoin(F.broadcast(cent.select("cluster", "centroid")))
             .select(
@@ -98,21 +102,22 @@ def kmeans_centroids(
                     - F.lit(2.0) * _dot(F.col("v"), F.col("centroid")),
                     6,
                 ).alias("score"),
+                *carry,
             )
         )
         return (
             scored.groupBy(id_col)
-            .agg(F.min(F.struct("score", "cluster")).alias("m"))
-            .select(id_col, F.col("m.cluster").alias("cluster"))
+            .agg(F.min(F.struct("score", "cluster", *carry)).alias("m"))
+            .select(id_col, "m.cluster", *[f"m.{c}" for c in carry])
         )
 
     def step(cent, _it, _prev):
-        # update: element-wise mean per cluster. posexplode rows are
-        # combined map-side (hash aggregate) — only k·d partials per
-        # partition shuffle.
+        # update: element-wise mean per cluster over the vectors the
+        # argmin carried (one scan of the embeddings per round).
+        # posexplode rows are combined map-side (hash aggregate) — only
+        # k·d partials per partition shuffle.
         upd = (
-            assignment(cent)
-            .join(ev, on=id_col)
+            assignment(cent, "v")
             .select("cluster", F.posexplode("v").alias("pos", "val"))
             .groupBy("cluster", "pos")
             .agg(F.round(F.avg("val"), 6).alias("m"))

@@ -28,8 +28,9 @@ Idempotency: edges are deduped against the store per batch, so replayed
 Scale: the durable store is hive-partitioned by
 ``bucket = pmod(xxhash64(src, dst), n_buckets)`` and the per-batch
 dedup anti-join reads ONLY the bucket directories the micro-batch's own
-edges hash into — per-batch cost is O(|batch| / n_buckets · |E|), not
-O(|E|). With Iceberg packaged the same seam becomes a ``MERGE INTO`` on
+edges hash into (and, for the kernels with a symmetric-view delta, the
+reverse orientation's) — per-batch cost is O(|batch| / n_buckets · |E|),
+not O(|E|). With Iceberg packaged the same seam becomes a ``MERGE INTO`` on
 the bucket-partitioned table.
 
 The GRAPH VIEW of ``sssp``, ``pagerank`` and ``triangles`` is
@@ -44,6 +45,17 @@ least ``COMPACT_FLOOR`` rows), one amortized rebuild folds it in
 adjacency rows, ``src/hoover.cpp:450-600``). ``wcc`` reads the view
 only for its cold start and then releases it: its warm batches read
 the state alone, so a resumed ``wcc`` stream never builds a base.
+
+A warm batch starts no Python worker and makes no per-value JVM call:
+every frame it builds on the driver (``wcc``'s relabel map and new
+vertices, ``sssp``'s seeds, built once per state) comes from a
+non-empty pandas frame, which pyspark ships through Arrow — an empty or
+row-list ``createDataFrame`` plans pickled rows, a stage that starts
+Python workers — and ``wcc`` fetches its endpoints' labels through one
+SQL ``IN`` list. On 4 vCPUs (perfbench ``stream-ingest``: 60-edge
+drops, 8 buckets) a warm ``wcc`` batch runs about 12.6 Spark jobs and
+takes about 1.2 s (traced p50); the whole drop, trigger included,
+about 1.5 s.
 
 One batch body serves all four kernels, the way HOOVER runs every
 application through one main loop with per-application callbacks
@@ -179,6 +191,7 @@ class IncrementalGraphState:
             # count, never repeated per batch
             self._n_state_rows = self._state.count()
         self.batches_applied = 0
+        self._seeds: DataFrame | None = None  # sssp's seed set
         #: pruning evidence for the last batch's dedup anti-join
         self.last_scan: dict | None = None
         # long-lived graph view: persisted base + checkpointed deltas
@@ -248,6 +261,14 @@ class IncrementalGraphState:
             return []
         return sorted(
             n for n in os.listdir(self.edges_dir) if n.startswith("bucket=")
+        )
+
+    def _no_edges(self) -> DataFrame:
+        """An empty ``EDGE_SCHEMA`` frame planned in the JVM: an empty
+        ``createDataFrame`` takes pyspark's pickled-row path, a stage
+        that starts Python workers."""
+        return self.spark.range(0).select(
+            F.col("id").alias("src"), F.col("id").alias("dst")
         )
 
     def _edges(self) -> DataFrame | None:
@@ -382,7 +403,7 @@ class IncrementalGraphState:
             t0 = time.perf_counter()
             store = self._edges()
             if store is None:
-                store = self.spark.createDataFrame([], EDGE_SCHEMA)
+                store = self._no_edges()
             # SEVER the snapshot from the store path: later appends fire
             # recacheByPath, which would silently refresh a path-backed
             # persisted view to include the appended edges — and those
@@ -477,15 +498,17 @@ class IncrementalGraphState:
         )
 
         # dedup against ONLY the bucket slices this batch hashes into —
-        # a micro-batch of b edges scans ≤ 2b of the n_buckets
-        # directories (both orientations: the reverse edge's presence
-        # matters for the symmetric-view delta) however large the
-        # accumulated store has grown
+        # a micro-batch of b edges scans ≤ b of the n_buckets
+        # directories however large the accumulated store has grown;
+        # ≤ 2b for the kernels with a symmetric-view delta, which also
+        # tests the reverse edge's presence (wcc builds no such delta)
         batch = batch.withColumn("bucket", self._bucket_expr())
-        rev = F.pmod(F.xxhash64("dst", "src"), F.lit(self.n_buckets))
+        orients = [F.col("bucket")]
+        if self.kernel != "wcc":
+            orients.append(F.pmod(F.xxhash64("dst", "src"), F.lit(self.n_buckets)))
         batch_buckets = [
             r["b"]
-            for r in batch.select(F.explode(F.array("bucket", rev)).alias("b"))
+            for r in batch.select(F.explode(F.array(*orients)).alias("b"))
             .distinct()
             .collect()
         ]
@@ -577,9 +600,11 @@ class IncrementalGraphState:
         # labels (Kiveris et al., SoCC'14, merge whole components).
         edges = fresh.toPandas()
         ends = np.unique(edges.to_numpy())
-        # one state scan for the endpoints' labels; the endpoints it
-        # lacks are new vertices, labelled by their own vid
-        known = self._state.where(F.col("vid").isin(ends.tolist())).toPandas()
+        # one state scan for the endpoints' labels, filtered by one SQL
+        # IN list (one JVM call, not one literal per endpoint); the
+        # endpoints it lacks are new vertices, labelled by their own vid
+        in_ends = ", ".join(f"{v}L" for v in ends.tolist())
+        known = self._state.where(F.expr(f"vid IN ({in_ends})")).toPandas()
         new = ~np.isin(ends, known["vid"])
         label = ends.copy()
         label[~new] = known.sort_values("vid")["label"]
@@ -592,28 +617,34 @@ class IncrementalGraphState:
             # every fresh edge closes inside one component
             loop.kernel_state["n_state_rows"] = self._n_state_rows
             return self._state, None, 0
-        relabel = self.spark.createDataFrame(
-            pd.DataFrame({"label": labels[moved], "new_label": roots[moved]}),
-            "label long, new_label long",
-        )
-        added = self.spark.createDataFrame(
-            pd.DataFrame(
-                {"vid": ends[new], "label": roots[np.searchsorted(labels, ends[new])]}
-            ),
-            "vid long, label long",
-        )
-        # relabel by a broadcast join on label and add the new vertices;
-        # the state and changed-row counts ride the hold
-        obs = Observation()
-        held = (
-            self._state.join(F.broadcast(relabel), on="label", how="left")
-            .select(
+        # relabel by a broadcast join on label and add the new vertices,
+        # each only when it has rows: pyspark builds a frame through
+        # Arrow only when it is non-empty (an empty one takes the
+        # pickled-row path, a stage that starts Python workers)
+        if moved.any():
+            relabel = self.spark.createDataFrame(
+                pd.DataFrame({"label": labels[moved], "new_label": roots[moved]}),
+                "label long, new_label long",
+            )
+            held = self._state.join(F.broadcast(relabel), on="label", how="left").select(
                 "vid",
                 F.coalesce("new_label", "label").alias("label"),
                 F.col("new_label").isNotNull().alias("_chg"),
             )
-            .unionByName(added.withColumn("_chg", F.lit(True)))
-            .coalesce(self.num_partitions)
+        else:
+            held = self._state.select("vid", "label", F.lit(False).alias("_chg"))
+        if new.any():
+            added = self.spark.createDataFrame(
+                pd.DataFrame(
+                    {"vid": ends[new], "label": roots[np.searchsorted(labels, ends[new])]}
+                ),
+                "vid long, label long",
+            )
+            held = held.unionByName(added.withColumn("_chg", F.lit(True)))
+        # the state and changed-row counts ride the hold
+        obs = Observation()
+        held = (
+            held.coalesce(self.num_partitions)
             .observe(
                 obs,
                 F.count(F.lit(1)).alias("rows"),
@@ -626,18 +657,21 @@ class IncrementalGraphState:
         return held.select("vid", "label"), changed, int(obs.get["changed"] or 0)
 
     def _sssp(self, graph: Graph, fresh: DataFrame, loop: IterationLoop) -> Reconverged:
-        kw = dict(self.kernel_kwargs)
-        seeds = self.spark.createDataFrame(
-            [(int(v),) for v in kw.pop("seed_vids")], "vid long"
-        )
+        kw = {k: v for k, v in self.kernel_kwargs.items() if k != "seed_vids"}
+        if self._seeds is None:
+            # built once per state, through Arrow (no per-batch Python rows)
+            self._seeds = self.spark.createDataFrame(
+                pd.DataFrame({"vid": self.kernel_kwargs["seed_vids"]}, dtype="int64"),
+                "vid long",
+            )
         if self._state is None:
-            return sssp(graph, seeds, loop=loop, **kw), None, None
+            return sssp(graph, self._seeds, loop=loop, **kw), None, None
         # frontier = fresh-edge sources that already carry a distance
         # (an unreached source relaxes nothing yet; it re-enters the
         # frontier the round it is reached)
         state = sssp(
             graph,
-            seeds,
+            self._seeds,
             loop=loop,
             initial_dists=self._state.select("vid", "dist"),
             initial_frontier=fresh.select(F.col("src").alias("vid")).distinct(),
@@ -695,7 +729,7 @@ class IncrementalGraphState:
         newU = (
             delta_sym_batch.where(F.col("src") < F.col("dst"))
             if delta_sym_batch is not None
-            else self.spark.createDataFrame([], EDGE_SCHEMA)
+            else self._no_edges()
         )
         obs = Observation()
         inc = (

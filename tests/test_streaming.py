@@ -156,15 +156,18 @@ def test_dedup_antijoin_is_bucket_pruned(spark, tmp_path):
     state.apply_batch(big, 0)
     assert state.last_scan["bucket_dirs_total"] == 0  # store was empty
 
-    # tiny micro-batch: 4 edges -> at most 8 bucket dirs scanned (both
-    # orientations: reverse-edge presence decides the sym-view delta)
+    # tiny micro-batch: 4 edges -> at most 4 bucket dirs scanned (wcc
+    # builds no symmetric-view delta, so only the forward orientation's
+    # buckets: exactly the ones the batch hashes into)
     small = spark.createDataFrame(
         [(1, 2), (3, 4), (5, 6), (900001, 900002)], schema="src long, dst long"
     )
+    own = small.select(F.pmod(F.xxhash64("src", "dst"), F.lit(32))).distinct().count()
     state.apply_batch(small, 1)
     scan = state.last_scan
     assert scan["bucket_dirs_total"] >= 16          # store is spread out
-    assert scan["bucket_dirs_scanned"] <= 8         # pruned to the batch
+    assert scan["buckets_in_batch"] == own          # pruned to the batch
+    assert scan["bucket_dirs_scanned"] <= 4
     assert scan["bucket_dirs_scanned"] < scan["bucket_dirs_total"]
 
     # ...and pruned dedup is still exact: re-delivering an already-
@@ -592,13 +595,17 @@ def test_wcc_stream_pre_contract_kwargs(spark, tmp_path):
     assert got == want
 
 
-def test_wcc_stream_union_find_relabel(spark, tmp_path):
+def test_wcc_stream_union_find_relabel(spark, tmp_path, monkeypatch):
     """A warm wcc batch relabels by union-find over its endpoints'
     labels: no hash-min rounds and no graph view after the cold start.
     Per batch the labels equal the union-find oracle over every edge so
     far, and the durable delta holds exactly the relabelled vids plus
-    the new ones; a batch inside one component writes nothing."""
+    the new ones; a batch inside one component writes nothing. No warm
+    batch builds a frame from Python rows or from an empty pandas
+    frame: pyspark plans both as pickled rows, a stage that starts
+    Python workers."""
     import pandas as pd
+    from pyspark.sql import SparkSession
 
     from hoover_spark.streaming.ingest import IncrementalGraphState
     from tests.oracles import union_find_components
@@ -610,10 +617,21 @@ def test_wcc_stream_union_find_relabel(spark, tmp_path):
     st.apply_batch(spark.createDataFrame(pairs, "src long, dst long"), 0)
     assert st.base_builds == 1 and st._base is None and st._delta is None
 
+    create = SparkSession.createDataFrame
+    built = []
+
+    def recording(self, data, *args, **kwargs):
+        built.append(data)
+        return create(self, data, *args, **kwargs)
+
     def apply(batch, batch_id):
         before = {r["vid"]: r["label"] for r in st.state().collect()}
         pairs.extend(batch)
-        st.apply_batch(spark.createDataFrame(batch, "src long, dst long"), batch_id)
+        batch_df = spark.createDataFrame(batch, "src long, dst long")
+        with monkeypatch.context() as m:
+            m.setattr(SparkSession, "createDataFrame", recording)
+            st.apply_batch(batch_df, batch_id)
+        assert all(isinstance(d, pd.DataFrame) and len(d) for d in built), built
         got = {r["vid"]: r["label"] for r in st.state().collect()}
         assert got == union_find_components(pairs)
         return {v: l for v, l in got.items() if before.get(v) != l}
@@ -644,8 +662,17 @@ def test_wcc_stream_union_find_relabel(spark, tmp_path):
     assert st.last_state_write == {"mode": "none", "rows": 0}
     assert not os.path.exists(os.path.join(work, "state_deltas", f"seq={seq + 1}"))
 
-    # warm batches ran no rounds and never rebuilt the view
+    # a merge and a new vertex in one batch: {30,31} joins label 1 and
+    # 200 arrives with it
+    want = apply([(31, 1), (31, 200)], 4)
+    assert want == {30: 1, 31: 1, 200: 1}
+    assert written() == want
+    assert st.last_state_write == {"mode": "delta", "rows": 3}
+
+    # warm batches ran no rounds and never rebuilt the view; each built
+    # only the relabel and new-vertex frames it needed
     assert st.base_builds == 1 and st._base is None and st._delta_rows == 0
     with open(os.path.join(work, "batch_metrics.jsonl")) as f:
         lines = [json.loads(line) for line in f]
-    assert [l["reconverge_iters"] for l in lines[1:]] == [0, 0, 0]
+    assert [l["reconverge_iters"] for l in lines[1:]] == [0, 0, 0, 0]
+    assert [len(d) for d in built] == [2, 3, 1, 1]
