@@ -48,15 +48,23 @@ def mode_label_propagation(
     loop = loop or IterationLoop(spark, kernel="mode_lp", max_iterations=n_iterations)
 
     edges = graph.sym_edges()
+    # held hash-partitioned by vid, like the messages below: a round
+    # shuffles only its messages (see ``IterationLoop.hold``)
     labels = loop.hold(
-        graph.vertices().select(F.col("vid"), F.col("vid").alias("label"))
+        graph.vertices()
+        .select(F.col("vid"), F.col("vid").alias("label"))
+        .repartition(graph.num_partitions, "vid"),
+        keep_partitioning=True,
     )
 
     def step(labels, _it, _prev):
         labels = labels.select("vid", "label")
         msgs = edges.join(
-            labels.select(F.col("vid").alias("src"), "label"), on="src"
+            labels.select(F.col("vid").alias("src"), "label").hint("shuffle_hash"), on="src"
         ).select(F.col("dst").alias("vid"), "label")
+        # one exchange by vid: the (vid, label) count and the per-vid
+        # argmax then run in its stage
+        msgs = msgs.repartition(graph.num_partitions, "vid")
         counts = msgs.groupBy("vid", "label").agg(F.count(F.lit(1)).alias("cnt"))
         # argmax by (cnt desc, label asc): max of struct(cnt, -label).
         best = counts.groupBy("vid").agg(
@@ -65,7 +73,7 @@ def mode_label_propagation(
         ).select(
             "vid", (-F.col("m.neg")).alias("mode_label"), "msg_cnt"
         )
-        stepped = labels.join(best, on="vid", how="left").select(
+        stepped = labels.join(best.hint("shuffle_hash"), on="vid", how="left").select(
             "vid",
             F.col("label").alias("prev_label"),
             F.coalesce("mode_label", "label").alias("label"),
@@ -80,5 +88,7 @@ def mode_label_propagation(
         changed = int(stats["changed"] or 0)
         return int(stats["shuffled"] or 0), float(changed), changed, changed == 0
 
-    labels, it, _ = loop.run(labels, step, observe, rounds=n_iterations)
+    labels, it, _ = loop.run(
+        labels, step, observe, rounds=n_iterations, keep_partitioning=True
+    )
     return loop.finish(labels.select("vid", "label"), it)

@@ -11,19 +11,28 @@ below the tolerance).
 
 Spark-first plan per iteration (all JVM-side, whole-stage codegen):
 
-    contribs = edges ⋈ ranks⊕out_deg (on src)   — 1 shuffle join
-    sums     = contribs groupBy(dst) SUM         — partial+final agg,
-               optional explicit two-stage salted agg for hot dsts
-    ranks'   = vertices ⟕ sums  →  (1-α)/n + α·(sum + dangling/n)
+    contribs = edges ⋈ ranks⊕out_deg (on src)   — co-partitioned, no shuffle
+    sums     = contribs groupBy(dst) SUM         — partial+final agg: the
+               round's one shuffle; optional explicit two-stage salted
+               agg for hot dsts
+    ranks'   = ranks ⟕ sums (on vid)             — co-partitioned, no shuffle
+               →  (1-α)/n + α·(sum + dangling/n)
     delta    = max |ranks' - ranks|              — an Observation on the
                checkpoint action: ONE Spark job per iteration
 
 Scale notes:
-- ``edges`` is pre-partitioned by ``src`` once and persisted; every
-  iteration's join reuses that partitioning (no re-shuffle of the big
-  side — the reference's static PE ownership, SURVEY.md §1.2).
-- the per-vertex (rank/out_deg) side is tiny relative to edges; AQE
-  picks broadcast when it fits.
+- ``edges`` is pre-partitioned by ``src`` once and persisted, and the
+  rank state is held hash-partitioned by ``vid`` on as many partitions
+  (``IterationLoop.hold(keep_partitioning=True)`` keeps that
+  partitioning across checkpoints).
+  Both joins are ``shuffle_hash``-hinted, so neither the edge view nor
+  the aggregated sums is broadcast: only the messages cross a shuffle,
+  as only updates travel between the reference's static PE owners
+  (SURVEY.md §1.2).
+- when ``graph.num_partitions`` differs from
+  ``spark.sql.shuffle.partitions``, the ≤|V|-row sums are re-shuffled
+  once more to meet the state; a round that re-reads a durable
+  ``save_state`` checkpoint re-shuffles the state once.
 - dangling mass is one scalar aggregate per iteration (reference
   analogue: coupled-metric reduction, ``src/hoover.cpp:2819-3180``).
 - hot destinations (a file imported by everything) are handled by the
@@ -165,9 +174,12 @@ def pagerank(
     # computes next iteration's dangling mass inside the checkpoint
     # action — ONE Spark job per iteration total (the reference's
     # coupled-metric reduction folded the same way,
-    # src/hoover.cpp:2819-3180).
+    # src/hoover.cpp:2819-3180). It is held hash-partitioned by vid, so
+    # the rounds' joins on src and vid shuffle only the messages.
     state, init_stats = loop.hold_observed(
-        ranks.join(out_deg, on="vid", how="left"), dangling_mass
+        ranks.join(out_deg, on="vid", how="left").repartition(graph.num_partitions, "vid"),
+        dangling_mass,
+        keep_partitioning=True,
     )
 
     base = (1.0 - alpha) / n
@@ -178,7 +190,8 @@ def pagerank(
             (F.col("rank") / F.col("out_deg")).alias("w"),
         )
         contribs = per_view(
-            edge_views, lambda v: v.join(wsrc, on="src").select("dst", "w")
+            edge_views,
+            lambda v: v.join(wsrc.hint("shuffle_hash"), on="src").select("dst", "w"),
         )
         if salt_buckets > 0:
             salted = with_salt(contribs, salt_buckets, cols=["w"])
@@ -201,7 +214,9 @@ def pagerank(
             spread = F.lit(dangling) * F.col("p")
         stepped = state.select(
             "vid", "out_deg", *static, F.col("rank").alias("_prev")
-        ).join(sums.withColumnRenamed("dst", "vid"), on="vid", how="left").select(
+        ).join(
+            sums.withColumnRenamed("dst", "vid").hint("shuffle_hash"), on="vid", how="left"
+        ).select(
             "vid",
             "out_deg",
             *static,
@@ -239,6 +254,7 @@ def pagerank(
         rounds=loop.max_iterations - start_iter,
         start=start_iter,
         stats=init_stats,
+        keep_partitioning=True,
     )
     loop.kernel_state["n_state_rows"] = n
     result = loop.finish(state.select("vid", "rank"), it)

@@ -176,9 +176,17 @@ def hash_min_rounds(
     over a directed one to the min vid that reaches each vertex (the
     jump stays sound: min-reachability is transitive).
     """
-    # keep state hash-partitioned by vid across iterations so the
-    # labels ⟕ mins join only shuffles the (smaller) message side
-    labels = loop.hold(labels.repartition(num_partitions, "vid"))
+    # Hold the state hash-partitioned by vid (``keep_partitioning``
+    # keeps that across checkpoints) on the edge views' partition
+    # count: the frontier ⋈ edges join on src and the labels ⟕ mins
+    # join on vid then need no exchange, and the round's one shuffle is
+    # its messages' groupBy. Both joins are ``shuffle_hash``-hinted so
+    # neither side is broadcast. Exceptions: mins are re-shuffled once
+    # more when ``num_partitions`` differs from
+    # ``spark.sql.shuffle.partitions``; a jump round leaves the state
+    # partitioned by label, and a ``save_state`` re-read loses the
+    # partitioning, so the round after either re-shuffles the state.
+    labels = loop.hold(labels.repartition(num_partitions, "vid"), keep_partitioning=True)
 
     # The flood phase runs without the jump; the tail (small frontier)
     # enables it, and a round whose jump lowers nothing retires it.
@@ -214,7 +222,9 @@ def hash_min_rounds(
         fsrc = front.select(F.col("vid").alias("src"), "label")
         msgs = per_view(
             edge_views,
-            lambda v: v.join(fsrc, on="src").select(F.col("dst").alias("vid"), "label"),
+            lambda v: v.join(fsrc.hint("shuffle_hash"), on="src").select(
+                F.col("dst").alias("vid"), "label"
+            ),
         )
         mins = msgs.groupBy("vid").agg(
             F.min("label").alias("msg_label"), F.count(F.lit(1)).alias("msg_cnt")
@@ -222,7 +232,7 @@ def hash_min_rounds(
         keep = ["vid", "_prev"]
         stepped = (
             state.select("vid", F.col("label").alias("_prev"))
-            .join(mins, on="vid", how="left")
+            .join(mins.hint("shuffle_hash"), on="vid", how="left")
             .select(
                 *keep,
                 F.least(
@@ -262,7 +272,9 @@ def hash_min_rounds(
         changed = int(stats["changed"] or 0)
         return int(stats["shuffled"] or 0), float(changed), changed, changed == 0
 
-    return loop.run(labels, step, observe, rounds=rounds, start=start)
+    return loop.run(
+        labels, step, observe, rounds=rounds, start=start, keep_partitioning=True
+    )
 
 
 # Contraction depth of ``pre_contract``: the star forest is contracted

@@ -18,7 +18,12 @@ and the driver owns the rest of the round sequence:
 - ONE Spark action per round: the eager ``localCheckpoint`` that
   materializes the state also computes the Observation (lineage
   truncation — without it Catalyst plans grow without bound, SURVEY.md
-  §7.4);
+  §7.4). With ``keep_partitioning`` it runs with AQE off, so the held
+  state keeps its partitioning and a co-partitioned round is one job
+  with one shuffle;
+- the round's Spark jobs carry the local properties ``hoover.kernel``
+  and ``hoover.iter`` (``tools/round_table.py`` rolls an event log up
+  by them);
 - the metrics row (reference profiling sink ``save_profiling_info``,
   ``src/hoover.cpp:3195-3423``): rows shuffled, delta norm, frontier
   size, wall ms, partition count;
@@ -70,10 +75,32 @@ class IterationLoop:
     _last_saved_iter: int = -1
 
     # -- state management ------------------------------------------------
-    def hold(self, df: DataFrame) -> DataFrame:
+    def hold(self, df: DataFrame, keep_partitioning: bool = False) -> DataFrame:
         """Persist + eagerly localCheckpoint a state DataFrame: truncates
-        lineage so iteration N's plan does not contain iterations 0..N-1."""
-        out = df.localCheckpoint(eager=True)
+        lineage so iteration N's plan does not contain iterations 0..N-1.
+
+        ``keep_partitioning=True`` runs the checkpoint with AQE off,
+        scoped to this one action. Under AQE the held ``LogicalRDD``
+        reports ``UnknownPartitioning(0)``, so a state repartitioned by
+        ``vid`` would be re-shuffled by every round that joins on
+        ``vid``; with AQE off it keeps the ``hashpartitioning(vid, P)``
+        its plan produced, and a round over a co-partitioned state
+        (pagerank, wcc's hash-min rounds, mode-LP) shuffles only its
+        messages: one exchange, statically planned. Other holds keep
+        AQE: a multi-join round such as ktruss's support count relies
+        on its exchange reuse and runtime join choice (2.5–4x slower
+        per round without them). The setting is the session's, so a
+        query another thread plans meanwhile runs without AQE too."""
+        if keep_partitioning:
+            conf = df.sparkSession.conf
+            prev = conf.get("spark.sql.adaptive.enabled")
+            conf.set("spark.sql.adaptive.enabled", "false")
+            try:
+                out = df.localCheckpoint(eager=True)
+            finally:
+                conf.set("spark.sql.adaptive.enabled", prev)
+        else:
+            out = df.localCheckpoint(eager=True)
         self._persisted.append(out)
         # Keep the three most recent states in memory (an iteration may
         # hold an intermediate plus its result while the previous
@@ -86,7 +113,9 @@ class IterationLoop:
                 pass
         return out
 
-    def hold_observed(self, df: DataFrame, *exprs) -> tuple[DataFrame, dict]:
+    def hold_observed(
+        self, df: DataFrame, *exprs, keep_partitioning: bool = False
+    ) -> tuple[DataFrame, dict]:
         """:meth:`hold` + per-iteration stats in the SAME action.
 
         Attaches a Spark ``Observation`` to ``df`` so the eager
@@ -101,7 +130,7 @@ class IterationLoop:
         from pyspark.sql.observation import Observation
 
         obs = Observation()
-        out = self.hold(df.observe(obs, *exprs))
+        out = self.hold(df.observe(obs, *exprs), keep_partitioning)
         return out, obs.get
 
     # -- the superstep driver ----------------------------------------------
@@ -113,26 +142,42 @@ class IterationLoop:
         rounds: int,
         start: int = 0,
         stats: dict | None = None,
+        keep_partitioning: bool = False,
     ) -> tuple[DataFrame, int, dict | None]:
         """Run at most ``rounds`` supersteps numbered from ``start + 1``.
 
         Round ``it`` holds ``step(state, it, stats)`` with its
         Observation in one action, logs ``observe(new_stats, stats)``,
         checkpoints at the cadence, and stops early once ``done``.
-        ``stats`` seeds round 1's ``prev_stats``. Returns the last
+        ``stats`` seeds round 1's ``prev_stats``; ``keep_partitioning``
+        is :meth:`hold`'s, for every round. Returns the last
         held state, the last iteration number and its stats (the
         inputs unchanged when no round ran).
+
+        Every Spark job a round submits carries the local properties
+        ``hoover.kernel`` and ``hoover.iter``, which Spark's event log
+        records on job start (``tools/round_table.py`` rolls them up);
+        both are cleared after the round.
         """
+        sc = self.spark.sparkContext
         it = start
         t0 = time.perf_counter()
         for it in range(start + 1, start + rounds + 1):
-            df, exprs = step(state, it, stats)
-            held, new_stats = self.hold_observed(df, *exprs)
-            shuffled, delta, frontier, done = observe(new_stats, stats)
-            t1 = time.perf_counter()
-            self.log(it, shuffled, delta, frontier, (t1 - t0) * 1000.0)
-            t0 = t1
-            state, stats = self.save_state(held, it), new_stats
+            sc.setLocalProperty("hoover.kernel", self.kernel)
+            sc.setLocalProperty("hoover.iter", str(it))
+            try:
+                df, exprs = step(state, it, stats)
+                held, new_stats = self.hold_observed(
+                    df, *exprs, keep_partitioning=keep_partitioning
+                )
+                shuffled, delta, frontier, done = observe(new_stats, stats)
+                t1 = time.perf_counter()
+                self.log(it, shuffled, delta, frontier, (t1 - t0) * 1000.0)
+                t0 = t1
+                state, stats = self.save_state(held, it), new_stats
+            finally:
+                sc.setLocalProperty("hoover.kernel", None)
+                sc.setLocalProperty("hoover.iter", None)
             if done:
                 break
         return state, it, stats

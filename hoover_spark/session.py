@@ -14,7 +14,9 @@ import re
 from pyspark.sql import SparkSession
 
 _DEFAULTS = {
-    # AQE: runtime coalescing, skew-join splitting, join-strategy re-plan.
+    # AQE: runtime coalescing, skew-join splitting, join-strategy re-plan
+    # (off for the checkpoint of a co-partitioned round,
+    # IterationLoop.hold(keep_partitioning=True)).
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -33,8 +35,10 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": str(8 * 1024 * 1024),
     # Iterative kernels join the same cached edge table every round on
     # the same key — a shuffled hash join skips SMJ's per-iteration
-    # re-sort of the big side (AQE still overrides per-stage when
-    # stats favor it).
+    # re-sort of the big side. Batch queries leave the pick to AQE;
+    # the round joins of pagerank, wcc and mode-LP pin it with
+    # ``shuffle_hash`` hints, since those rounds are checkpointed with
+    # AQE off (``IterationLoop.hold``).
     "spark.sql.join.preferSortMergeJoin": "false",
 }
 

@@ -280,7 +280,9 @@ class IncrementalGraphState:
     def _store_slice(self, buckets: list[int]) -> DataFrame | None:
         """The store restricted to the given buckets — reads only those
         bucket directories (explicit path-level partition pruning, no
-        reliance on planner behavior; testable via ``last_scan``)."""
+        reliance on planner behavior; testable via ``last_scan``). The
+        store's schema is fixed, so it is given rather than inferred:
+        inference would run its own Spark job every batch."""
         paths = [
             p
             for b in buckets
@@ -293,7 +295,7 @@ class IncrementalGraphState:
         }
         if not paths:
             return None
-        return self.spark.read.parquet(*paths).select("src", "dst")
+        return self.spark.read.schema(EDGE_SCHEMA).parquet(*paths)
 
     def _load_state_meta(self) -> dict:
         if os.path.exists(self.state_meta_path):

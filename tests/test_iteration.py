@@ -1,9 +1,11 @@
 """The superstep driver must keep each kernel round at one checkpoint
-action: the Spark jobs a round submits stay constant after round 1 and
-equal the count of the hand-written loops it replaced, and a
-kernel's total jobs grow linearly, not exponentially, in its rounds."""
+action: a round after round 1 submits one Spark job and shuffles only
+its messages, its jobs carry the kernel and iteration, and a kernel's
+total jobs grow linearly, not exponentially, in its rounds."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,6 +13,7 @@ from pyspark.sql import functions as F
 from hoover_spark.operators.centrality import weighted_pagerank
 from hoover_spark.operators.clustering import kmeans_assign
 from hoover_spark.operators.communities import louvain_move
+from hoover_spark.operators.graph import Graph
 from hoover_spark.operators.label_prop import mode_label_propagation
 from hoover_spark.operators.pagerank import pagerank
 from hoover_spark.operators.wcc import wcc
@@ -18,11 +21,11 @@ from hoover_spark.plans.iteration import IterationLoop
 from hoover_spark.sources.synthetic import cycle_graph, path_graph, rmat_graph
 
 # Jobs per round after round 1 on rmat_graph(scale=7), 8 shuffle
-# partitions, AQE on: the round's shuffle-map stages plus the eager
-# checkpoint's result stage. Measured on the hand-written loops.
-# WCC pins pointer_jumping=False: the adaptive jump adds a self-join
-# (two more jobs) only in the rounds where it is switched on.
-JOBS_PER_ROUND = {"pagerank": 5, "wcc": 5, "mode_lp": 6}
+# partitions: the hold runs with AQE off, so a round's shuffle-map
+# stages and the eager checkpoint's result stage are one job. WCC pins
+# pointer_jumping=False: the adaptive jump adds a self-join only in the
+# rounds where it is switched on.
+JOBS_PER_ROUND = {"pagerank": 1, "wcc": 1, "mode_lp": 1}
 
 KERNELS = {
     "pagerank": lambda g, loop: pagerank(g, loop=loop),
@@ -61,6 +64,73 @@ def test_one_action_per_round(spark, rmat7, kernel):
     per_round = [b - a for a, b in zip(loop.job_marks, loop.job_marks[1:])]
     assert len(per_round) >= 3, per_round
     assert set(per_round[1:]) == {JOBS_PER_ROUND[kernel]}, per_round
+
+
+def _plan_nodes(plan):
+    """Node names of a physical plan, adaptive stages unwrapped, without
+    the plans of cached relations (their exchanges ran when the cache
+    was built)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _plan_nodes(plan.executedPlan())
+        return
+    if name.endswith("QueryStage"):
+        yield from _plan_nodes(plan.plan())
+        return
+    yield name
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+@pytest.fixture(scope="module")
+def rmat7_copart(spark, rmat7):
+    """rmat7's edges on as many partitions as the shuffles use."""
+    g = Graph(rmat7.edges, num_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")))
+    yield g
+    g.unpersist()
+
+
+@pytest.mark.parametrize("kernel", sorted(KERNELS))
+def test_round_shuffles_only_messages(spark, rmat7_copart, monkeypatch, kernel):
+    """A round after the first joins a state held hash-partitioned by
+    vid with edge views partitioned by src: its plan has one shuffle
+    (the messages) and no broadcast."""
+    held = []
+    hold = IterationLoop.hold
+
+    def recording_hold(self, df, keep_partitioning=False):
+        out = hold(self, df, keep_partitioning)
+        nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+        part = out._jdf.queryExecution().executedPlan().outputPartitioning().toString()
+        held.append((nodes.count("Exchange"), nodes.count("BroadcastExchange"),
+                     re.sub(r"#\d+L?", "", part)))
+        return out
+
+    monkeypatch.setattr(IterationLoop, "hold", recording_hold)
+    KERNELS[kernel](rmat7_copart, IterationLoop(spark, kernel=kernel, max_iterations=100))
+    p = rmat7_copart.num_partitions
+    # held[0] is the initial state, held[1] round 1
+    assert len(held) >= 4, held
+    assert set(held[2:]) == {(1, 0, f"hashpartitioning(vid, {p})")}, held
+
+
+def test_rounds_carry_kernel_and_iteration(spark, monkeypatch):
+    """Each round's jobs carry the local properties hoover.kernel and
+    hoover.iter; the initial hold and the caller's later jobs do not."""
+    sc = spark.sparkContext
+    seen = []
+    hold = IterationLoop.hold
+
+    def recording_hold(self, df, keep_partitioning=False):
+        seen.append((sc.getLocalProperty("hoover.kernel"), sc.getLocalProperty("hoover.iter")))
+        return hold(self, df, keep_partitioning)
+
+    monkeypatch.setattr(IterationLoop, "hold", recording_hold)
+    pagerank(path_graph(spark, 5), n_iterations=3)
+    assert seen == [(None, None)] + [("pagerank", str(i)) for i in (1, 2, 3)], seen
+    assert sc.getLocalProperty("hoover.kernel") is None
+    assert sc.getLocalProperty("hoover.iter") is None
 
 
 # Each call runs `rounds` rounds of `IterationLoop.run` with no early
