@@ -19,18 +19,18 @@ wall is ~61 s. So the bench runs every query as INTERLEAVED repetitions
 inside one JVM — cycles of (edge_extract, pagerank, wcc, ...) repeated
 ``1 warm + 5 timed`` times (override via $SPARK_GRAFT_BENCH_WARM /
 $SPARK_GRAFT_BENCH_REPS) — and reports the per-query MEDIAN. The warm
-cycle also absorbs the C2 JIT compilation storm (tools/scaling_bench.py
-measured rep-2 landing inside it). Interleaving means a steal window
-hits one cycle of every query rather than every rep of one query, so
-the median stays representative. Raw walls are emitted alongside the
-medians for transparency.
+cycle also absorbs the C2 JIT compilation storm. Interleaving means a
+steal window hits one cycle of every query rather than every rep of one
+query, so the median stays representative. Raw walls are emitted
+alongside the medians for transparency.
 
 Self-annotation (round-3 lesson — the official artifact must be able to
 distinguish "code got slower" from "window was stolen" about ITSELF):
 
-- every rep carries telemetry sampled around it: the guest-visible
-  hypervisor steal%% from ``/proc/stat`` (cpu line, field 8) and a
-  single-thread sha256 throughput probe (~0.1 s). The probe is the
+- every rep carries telemetry sampled around it by
+  ``perfbench.host.HostNoise``: the guest-visible hypervisor steal%%
+  from ``/proc/stat`` (cpu line, field 8) and a single-thread sha256
+  throughput probe (~0.1 s) before and after the rep. The probe is the
   stronger signal on this sandbox: round-2 measurements showed
   contention storms slowing queries 5-20x while guest steal stayed
   under 9%% — a slowed probe catches what the steal counter misses.
@@ -53,15 +53,10 @@ printed line) written BEFORE the headline prints.
 the Graph from the regexp scan (the cost r1/r2 charged it); the last
 rep's persisted edge views are what the kernel queries iterate on —
 the steady-state regime a long-lived cluster job lives in.
-
-Scaling-efficiency evidence (north rule: ≥0.8 from N to 4N executors)
-comes from tools/scaling_bench.py (pinned JVMs, proportional heaps,
-interleaved medians at local[8] vs local[32]) — see BENCH.md.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import statistics
@@ -69,33 +64,7 @@ import time
 
 from pyspark.sql import functions as F
 
-
-def _cpu_stat() -> tuple[int, int]:
-    """(steal_jiffies, total_jiffies) from the aggregate cpu line."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        return steal, sum(vals[:8])
-    except Exception:  # non-Linux fallback: telemetry reads as 0
-        return 0, 0
-
-
-_PROBE_BUF = b"\xa5" * (1 << 20)
-
-
-def _probe_mb_per_s(duration: float = 0.1) -> float:
-    """Single-thread sha256 throughput (MB/s over 1 MiB blocks) — a
-    contention canary that catches the storms guest steal misses."""
-    t0 = time.perf_counter()
-    n = 0
-    while True:
-        hashlib.sha256(_PROBE_BUF).digest()
-        n += 1
-        dt = time.perf_counter() - t0
-        if dt >= duration:
-            return round(n / dt, 1)
+from perfbench.host import HostNoise
 
 
 def main() -> None:
@@ -185,24 +154,14 @@ def main() -> None:
     telemetry: dict[str, list[dict]] = {name: [] for name, _ in queries}
     for cycle in range(n_warm + n_timed):
         for name, fn in queries:
-            probe0 = _probe_mb_per_s()
-            steal0, total0 = _cpu_stat()
+            noise = HostNoise()
             t0 = time.perf_counter()
             fn()
             wall = round(time.perf_counter() - t0, 3)
-            steal1, total1 = _cpu_stat()
-            probe1 = _probe_mb_per_s()
+            host = noise.finish()
             if cycle >= n_warm:
                 walls[name].append(wall)
-                djiff = max(total1 - total0, 1)
-                telemetry[name].append(
-                    {
-                        "wall": wall,
-                        "steal_pct": round(100.0 * (steal1 - steal0) / djiff, 2),
-                        "probe_mb_s_before": probe0,
-                        "probe_mb_s_after": probe1,
-                    }
-                )
+                telemetry[name].append({"wall": wall, **host})
 
     medians = {name: round(statistics.median(w), 3) for name, w in walls.items()}
     mins = {name: round(min(w), 3) for name, w in walls.items()}

@@ -91,8 +91,7 @@ def code_segments(pdf, k: int):
     gather. No per-document Python: for a many-tiny-docs corpus the
     old per-doc loop paid ~15 interpreter ops + several small-array
     numpy dispatches per document, which dominated the actual O(|text|
-    ·k) arithmetic (tools/text_kernel_bench.py measures the win at 1M
-    short docs)."""
+    ·k) arithmetic."""
     import numpy as np
     import pyarrow as pa
 
@@ -147,8 +146,8 @@ def code_segments(pdf, k: int):
 
 def _code_segments_perdoc(pdf, k: int):
     """Per-document-loop reference for :func:`code_segments` — kept for
-    the equivalence property test and tools/text_kernel_bench.py's
-    before/after row; NOT used by any operator."""
+    the equivalence tests (``test_text.py``, ``test_property.py``); NOT
+    used by any operator."""
     import numpy as np
 
     ids, codes_list, lens = [], [], []

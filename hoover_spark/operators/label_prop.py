@@ -49,10 +49,11 @@ def mode_label_propagation(
 
     edges = graph.sym_edges()
     # held hash-partitioned by vid, like the messages below: a round
-    # shuffles only its messages (see ``IterationLoop.hold``)
+    # shuffles only its messages (see ``IterationLoop.hold``); least(vid,
+    # vid), not an alias, or the checkpoint reports hash(label)
     labels = loop.hold(
         graph.vertices()
-        .select(F.col("vid"), F.col("vid").alias("label"))
+        .select("vid", F.least("vid", "vid").alias("label"))
         .repartition(graph.num_partitions, "vid"),
         keep_partitioning=True,
     )

@@ -134,9 +134,8 @@ def wcc(
             )
             labels = seed.unionByName(missing)
         else:
-            labels = graph.vertices().select(
-                F.col("vid"), F.col("vid").alias("label")
-            )
+            # least(vid, vid), not an alias, so the held state keeps hash(vid)
+            labels = graph.vertices().select("vid", F.least("vid", "vid").alias("label"))
     labels, it, stats = hash_min_rounds(
         edge_views,
         labels,

@@ -47,44 +47,34 @@ def main():
     repos = repos_table(spark, 20_000)
     sections.append(("edge_extraction (ref_edges)", plan_of(ref_edges(repos))))
 
-    # 2. one PageRank-style iteration: edges ⋈ ranks → groupBy(dst).sum
+    # persisted edges and their vertices, read by the graph sections below
     edges = ref_edges(repos).repartition(16, "src").persist()
     edges.count()
     verts = Graph(edges).vertices()
-    ranks = verts.select("vid", F.lit(1.0).alias("rank"))
-    deg = edges.groupBy(F.col("src").alias("vid")).agg(F.count(F.lit(1)).alias("od"))
-    contribs = edges.join(
-        ranks.join(deg, on="vid").select(
-            F.col("vid").alias("src"), (F.col("rank") / F.col("od")).alias("w")
-        ),
-        on="src",
-    )
-    sums = contribs.groupBy("dst").agg(F.sum("w").alias("in_sum"))
-    sections.append(("pagerank_iteration (join + sum agg)", plan_of(sums)))
 
-    # 3. filter/projection pushdown on a parquet scan
+    # 2. filter/projection pushdown on a parquet scan
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     pushed = docs.where(F.col("lang") == "en").select("doc_id", "n_chars")
     sections.append(("parquet pushdown (filter+prune)", plan_of(pushed)))
 
-    # 4. triangle orientation (degree join) + wedge join
+    # 3. triangle orientation (degree join) + wedge join
     g = Graph(edges)
     sections.append(("oriented_edges (degree rank)", plan_of(oriented_edges(g))))
 
-    # 5. minhash signatures — r4 fused Arrow kernel: ONE MapInPandas
+    # 4. minhash signatures — r4 fused Arrow kernel: ONE MapInPandas
     # over the pruned (id, text) scan, zero exchanges (the shingle
     # rows never exist JVM-side; minima are segmented numpy reductions
     # inside the kernel)
     sections.append(("minhash_signatures", plan_of(minhash_signatures(docs, "doc_id", "text"))))
 
-    # 6. cosine top-k (broadcast of the query side)
+    # 5. cosine top-k (broadcast of the query side)
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     queries = emb.where(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     sections.append(("cosine_topk (broadcast queries)", plan_of(cosine_topk(emb, queries))))
 
-    # 7. GCN neighborhood aggregation — must NOT materialize whole
+    # 6. GCN neighborhood aggregation — must NOT materialize whole
     # neighborhoods per row (no ObjectHashAggregate/collect_list in the
     # message-sum path; posexplode → partial/final SUM per (vid, pos))
     from hoover_spark.operators.gcn import aggregate_features
@@ -94,13 +84,13 @@ def main():
     )
     sections.append(("gcn_aggregate (posexplode partial/final sum)", plan_of(aggregate_features(g, feats))))
 
-    # 8. IVF list assignment — argmax-sim via max_by partial/final agg
+    # 7. IVF list assignment — argmax-sim via max_by partial/final agg
     # (no row_number window over |corpus| x n_lists rows)
     from hoover_spark.operators.similarity import ivf_topk
 
     sections.append(("ivf_topk (max_by assignment, broadcast centroids)", plan_of(ivf_topk(emb, queries))))
 
-    # 9. corpus_curate decision join — per-row feature projections share
+    # 8. corpus_curate decision join — per-row feature projections share
     # one pruned documents scan; only light id-keyed columns shuffle
     # (the WCC clustering inside runs eagerly and lands as a
     # checkpointed labels table in this plan)
@@ -108,7 +98,7 @@ def main():
 
     sections.append(("corpus_curate (decision join over id-keyed features)", plan_of(curate_corpus(docs))))
 
-    # 10. pas per-timestep plans — the two cross-graph couplings: the
+    # 9. pas per-timestep plans — the two cross-graph couplings: the
     # agent census groupBy (agents→patches) and the λ_h join
     # (patches→agents); state inputs are localCheckpointed like inside
     # pas_simulate, so these are exactly the per-step runtime plans
@@ -135,7 +125,7 @@ def main():
          plan_of(paso.agent_step(agents, patches, 1, 8)))
     )
 
-    # 11. nbody per-timestep plan — grid-pruned 3x3 cell join + sorted
+    # 10. nbody per-timestep plan — grid-pruned 3x3 cell join + sorted
     # force fold (no all-pairs, no UDF)
     from hoover_spark.operators import nbody as nb
 
@@ -156,7 +146,7 @@ def main():
          plan_of(nb.nbody_step(st0)))
     )
 
-    # 12. wcc multi-level contraction seed (round 1's plan prefix) —
+    # 11. wcc multi-level contraction seed (round 1's plan prefix) —
     # the whole pyramid must be lazy (no Exchange on the persisted sym
     # edge side beyond the per-level mapping repartitions; mapInPandas
     # = ArrowEvalPython over pre-partitioned blocks, zero per-row
@@ -169,7 +159,7 @@ def main():
          plan_of(multi_contract(sym, 16)))
     )
 
-    # 13. r5 link kernels — one representative round each. kcore/ktruss
+    # 12. r5 link kernels — one representative round each. kcore/ktruss
     # peel rounds and the hits/personalized-pagerank iterations must
     # stay one-shuffle-per-gather shapes over the persisted edge side
     # (no Exchange on the cached big side; per-vertex sides
@@ -196,7 +186,7 @@ def main():
          plan_of(tf_idf_top_terms(docs, "doc_id", "text")))
     )
 
-    # 14. r5 graph/corpus metrics — clustering coefficient must reuse
+    # 13. r5 graph/corpus metrics — clustering coefficient must reuse
     # the triangle wedge-join shape plus ONE O(|V|) join; assortativity
     # is one pass over the edges (two degree joins + a single global
     # agg with map-side partials — no window, no iteration);
@@ -219,7 +209,7 @@ def main():
          plan_of(dup_shingle_stats(docs, "doc_id", "text", k=9)))
     )
 
-    # 15. r5b path/link-prediction + corpus-gate ops — BFS rounds must
+    # 14. r5b path/link-prediction + corpus-gate ops — BFS rounds must
     # touch only frontier-adjacent edges (join frontier→sym, anti-join
     # visited); link_predict is ONE wedge self-join + agg + anti-join;
     # decontaminate's benchmark side must broadcast so the corpus pass
@@ -256,7 +246,7 @@ def main():
          plan_of(segment_repetition(docs, "doc_id", "text")))
     )
 
-    # 16. r5c path/centrality wave — walks: each step must be a
+    # 15. r5c path/centrality wave — walks: each step must be a
     # frontier-sized probe of the indexed adjacency (never O(|E|));
     # betweenness forward round: one edge join + (s,vid) agg;
     # harmonic/anf: the pair materialization is the documented small-h
@@ -297,39 +287,16 @@ def main():
          plan_of(snapshot_diff(edges.limit(100000), edges)))
     )
 
-    # 17. r5d directed kernels — an scc inner round is one message-min
-    # join + relax join + jump self-join (Catalyst reuses the relaxed
-    # subplan's exchange); an sssp round joins only the improved
+    # 16. r5d directed kernels — an sssp round joins only the improved
     # frontier against the persisted edge table, then min-combines.
     from hoover_spark.operators.paths import sssp
 
-    color = verts.select("vid", F.col("vid").alias("color"))
-    msgs = (
-        g.clean_edges()
-        .join(color.select(F.col("vid").alias("src"), "color"), on="src")
-        .groupBy(F.col("dst").alias("vid"))
-        .agg(F.min("color").alias("mc"))
-    )
-    relaxed = color.join(msgs, on="vid", how="left").select(
-        "vid",
-        F.col("color").alias("prev"),
-        F.least("color", F.coalesce("mc", "color")).alias("c1"),
-    )
-    scc_round = relaxed.join(
-        relaxed.select(F.col("vid").alias("c1"), F.col("c1").alias("cc")),
-        on="c1",
-        how="left",
-    ).select("vid", F.least("c1", F.coalesce("cc", "c1")).alias("color"))
-    sections.append(
-        ("scc inner round (relax + jump self-join, exchange reuse)",
-         plan_of(scc_round))
-    )
     sections.append(
         ("sssp (frontier relax rounds, min-combine)",
          plan_of(sssp(g, verts.where(F.col("vid") % 500 == 0), max_rounds=2)))
     )
 
-    # 18. r5e independence kernels — a mis/coloring round is two
+    # 17. r5e independence kernels — a mis/coloring round is two
     # frontier joins against the persisted symmetric table + one
     # struct-min groupBy; matching's round is an endpoint-exploded
     # struct-min agg joined back twice; jaccard is the oriented
@@ -355,7 +322,7 @@ def main():
          plan_of(edge_jaccard(g)))
     )
 
-    # 19. r5f clustering/community wave — kmeans assignment must be a
+    # 18. r5f clustering/community wave — kmeans assignment must be a
     # map-only broadcast nested loop over k centroids (no shuffle of
     # the vector side); its update combines posexplode rows map-side
     # (HashAggregate x2 on (cluster, pos)); semantic_dedup's pair join
@@ -390,7 +357,7 @@ def main():
          plan_of(degree_quantiles(g)))
     )
 
-    # 20. r5g centrality/rarity/co-occurrence — katz & weighted
+    # 19. r5g centrality/rarity/co-occurrence — katz & weighted
     # pagerank rounds must match the pagerank shape (one src join, one
     # dst-keyed partial/final sum, left join back; weight normalization
     # folded into the edge side ONCE); token_rarity is explode →
@@ -445,15 +412,14 @@ def main():
                 "Review notes (what the checks mean / artifacts to ignore):\n\n"
                 "- `codegen_ops = 0` on a not-yet-executed `AdaptiveSparkPlan` is an\n"
                 "  explain artifact — AQE prints `[codegen id]` only for materialized\n"
-                "  query stages. Plans over cached inputs (pagerank, oriented_edges)\n"
-                "  show the real codegen spans (13 ops each).\n"
+                "  query stages. Plans over cached inputs (oriented_edges) show\n"
+                "  the real codegen spans.\n"
                 "- `exchanges` counts every `Exchange` *string* in the dump, which\n"
                 "  includes the repeated `== Initial Plan ==` trees and the cached\n"
                 "  relation's stored build plan. The runtime structure is what\n"
-                "  matters: e.g. the pagerank iteration is InMemoryTableScan(edges)\n"
-                "  → BroadcastHashJoin(rank/deg side) → partial HashAggregate →\n"
-                "  single Exchange → final HashAggregate — one shuffle per\n"
-                "  iteration, edges never re-shuffled.\n"
+                "  matters. The round plans of pagerank, wcc and mode-LP are\n"
+                "  pinned by `tests/test_iteration.py` and reported per round by\n"
+                "  `tools/round_table.py`, not dumped here.\n"
                 "- cosine_topk uses a keyless (cartesian) join by construction, so\n"
                 "  the broadcast shows up as BroadcastNestedLoopJoin, not BHJ.\n"
                 "- edge_extraction reads `spark.range` (generated source), hence no\n"
@@ -505,11 +471,11 @@ def main():
                 "  the per-vertex score side → partial/final HashAggregate — the\n"
                 "  pagerank shape; the L2 norm is a 1-row aggregate crossJoined\n"
                 "  back (BroadcastNestedLoopJoin of one row), never collected.\n"
-                "- kcore / ppr: the dumped result plans collapse to a scan of the\n"
-                "  fixpoint's localCheckpointed RDD (exchanges: 0 is the artifact\n"
-                "  of dumping AFTER convergence); the per-round shape is the\n"
-                "  ktruss/pagerank family above — alive/state side joins the\n"
-                "  persisted edge side, one Exchange per gather.\n"
+                "- kcore / pagerank with seeds: the dumped result plans collapse\n"
+                "  to a scan of the last round's localCheckpointed RDD (exchanges:\n"
+                "  0 is the artifact of dumping AFTER the rounds); per round the\n"
+                "  alive/state side joins the persisted edge side, one Exchange\n"
+                "  per gather.\n"
                 "- ktruss support round: degree rank join → oriented wedge\n"
                 "  self-join → closing left_semi → 3-way corner union →\n"
                 "  partial/final count per canonical edge. The high `exchanges`\n"
