@@ -207,10 +207,11 @@ def q_wcc_components(spark, sf_dir):
 
 
 def q_wcc_two_phase(spark, sf_dir):
-    """WCC seeded by the per-partition union-find contraction (phase
-    one) before the hash-min rounds (phase two)."""
+    """WCC in its two phases: hash-min rounds (phase one) until the next
+    round's messages fit on the driver, then the driver union-find over
+    their label pairs (phase two)."""
     g = Graph(_customer_edges(spark, sf_dir))
-    return wcc(g, pre_contract=True).select("vid", "label")
+    return wcc(g).select("vid", "label")
 
 
 def q_wcc_sizes(spark, sf_dir):

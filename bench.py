@@ -122,14 +122,14 @@ def main() -> None:
         extras["pagerank_iters"] = len(loop.metrics)
 
     def q_wcc():
-        # cold-graph recipe: 3-level iterated star contraction seed
-        # (all lazy, inside round 1's plan) + hash-min with the
-        # default adaptive pointer jumping. On repos_table(300000)
-        # (450,775 edges, 4 vCPU): 5 rounds and 28.5 s median, vs
-        # 29.5 s with the jump pinned on every round (also 5 rounds)
-        # and 39.6 s / 21 rounds without contraction.
+        # hash-min rounds until the next round's messages fit on the
+        # driver, then one driver union-find round. On
+        # repos_table(300000) (901,550 symmetric edges, 16 partitions,
+        # local[4]): round 1 + finish over 273,766 label pairs, 4.6 s
+        # median, vs 17.4 s / 21 rounds without the finish and 15.4 s /
+        # 5 rounds seeded by a 3-level star contraction.
         loop = IterationLoop(spark, kernel="wcc", max_iterations=100)
-        wcc(state["graph"], loop=loop, pre_contract=True).count()
+        wcc(state["graph"], loop=loop).count()
         extras["wcc_iters"] = len(loop.metrics)
 
     def q_triangles():

@@ -407,7 +407,7 @@ def louvain_levels(
             )
             mapping = loop.hold(mapping)
     # vertices whose only incidence is a self-loop never reach
-    # sym_edges (same guard as wcc's pre_contract): singleton community
+    # sym_edges: singleton community
     loners = (
         graph.vertices()
         .join(mapping.select("vid"), on="vid", how="left_anti")

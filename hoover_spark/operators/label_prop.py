@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from hoover_spark.operators.graph import Graph
-from hoover_spark.operators.wcc import wcc
+from hoover_spark.operators.wcc import hash_min_rounds
 from hoover_spark.plans.iteration import IterationLoop
 
 
@@ -31,11 +31,20 @@ def min_label_propagation(
     loop: IterationLoop | None = None,
 ) -> DataFrame:
     """Exactly ``n_iterations`` synchronous min-label rounds — the
-    reference's per-iteration semantics (no shortcutting)."""
+    reference's per-iteration semantics (no shortcutting, no driver
+    finish), stopping early only once the labels converged."""
     spark = graph.edges.sparkSession
     loop = loop or IterationLoop(spark, kernel="min_lp", max_iterations=n_iterations)
-    loop.max_iterations = n_iterations
-    return wcc(graph, pointer_jumping=False, loop=loop)
+    labels, it, _ = hash_min_rounds(
+        graph.sym_edge_views(),
+        # least(vid, vid), not an alias, so the held state keeps hash(vid)
+        graph.vertices().select("vid", F.least("vid", "vid").alias("label")),
+        loop,
+        graph.num_partitions,
+        rounds=n_iterations,
+        pointer_jumping=False,
+    )
+    return loop.finish(labels.select("vid", "label"), it)
 
 
 def mode_label_propagation(

@@ -46,6 +46,7 @@ import os
 import re
 import time
 from collections.abc import Callable, Sequence
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -159,13 +160,10 @@ class IterationLoop:
         records on job start (``tools/round_table.py`` rolls them up);
         both are cleared after the round.
         """
-        sc = self.spark.sparkContext
         it = start
         t0 = time.perf_counter()
         for it in range(start + 1, start + rounds + 1):
-            sc.setLocalProperty("hoover.kernel", self.kernel)
-            sc.setLocalProperty("hoover.iter", str(it))
-            try:
+            with self.tagged(it):
                 df, exprs = step(state, it, stats)
                 held, new_stats = self.hold_observed(
                     df, *exprs, keep_partitioning=keep_partitioning
@@ -175,12 +173,23 @@ class IterationLoop:
                 self.log(it, shuffled, delta, frontier, (t1 - t0) * 1000.0)
                 t0 = t1
                 state, stats = self.save_state(held, it), new_stats
-            finally:
-                sc.setLocalProperty("hoover.kernel", None)
-                sc.setLocalProperty("hoover.iter", None)
             if done:
                 break
         return state, it, stats
+
+    @contextmanager
+    def tagged(self, it: int):
+        """Set the local properties ``hoover.kernel`` and ``hoover.iter``
+        on the Spark jobs submitted inside, as :meth:`run` does for each
+        round's, and clear both after."""
+        sc = self.spark.sparkContext
+        sc.setLocalProperty("hoover.kernel", self.kernel)
+        sc.setLocalProperty("hoover.iter", str(it))
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("hoover.kernel", None)
+            sc.setLocalProperty("hoover.iter", None)
 
     def _kernel_dir(self) -> str | None:
         if not self.checkpoint_dir:

@@ -12,9 +12,10 @@ directory → ``foreachBatch``:
 1. append the micro-batch to the durable edge store (parquet; the
    Iceberg-ready seam is :mod:`hoover_spark.sources.io`),
 2. re-converge from the previous converged state: ``wcc`` relabels
-   whole components by a driver-side union-find over the fresh edges'
-   endpoint labels (insert-only edges merge components, never split
-   one); ``sssp`` and ``pagerank`` warm-start their rounds, ``sssp``
+   whole components by the driver-side union-find and broadcast
+   relabel that finish its cold start, over the fresh edges' endpoint
+   labels (insert-only edges merge components, never split one);
+   ``sssp`` and ``pagerank`` warm-start their rounds, ``sssp``
    from the fresh edges' sources only (the reference's
    ``mark_for_processing`` on edge insert); ``triangles`` adds the
    batch's Δ,
@@ -43,8 +44,9 @@ accumulated delta crosses ``COMPACT_DELTA_FRAC`` of the base (and at
 least ``COMPACT_FLOOR`` rows), one amortized rebuild folds it in
 (reference analogue: ``update_edge_info`` touches only mutated
 adjacency rows, ``src/hoover.cpp:450-600``). ``wcc`` reads the view
-only for its cold start and then releases it: its warm batches read
-the state alone, so a resumed ``wcc`` stream never builds a base.
+only for its cold start (hash-min rounds, then the union-find finish)
+and then releases it: its warm batches read the state alone, so a
+resumed ``wcc`` stream never builds a base.
 
 A warm batch starts no Python worker and makes no per-value JVM call:
 every frame it builds on the driver (``wcc``'s relabel map and new
@@ -113,6 +115,7 @@ fresh edges improve nothing skips the write entirely.
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import shutil
@@ -128,7 +131,7 @@ from hoover_spark.operators.graph import EDGE_SCHEMA, DeltaGraph, Graph
 from hoover_spark.operators.pagerank import pagerank
 from hoover_spark.operators.paths import sssp
 from hoover_spark.operators.triangles import triangle_delta
-from hoover_spark.operators.wcc import min_label_roots, wcc
+from hoover_spark.operators.wcc import min_label_roots, relabel, wcc
 from hoover_spark.plans.iteration import IterationLoop
 
 KERNELS = ("wcc", "pagerank", "sssp", "triangles")
@@ -162,6 +165,11 @@ class IncrementalGraphState:
     ) -> None:
         if kernel not in KERNELS:
             raise ValueError(f"unknown kernel {kernel!r}: expected one of {KERNELS}")
+        if kernel == "wcc":
+            # refused before the work dir exists, not at the cold start
+            unknown = sorted(set(kernel_kwargs or {}) - set(inspect.signature(wcc).parameters))
+            if unknown:
+                raise ValueError(f"wcc() takes no parameter {unknown}")
         self.spark = spark
         self.work_dir = work_dir
         self.kernel = kernel
@@ -624,15 +632,7 @@ class IncrementalGraphState:
         # Arrow only when it is non-empty (an empty one takes the
         # pickled-row path, a stage that starts Python workers)
         if moved.any():
-            relabel = self.spark.createDataFrame(
-                pd.DataFrame({"label": labels[moved], "new_label": roots[moved]}),
-                "label long, new_label long",
-            )
-            held = self._state.join(F.broadcast(relabel), on="label", how="left").select(
-                "vid",
-                F.coalesce("new_label", "label").alias("label"),
-                F.col("new_label").isNotNull().alias("_chg"),
-            )
+            held = relabel(self._state, labels[moved], roots[moved])
         else:
             held = self._state.select("vid", "label", F.lit(False).alias("_chg"))
         if new.any():

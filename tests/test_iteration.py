@@ -14,22 +14,22 @@ from hoover_spark.operators.centrality import weighted_pagerank
 from hoover_spark.operators.clustering import kmeans_assign
 from hoover_spark.operators.communities import louvain_move
 from hoover_spark.operators.graph import Graph
-from hoover_spark.operators.label_prop import mode_label_propagation
+from hoover_spark.operators.label_prop import min_label_propagation, mode_label_propagation
 from hoover_spark.operators.pagerank import pagerank
-from hoover_spark.operators.wcc import wcc
 from hoover_spark.plans.iteration import IterationLoop
 from hoover_spark.sources.synthetic import cycle_graph, path_graph, rmat_graph
 
 # Jobs per round after round 1 on rmat_graph(scale=7), 8 shuffle
 # partitions: the hold runs with AQE off, so a round's shuffle-map
-# stages and the eager checkpoint's result stage are one job. WCC pins
-# pointer_jumping=False: the adaptive jump adds a self-join only in the
-# rounds where it is switched on.
+# stages and the eager checkpoint's result stage are one job. The "wcc"
+# case runs WCC's hash-min rounds as min-LP does, to convergence: no
+# adaptive jump (a self-join in the rounds where it is switched on) and
+# no driver finish.
 JOBS_PER_ROUND = {"pagerank": 1, "wcc": 1, "mode_lp": 1}
 
 KERNELS = {
     "pagerank": lambda g, loop: pagerank(g, loop=loop),
-    "wcc": lambda g, loop: wcc(g, loop=loop, pointer_jumping=False),
+    "wcc": lambda g, loop: min_label_propagation(g, n_iterations=100, loop=loop),
     "mode_lp": lambda g, loop: mode_label_propagation(g, n_iterations=10, loop=loop),
 }
 

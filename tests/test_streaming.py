@@ -576,23 +576,18 @@ def test_sssp_state_write_o_changed_and_resume(spark, tmp_path):
     assert dist1 == want
 
 
-def test_wcc_stream_pre_contract_kwargs(spark, tmp_path):
-    """kernel_kwargs may carry pre_contract: contraction seeds the cold
-    start's hash-min, the warm batches relabel by union-find, and the
-    stream still equals a batch run."""
-    g = rmat_graph(spark, scale=6, edge_factor=4)
-    drops = str(tmp_path / "drops")
-    os.makedirs(drops)
-    _write_drops(spark, g, drops, k=3)
+def test_wcc_stream_rejects_retired_kwargs(spark, tmp_path):
+    """kernel_kwargs naming a switch wcc() no longer takes is refused
+    when the state is built, before its work dir exists."""
+    import pytest
 
-    state = run_stream(
-        spark, drops, str(tmp_path / "work"), kernel="wcc", num_partitions=8,
-        kernel_kwargs={"pre_contract": True},
-    )
-    assert state.batches_applied == 3
-    got = {r["vid"]: r["label"] for r in state.state().collect()}
-    want = {r["vid"]: r["label"] for r in wcc(g).collect()}
-    assert got == want
+    from hoover_spark.streaming.ingest import IncrementalGraphState
+
+    for kw in ({"pre_contract": True}, {"pointer_jumping": False}):
+        work = tmp_path / "work"
+        with pytest.raises(ValueError, match=next(iter(kw))):
+            IncrementalGraphState(spark, str(work), kernel="wcc", kernel_kwargs=kw)
+        assert not work.exists()
 
 
 def test_wcc_stream_union_find_relabel(spark, tmp_path, monkeypatch):

@@ -1,6 +1,7 @@
 """WCC correctness vs union-find oracle (exact, per north rule)."""
 
-from hoover_spark.operators.wcc import wcc
+from hoover_spark.operators.label_prop import min_label_propagation
+from hoover_spark.operators.wcc import hash_min_rounds, wcc
 from hoover_spark.sources.synthetic import (
     cycle_graph,
     edges_to_pairs,
@@ -53,8 +54,8 @@ def test_rmat(spark):
 
 
 def test_long_path_converges_fast(spark):
-    """Pointer jumping: a 200-vertex path must converge in far fewer
-    than 200 iterations (O(log) rounds)."""
+    """The driver finish: a 200-vertex path must converge in far fewer
+    than 200 iterations (hash-min alone needs one per hop)."""
     from hoover_spark.plans.iteration import IterationLoop
 
     g = path_graph(spark, 200)
@@ -66,7 +67,7 @@ def test_long_path_converges_fast(spark):
 
 def test_no_pointer_jumping_matches(spark):
     g = two_cliques(spark, 4, bridge=True)
-    got = labels_of(wcc(g, pointer_jumping=False))
+    got = labels_of(min_label_propagation(g, n_iterations=100))
     assert got == union_find_components(edges_to_pairs(g))
 
 
@@ -125,29 +126,45 @@ def test_self_loop_only_vertex_survives_caching(spark):
     assert labels_of(wcc(g2)) == {0: 0, 1: 0, 2: 0, 7: 7}
 
 
+def hash_min_labels(g):
+    """Labels of :func:`hash_min_rounds` with the adaptive jump, run to
+    convergence from ``label = vid`` over ``g``'s symmetric edges (no
+    driver finish)."""
+    from pyspark.sql import functions as F
+
+    from hoover_spark.plans.iteration import IterationLoop
+
+    loop = IterationLoop(g.edges.sparkSession, kernel="wcc")
+    init = g.vertices().select("vid", F.col("vid").alias("label"))
+    labels, _, stats = hash_min_rounds(
+        g.sym_edge_views(), init, loop, g.num_partitions, rounds=100
+    )
+    assert int(stats["changed"] or 0) == 0
+    return labels_of(labels.select("vid", "label"))
+
+
 def test_adaptive_pointer_jumping_matches_pinned_modes(spark):
-    """The adaptive jump (True) must produce the exact labels on a long
-    chain (jump pays to the end; checked against the union-find oracle
-    rather than a 64-round no-jump run) and identical labels to the
-    no-jump mode (False) on a clique-ish graph (jump gain hits zero
-    early and the self-join is dropped)."""
+    """The adaptive jump must produce the exact labels on a long chain
+    (jump pays to the end; checked against the union-find oracle rather
+    than a 64-round no-jump run) and identical labels to the no-jump
+    rounds of min-LP on a clique-ish graph (jump gain hits zero early
+    and the self-join is dropped)."""
     chain = path_graph(spark, 65)
     want = union_find_components(edges_to_pairs(chain))
-    assert labels_of(wcc(chain, pointer_jumping=True)) == want
+    assert hash_min_labels(chain) == want
 
     cliques = two_cliques(spark, k=5, bridge=True)
-    want = labels_of(wcc(cliques, pointer_jumping=False))
-    assert labels_of(wcc(cliques, pointer_jumping=True)) == want
+    want = labels_of(min_label_propagation(cliques, n_iterations=100))
+    assert hash_min_labels(cliques) == want
 
 
-def test_pre_contract_seeding_matches_plain(spark):
-    """Seeding hash-min from the iterated per-partition union-find star
-    forest must converge to the identical labels as plain hash-min and
-    the union-find oracle (and in no more rounds; strictly fewer on the
-    hub-heavy RMAT-10 graph, where a high-degree vertex split across k
-    partitions carries k roots that one level-2 task merges at once) —
-    including a vertex whose only edge is a self-loop, which never
-    reaches the symmetric edge set the contraction sweeps."""
+def test_driver_finish_matches_rounds_only(spark, monkeypatch):
+    """Ending the hash-min rounds in the driver union-find must give the
+    identical labels as rounds only (``FINISH_PAIRS = -1``) and the
+    union-find oracle, in no more rounds (strictly fewer on the
+    hub-heavy RMAT-10 graph) — including a vertex whose only edge is a
+    self-loop, which never reaches the symmetric edge set."""
+    from hoover_spark.operators import wcc as wcc_module
     from hoover_spark.operators.graph import graph_from_pairs
     from hoover_spark.plans.iteration import IterationLoop
 
@@ -161,16 +178,17 @@ def test_pre_contract_seeding_matches_plain(spark):
         hub_heavy,
     )
     for g in graphs:
-        plain_loop = IterationLoop(g.edges.sparkSession, kernel="wcc")
-        seeded_loop = IterationLoop(g.edges.sparkSession, kernel="wcc")
-        plain = labels_of(wcc(g, loop=plain_loop))
-        seeded = labels_of(wcc(g, loop=seeded_loop, pre_contract=True))
+        finish_loop = IterationLoop(g.edges.sparkSession, kernel="wcc")
+        rounds_loop = IterationLoop(g.edges.sparkSession, kernel="wcc")
+        finished = labels_of(wcc(g, loop=finish_loop))
+        with monkeypatch.context() as m:
+            m.setattr(wcc_module, "FINISH_PAIRS", -1)
+            rounds_only = labels_of(wcc(g, loop=rounds_loop))
         # self-loop-only vertices are singleton components
         want = {r["vid"]: r["vid"] for r in g.vertices().collect()}
         want.update(union_find_components(edges_to_pairs(g)))
-        assert seeded == plain == want
+        assert finished == rounds_only == want
         if g is hub_heavy:
-            assert len(seeded_loop.metrics) < len(plain_loop.metrics)
+            assert len(finish_loop.metrics) < len(rounds_loop.metrics)
         else:
-            assert len(seeded_loop.metrics) <= len(plain_loop.metrics)
-
+            assert len(finish_loop.metrics) <= len(rounds_loop.metrics)

@@ -146,17 +146,20 @@ def main():
          plan_of(nb.nbody_step(st0)))
     )
 
-    # 11. wcc multi-level contraction seed (round 1's plan prefix) —
-    # the whole pyramid must be lazy (no Exchange on the persisted sym
-    # edge side beyond the per-level mapping repartitions; mapInPandas
-    # = ArrowEvalPython over pre-partitioned blocks, zero per-row
-    # Python rows)
-    from hoover_spark.operators.wcc import multi_contract
+    # 11. wcc's driver finish: the distinct label pairs of the next
+    # round's messages after round 1 (frontier ⋈ sym edges ⋈ state,
+    # small enough to collect)
+    from hoover_spark.operators.wcc import finish_pairs, hash_min_rounds
+    from hoover_spark.plans.iteration import IterationLoop
 
     sym = Graph(edges).sym_edge_views()
+    round1, _, _ = hash_min_rounds(
+        sym, verts.select("vid", F.col("vid").alias("label")),
+        IterationLoop(spark, kernel="wcc"), 16, rounds=1,
+    )
     sections.append(
-        ("wcc_seed (3-level iterated star contraction)",
-         plan_of(multi_contract(sym, 16)))
+        ("wcc_finish_pairs (round-1 frontier messages → label pairs)",
+         plan_of(finish_pairs(sym, round1)))
     )
 
     # 12. r5 link kernels — one representative round each. kcore/ktruss
